@@ -105,15 +105,6 @@ def get_proximity(county: str | None, address: str | None) -> tuple[float, float
     return COUNTY_CENTROIDS.get(get_expected_county(county, address))
 
 
-def county_centroids_df(spark) -> DataFrame:
-    """The centroid dimension as a 44-row DataFrame (both spellings) —
-    broadcast-join it wherever a plan needs proximity/fallback coords."""
-    return spark.createDataFrame(
-        [(k, v[0], v[1]) for k, v in COUNTY_CENTROIDS.items()],
-        "county string, centroid_lat double, centroid_lng double",
-    )
-
-
 # ---------------------------------------------------------------------------
 # Resolver protocol + deterministic stub (E1/E2 physical plug-in point)
 # ---------------------------------------------------------------------------

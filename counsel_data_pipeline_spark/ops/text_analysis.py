@@ -43,13 +43,6 @@ def punct_ratio(c: Column) -> Column:
     return char_class_count(c, r"[\p{Punct}]") / F.length(c)
 
 
-def avg_token_len(c: Column) -> Column:
-    t = tokens(c)
-    return F.aggregate(
-        F.transform(t, F.length), F.lit(0), lambda a, x: a + x
-    ).cast("double") / F.size(t)
-
-
 def quality_score(c: Column) -> Column:
     """Composite [0,1] quality heuristic: penalize very short docs, very
     high stopword density, and punctuation-heavy text. Pure arithmetic on

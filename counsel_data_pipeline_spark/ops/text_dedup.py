@@ -362,8 +362,9 @@ def jaccard_prefix_pairs(
     Same result set as ``jaccard_pairs(..., max_shingle_df=None)`` with
     threshold t = t_num/t_den, but the candidate join touches only each
     document's PREFIX: order every document's shingles by ascending
-    corpus document-frequency (rarest first; ties broken by the shingle
-    string so the global order is total and shared by all documents) and
+    corpus document-frequency (rarest first; ties broken by the shingle's
+    8-byte key ``h`` so the global order is total and shared by all
+    documents — see ``_df_ranked_shingles``) and
     keep the first |x| - ceil(t*|x|) + 1. Completeness: if J(x,y) >= t
     then the common shingles number o >= ceil(t*|x|), while x's suffix
     holds only ceil(t*|x|) - 1 positions — so the globally-smallest

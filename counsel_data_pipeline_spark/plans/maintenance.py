@@ -418,7 +418,10 @@ def zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         eager=False,
     )
-    box = joint.agg(F.sum("n_box").cast("bigint").alias("rows_in_box"))
+    # sum() over no non-NULL n_box is NULL; the oracle's count(*) is 0
+    box = joint.agg(
+        F.coalesce(F.sum("n_box"), F.lit(0)).cast("bigint").alias("rows_in_box")
+    )
     stacked = joint.select(
         F.lit("zorder").alias("layout"), F.col("shard_z").alias("shard"),
         "min_p", "max_p", "min_s", "max_s", "p_lo", "p_hi", "s_lo", "s_hi",
@@ -446,7 +449,8 @@ def zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         zones.groupBy("layout")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_shards"),
-            F.sum(touched.cast("int")).cast("bigint").alias("shards_touched"),
+            F.coalesce(F.sum(touched.cast("int")), F.lit(0))
+            .cast("bigint").alias("shards_touched"),
         )
         .crossJoin(F.broadcast(box))
     )

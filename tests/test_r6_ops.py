@@ -115,6 +115,31 @@ def test_zorder_prunes_at_least_as_well_on_2d_box(spark):
     assert 0 < z.shards_touched <= z.n_shards
 
 
+@pytest.mark.parametrize("variant", ["empty", "null_keys"])
+def test_zorder_degenerate_lineitem_matches_oracle(spark, tmp_path, variant):
+    """An empty lineitem, and one whose key columns are all NULL: the
+    counts are 0 where the oracle counts nothing, never NULL."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from counsel_data_pipeline_spark.catalog import all_queries
+
+    n = 0 if variant == "empty" else 5
+    keys = pa.nulls(n, pa.int64())
+    pq.write_table(
+        pa.table({"l_orderkey": pa.array(range(n), pa.int64()), "l_partkey": keys, "l_suppkey": keys}),
+        tmp_path / "lineitem.parquet",
+    )
+    q = all_queries()["layout_zorder_pruning"]
+    got = sorted(map(tuple, q.fn(spark, str(tmp_path)).collect()))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM read_parquet('{tmp_path}/lineitem.parquet')")
+    assert got == sorted(con.execute(q.oracle).fetchall())
+    if variant == "null_keys":
+        assert got == [("partkey_sort", 1, 0, 0), ("zorder", 1, 0, 0)]
+
+
 # ---------------------------------------------------------------------------
 # graph_pagerank_copurchase
 # ---------------------------------------------------------------------------

@@ -62,13 +62,18 @@ def main() -> None:
     p.add_argument(
         "--tables",
         default="lineitem,orders,documents,embeddings",
-        help="tables to replicate K x; everything else is copied 1x",
+        help="tables to replicate K x (customer follows orders); "
+        "everything else is copied 1x",
     )
     args = p.parse_args()
     spark = get_spark("scale-synth")
     os.makedirs(args.out, exist_ok=True)
 
     replicate = set(args.tables.split(","))
+    if "orders" in replicate:
+        # replica i shifts o_custkey by i * STRIDE; the customers it points
+        # at must exist, so customer is replicated with the same shift
+        replicate.add("customer")
     all_tables = [
         os.path.basename(f)[: -len(".parquet")]
         for f in sorted(os.listdir(args.sf))
