@@ -42,13 +42,13 @@ environment variable, default ``local``):
     k-means states, whose logical plans would otherwise nest per
     iteration) are upgraded to ``reliable`` checkpoints automatically.
 
-Measured mode cost (``tools/pin_mode_scale_race.py``, the pin-heaviest
-query — PageRank's three loop-pinned iterations — at sf0.1 and on a 10×
-disjoint-copy graph, results asserted identical across modes): reliable
-0.98× and persist 0.94× of local at 10×. On one box the choice is free
-— pinned frames are node-sized summaries, never the fact stream; on a
-real cluster ``reliable`` additionally pays one shared-storage
-round-trip per pinned frame on exactly that small volume.
+Measured mode cost (SCALE.md, "Round-13 pin-MODE overhead at 10×"; the
+pin-heaviest query — PageRank's three loop-pinned iterations — at sf0.1
+and on a 10× disjoint-copy graph, results asserted identical across
+modes): reliable 0.98× and persist 0.94× of local at 10×. On one box
+the choice is free — pinned frames are node-sized summaries, never the
+fact stream; on a real cluster ``reliable`` additionally pays one
+shared-storage round-trip per pinned frame on exactly that small volume.
 
 Eagerness is per call site, not per mode:
 

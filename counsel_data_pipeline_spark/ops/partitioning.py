@@ -8,6 +8,10 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 
+# Codecs Hadoop cannot split (``.bz2`` can; ``.snappy.parquet`` ends in
+# ``.parquet``): such a file is ONE input split however large it is.
+_UNSPLITTABLE_EXT = (".gz", ".deflate", ".snappy", ".lz4", ".zst")
+
 _BYTE_SUFFIX = {
     "b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20, "mb": 1 << 20,
     "g": 1 << 30, "gb": 1 << 30, "t": 1 << 40, "tb": 1 << 40,
@@ -34,8 +38,10 @@ def _estimated_scan_partitions(df: DataFrame) -> int | None:
 
     Returns None when the estimate is unavailable: no file sources in
     the plan (in-memory test frames), or files whose size cannot be
-    stat'ed locally (remote object-store URIs). Driver-side cost is one
-    py4j listing call over the scan's already-cached FileIndex — unlike
+    stat'ed locally (remote object-store URIs). Capped at the file count
+    when any input is non-splittable (one 1 GB ``.json.gz`` is one task,
+    not eight). Driver-side cost is one py4j listing call over the
+    scan's already-cached FileIndex — unlike
     ``df.rdd.getNumPartitions()`` it never converts the plan to a
     Python RDD (which forced a full physical planning pass per call and
     spoiled the executed-plan cache)."""
@@ -45,13 +51,15 @@ def _estimated_scan_partitions(df: DataFrame) -> int | None:
         return None
     if not files:
         return None
-    sizes = []
+    sizes, unsplittable = [], False
     for uri in files:
         parsed = urlparse(uri)
         if parsed.scheme not in ("", "file"):
             return None
+        path = unquote(parsed.path)
+        unsplittable |= path.lower().endswith(_UNSPLITTABLE_EXT)
         try:
-            sizes.append(os.path.getsize(unquote(parsed.path)))
+            sizes.append(os.path.getsize(path))
         except OSError:
             return None
     conf = df.sparkSession.conf
@@ -68,7 +76,8 @@ def _estimated_scan_partitions(df: DataFrame) -> int | None:
     total = sum(sizes) + len(sizes) * open_cost
     bytes_per_core = total / max(cores, 1)
     max_split = min(max_pb, max(open_cost, int(bytes_per_core)))
-    return max(1, math.ceil(total / max(max_split, 1)))
+    est = max(1, math.ceil(total / max(max_split, 1)))
+    return min(est, len(files)) if unsplittable else est
 
 
 def spread(df: DataFrame) -> DataFrame:

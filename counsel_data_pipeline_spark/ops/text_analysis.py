@@ -202,10 +202,11 @@ def bpe_pair_counts(words) -> "DataFrame":
     one row per character of the CORPUS; this form one per character of
     the *vocabulary* — exact same counts by distributivity of the sum,
     measured ~2-3x faster at 10x replicated occurrences
-    (tools/bpe_scale_race.py; both forms' post-combine shuffles are
-    pair-domain-bounded, the win is the explode+hash work). Overlapping pairs inside a
-    word count once per position per occurrence, the BPE definition
-    ("aaa" contributes "aa" twice per occurrence).
+    (SCALE.md, "Round-12 BPE merge-candidate counting"; both forms'
+    post-combine shuffles are pair-domain-bounded, the win is the
+    explode+hash work). Overlapping pairs inside a word count once per
+    position per occurrence, the BPE definition ("aaa" contributes "aa"
+    twice per occurrence).
 
     Returns (pair, n_occurrences, n_words): total weighted occurrences
     and the number of distinct vocabulary words containing the pair.
@@ -529,7 +530,7 @@ def bpe_train_incremental(
     fold is exact by construction, and the arg-max never sees a dead
     pair because zero totals are dropped at the fold.
 
-    Scale (measured, `tools/bpe_incremental_scale_race.py` — tables
+    Scale (measured, SCALE.md "Round-13 full BPE trainer" — tables
     asserted equal at 30k and 300k-word vocabularies, and across
     pin_every ∈ {1, 4, 10}): the per-merge aggregate's input drops to
     the affected-word fraction — 8.2% of the sequential form's

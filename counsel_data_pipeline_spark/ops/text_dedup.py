@@ -172,13 +172,10 @@ def jaccard_pairs(
     total_shingle_occurrences / cap, which GROWS with the corpus — a
     forced broadcast is only safe while that bound times 8 bytes fits
     the executors (cap=1000 keeps a 10^12-occurrence corpus at ≤10^9
-    keys ≈ 8 GB: already at the broadcast cap). By DEFAULT the
-    anti-join strategy is therefore left to AQE, which sees the hot
-    set's actual size (interleaved A/B at sf0.1: indistinguishable,
-    best 1.99 s vs 2.05 s hinted). Deployments whose corpus/cap ratio
-    provably keeps |hot| executor-small can force the hint — skipping
-    the capped stream's shuffle-stage write — with
-    ``spark.counsel.jaccard.hotBroadcast=true``.
+    keys ≈ 8 GB: already at the broadcast cap). The anti-join strategy
+    is therefore left to AQE, which sees the hot set's actual size (the
+    r17 interleaved A/B at sf0.1 measured a forced broadcast no better:
+    hinted [2.97, 2.12, 2.05] s vs AQE-chosen [2.24, 2.00, 1.99] s).
 
     Exactness contract: with the cap active, df counts, cap membership
     and intersections are computed over 64-bit shingle KEYS — exact up
@@ -213,15 +210,8 @@ def jaccard_pairs(
             .filter(F.col("df") > max_shingle_df)
             .select("sh")
         )
-        # broadcast hint gated on conf, default OFF (AQE decides from
-        # the hot set's real size) — see the docstring's sizing bound
-        if (
-            df.sparkSession.conf.get(
-                "spark.counsel.jaccard.hotBroadcast", "false"
-            ).lower()
-            == "true"
-        ):
-            hot = F.broadcast(hot)
+        # no broadcast hint: AQE decides from the hot set's real size
+        # (see the docstring's sizing bound)
         sh = sh.join(hot, "sh", "left_anti")
     # One persisted copy of the (possibly capped) stream: it feeds the
     # sizes aggregation and both sides of the candidate self-join.
@@ -282,7 +272,15 @@ def _df_ranked_shingles(
     collision between two equal-df shingles could in principle perturb
     the order — the same accepted collision class as ``_shingle_key``;
     the bruteforce property tests and the driver's oracle rows pin the
-    output.)"""
+    output.)
+
+    Cache lifecycle: ``sets`` and ``ranked_sets`` are lazy
+    session-lifetime persists, the ``pin(eager=False)`` lifecycle (see
+    ``ops/materialize.pin``): nothing here can unpersist them while the
+    consuming plan is still lazy. Neither frame escapes the public
+    prefix-filter functions, so a long-lived session that builds many of
+    these plans releases them with ``spark.catalog.clearCache()`` once
+    the results are consumed."""
     sets = _doc_shingle_sets(df, id_col, text_col, n).persist()
     sh = sets.select(
         "id", F.size("shs").alias("sz"), F.explode("shs").alias("shingle")

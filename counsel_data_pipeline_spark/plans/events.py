@@ -406,8 +406,8 @@ def funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def funnel_plan(ev: DataFrame) -> DataFrame:
     """The chained-window funnel body over a (user_id, event_type, ts)
-    frame — shared by the registered query and tools/funnel_scale_race.py
-    so the race measures the shipped plan, never a drifted copy."""
+    frame — its own function so the retired 10× race (SCALE.md,
+    "Round-11 fact-scan consolidation") re-runs the shipped plan."""
     w = Window.partitionBy("user_id")
     staged = (
         ev.withColumn(
@@ -932,8 +932,8 @@ def max_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def sweepline_peak(events: DataFrame) -> DataFrame:
     """The distributed sweep-line over any (event_type, ts) frame —
-    shared by the registered query and tools/sweepline_scale_race.py so
-    the race exercises the exact production decomposition.
+    its own function so the retired 10× race (SCALE.md, "Round-10
+    additions") re-runs the exact production decomposition.
 
     Both sweep points of an event (+1 at ts, -1 at ts+30m) come from ONE
     explode over a 2-element literal array, and the session count is

@@ -618,9 +618,9 @@ def corpus_prep_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def corpus_prep_v2_plan(docs: DataFrame) -> DataFrame:
     """The chained-gates single-scan pipeline body over a
-    (doc_id, text) frame — shared by the registered query and
-    tools/corpus_prep_scale_race.py so the race measures the shipped
-    plan, never a drifted copy."""
+    (doc_id, text) frame — its own function so the retired 10× race
+    (SCALE.md, "Round-11 fact-scan consolidation") re-runs the shipped
+    plan."""
     from counsel_data_pipeline_spark.ops import text_analysis as ta2
     from counsel_data_pipeline_spark.ops.text_dedup import content_md5
 
@@ -856,9 +856,9 @@ def decontam_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def decontam_bloom_plan(docs: DataFrame) -> DataFrame:
     """The one-corpus-pass Bloom-prefilter body over a
-    (doc_id, source, text) frame — shared by the registered query and
-    tools/decontam_scale_race.py so the race measures the shipped plan,
-    never a drifted copy."""
+    (doc_id, source, text) frame — its own function so the retired 10×
+    race (SCALE.md, "Round-11 fact-scan consolidation") re-runs the
+    shipped plan."""
     from counsel_data_pipeline_spark.ops import sketches as sk
     from counsel_data_pipeline_spark.ops.text_dedup import norm_text, word_shingles
 

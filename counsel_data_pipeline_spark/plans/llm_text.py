@@ -1142,8 +1142,9 @@ def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     words before any pair explodes, so the explode + combine-hash work
     is O(vocab chars), not O(corpus chars) — same counts by
     distributivity of the weighted sum, measured ~2-3x faster at 10x
-    scale (tools/bpe_scale_race.py). Top-k is TakeOrderedAndProject
-    over the unique (n desc, pair) key — no global sort materializes.
+    scale (SCALE.md, "Round-12 BPE merge-candidate counting"). Top-k is
+    TakeOrderedAndProject over the unique (n desc, pair) key — no
+    global sort materializes.
     A full BPE trainer iterates this plan with a merge-table broadcast
     per round; iteration one is the oracle-able unit (the merge
     arg-max), same one-iteration attestation pattern as the k-means and
@@ -1515,7 +1516,7 @@ def bpe_train_incremental_segment(
     last merge changed (retraction + assertion delta rows, exact by
     construction; 8.3% of the sequential form's exploded-pair input at
     a 300k-word vocabulary, wall win 16.8s vs 24.4s at 32 merges —
-    tools/bpe_incremental_scale_race.py). This row driver-attests the
+    SCALE.md, "Round-13 full BPE trainer"). This row driver-attests the
     delta-maintenance path end-to-end: a wrong maintained count would
     flip some round's argmax and hash-mismatch the replayed oracle.
     pin_every=2 with 5 merges exercises both the amortized-pin window

@@ -936,19 +936,13 @@ def bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         may = may & bit
     # ONE fact pass: flags carry the verdict; counts and the exact join
     # both read the persisted flags frame instead of rescanning lineitem.
-    # r17: the persist is conf-gated (default true) — the cache build of
-    # the fact-width flags frame vs one fact re-scan is a trade that
-    # flips with scale (measured in OPTIMIZATION_r17.md at the synth SF;
-    # at 100 TB the flags frame cannot be cached and the re-scan wins —
-    # set spark.counsel.bloom.persistFlags=false there).
+    # Measured against one fact re-scan at the 8× synth SF
+    # (OPTIMIZATION_r17.md): persist 3.86 s vs re-scan 5.09 s on 8 cores,
+    # 3.55 s vs 3.63 s on 32. persist()'s default memory-and-disk level
+    # spills a flags frame larger than executor memory instead of failing.
     flags = probed.select(
         "l_orderkey", "l_linenumber", "l_extendedprice", may.alias("may")
-    )
-    if (
-        spark.conf.get("spark.counsel.bloom.persistFlags", "true").lower()
-        == "true"
-    ):
-        flags = flags.persist()
+    ).persist()
     counts = flags.agg(
         F.count(F.lit(1)).alias("n_fact_rows"),
         F.sum(F.col("may").cast("int")).cast("bigint").alias("n_prefiltered"),

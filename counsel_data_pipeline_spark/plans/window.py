@@ -805,8 +805,8 @@ def weighted_median_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def weighted_median_plan(li: DataFrame) -> DataFrame:
     """Value-domain weighted median over any (l_returnflag, x, q) frame —
-    shared by the registered query and tools/weighted_median_scale_race.py
-    so the race exercises the exact production decomposition. The group
+    its own function so the retired 10× race (SCALE.md, "Round-10
+    additions") re-runs the exact production decomposition. The group
     totals ride the SAME window exchange as the cumulative sum (unbounded
     frame, identical partitioning), so the whole query is one fact scan
     and two exchanges — no totals join, no second scan."""

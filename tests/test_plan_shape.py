@@ -254,8 +254,7 @@ def test_catalog_fact_scan_budget(spark):
     eager=False) appear exactly once as a cached subtree that executes
     once. This pins the lazy re-derivation class of regression. Known
     exceptions carry their adjudications below."""
-    import re
-    from collections import Counter
+    from tools.scan_audit import SKIP_PREFIXES, scan_counts
 
     fact_tables = {
         "lineitem.parquet", "orders.parquet", "events.parquet",
@@ -291,24 +290,9 @@ def test_catalog_fact_scan_budget(spark):
     }
     bad = {}
     for name, q in all_queries().items():
-        if name.startswith(("streaming", "layout", "incremental",
-                            "ops_enrich", "multimodal")):
+        if name.startswith(SKIP_PREFIXES):
             continue  # write-path / stateful surfaces audited elsewhere
-        df = q.fn(spark, SF)
-        mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-        plan = df._jdf.queryExecution().explainString(mode)
-        tables, cur = [], False
-        for line in plan.splitlines():
-            if re.match(r"^\(\d+\) Scan parquet", line):
-                cur = True
-            elif cur and "Location:" in line:
-                m = re.search(r"\[(.*?)\]", line)
-                if m:
-                    tables.append(m.group(1).split("/")[-1])
-                cur = False
-        for t, n in Counter(tables).items():
+        for t, n in scan_counts(spark, q.fn, SF).items():
             if t in fact_tables and n > 2 and (name, t) not in allow:
                 bad[(name, t)] = n
     assert not bad, f"fact tables scanned >2x in one plan: {bad}"

@@ -24,6 +24,8 @@ refactor silently reintroduces the removed shape:
    outputs.
 """
 
+import gzip
+
 import pyspark.sql.functions as F
 
 from counsel_data_pipeline_spark.ops import text_dedup as td
@@ -153,6 +155,16 @@ def test_spread_estimator_branches(spark, tmp_path):
         est_big = _estimated_scan_partitions(df2)
         assert est_big is not None and est_big >= target
         assert "RoundRobinPartitioning" not in _physical(spread(df2))
+
+        # a gzip file is ONE split whatever the packing confs say: the
+        # estimate is capped at the file count, so spread repartitions
+        gz = tmp_path / "t.json.gz"
+        with gzip.open(gz, "wt") as fh:
+            fh.writelines(f'{{"id": {i}}}\n' for i in range(1000))
+        df3 = spark.read.json(str(gz))
+        assert df3.rdd.getNumPartitions() == 1
+        assert _estimated_scan_partitions(df3) == 1
+        assert "RoundRobinPartitioning" in _physical(spread(df3))
     finally:
         for k, v in olds.items():
             conf.set(k, v)

@@ -4,10 +4,10 @@ print the low/high-core speed ratios — the parallelism evidence the
 sf0.1 bench cannot produce (its 0.2–6 s queries are overhead-bound; the
 r16 verdict's ask #6).
 
-Each core count runs in its own subprocess (fresh JVM, ``local[N]`` via
-SPARK_GRAFT_CPUS, same session factory as the bench), times each query
-with the noop sink best-of-``--runs`` after one scan+codegen warmup,
-and the parent prints one JSON line:
+Each core count runs tools/plan_snap.py in its own subprocess (fresh
+JVM, ``local[N]`` via SPARK_GRAFT_CPUS, same session factory as the
+bench), which times each query with the noop sink best-of-``--runs``
+after its scan+codegen warmup; the parent prints one JSON line:
 
   {"sf_dir": ..., "cpus": [8, 32], "queries": {name:
       {"t8": s, "t32": s, "ratio": t8/t32}, ...}}
@@ -27,58 +27,25 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-_CHILD = r"""
-import json, os, sys, time
-sys.path.insert(0, os.environ["PROBE_REPO"])
-from counsel_data_pipeline_spark.catalog import all_queries
-from counsel_data_pipeline_spark.session import get_spark
-
-sf_dir = os.environ["PROBE_SF"]
-names = json.loads(os.environ["PROBE_NAMES"])
-runs = int(os.environ.get("PROBE_RUNS", "2"))
-spark = get_spark("core-scaling-probe")
-qs = all_queries()
-
-# the bench's warmup family: scan + one codegen query
-import pyspark.sql.functions as F
-spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
-qs["tpch_q6_forecast_revenue"].fn(spark, sf_dir).write.format("noop").mode(
-    "overwrite").save()
-
-out = {}
-for name in names:
-    q = qs[name]
-    spark.sparkContext.setJobDescription(f"probe:{name}")
-    best = None
-    for _ in range(runs):
-        t0 = time.time()
-        q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
-        best = dt if best is None else min(best, dt)
-        spark.catalog.clearCache()
-    out[name] = round(best, 3)
-print("PROBE_RESULT " + json.dumps(out))
-"""
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def run_at(cpus: int, sf_dir: str, names: list[str], runs: int) -> dict:
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_CPUS=str(cpus),
-        PROBE_REPO=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        PROBE_SF=sf_dir,
-        PROBE_NAMES=json.dumps(names),
-        PROBE_RUNS=str(runs),
-    )
-    res = subprocess.run(
-        [sys.executable, "-c", _CHILD], env=env, capture_output=True, text=True
-    )
-    for line in res.stdout.splitlines():
-        if line.startswith("PROBE_RESULT "):
-            return json.loads(line[len("PROBE_RESULT "):])
+    """Best-of-``runs`` noop seconds per query from one tools/plan_snap.py
+    run in a fresh JVM at ``cpus`` cores; its plan dumps go to a
+    throwaway directory."""
+    with tempfile.TemporaryDirectory(prefix="core-scaling-probe-") as out:
+        res = subprocess.run(
+            [sys.executable, os.path.join(_REPO, "tools", "plan_snap.py"),
+             "--sf", sf_dir, "--runs", str(runs), "--out-dir", out, *names],
+            env=dict(os.environ, SPARK_GRAFT_CPUS=str(cpus)),
+            capture_output=True, text=True,
+        )
+    for line in reversed(res.stdout.splitlines()):
+        if line.startswith("{"):
+            return json.loads(line)["timings"]
     raise RuntimeError(
         f"probe at {cpus} cores produced no result:\n{res.stderr[-2000:]}"
     )

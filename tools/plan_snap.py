@@ -12,6 +12,7 @@ Plans are captured AFTER the timing runs (same session), so AQE-visible
 artifacts (materialized sketches, persisted intermediates) reflect the
 executed query; the timing itself follows bench.py's methodology: noop
 sink, spark.catalog.clearCache() between runs, best-of-N.
+tools/core_scaling_probe.py reuses this timing path at two core counts.
 """
 
 from __future__ import annotations

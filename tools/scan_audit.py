@@ -4,11 +4,12 @@ line — the node label alone omits the path and undercounts).
 
 The enforcement lives in
 tests/test_plan_shape.py::test_catalog_fact_scan_budget (fact tables
-capped at 2 scans per plan, allowlisted exceptions adjudicated); this
-tool is the exploratory side — run it to see the whole distribution,
-including dimension tables and the write-path/stateful queries the
-budget test skips (those EXECUTE when built; expect artifacts under
-/tmp and a longer runtime when included).
+capped at 2 scans per plan, allowlisted exceptions adjudicated), which
+counts with this module's ``scan_counts`` over the same
+``SKIP_PREFIXES`` filter; this tool is the exploratory side — run it
+to see the whole distribution, including dimension tables and the
+write-path/stateful queries the budget test skips (those EXECUTE when
+built; expect artifacts under /tmp and a longer runtime when included).
 
   python tools/scan_audit.py              # batch queries only
   python tools/scan_audit.py --all        # include streaming/layout/...
