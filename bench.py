@@ -2,54 +2,17 @@
 
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 python bench.py
 
-Times each catalog query tagged ``bench=True`` (end-to-end: plan + execute +
-collect) after one JVM/session warmup query, and reports per-query seconds
-plus the total.
+One pass, no options: warm up the session, time each catalog query tagged
+``bench=True`` best-of-2 (plan + execute through the noop sink, with
+``spark.catalog.clearCache()`` between runs), time the ``bench-write``
+section, write the full record to bench_last_detail.json and print one
+compact JSON line on stdout.
 
-``--until-quiet``: external host load on this box arrives in ~5-minute
-waves that usually intersect a 3.5-minute bench pass — the r12 idle-host
-artifact took 15 hand-run attempts over four hours to catch a quiet
-window. This flag automates the hunt: repeat the headline pass up to
-``--max-attempts`` times (same warmed session — JVM/codegen warmth is
-the steady-state a cluster runs in), keep the attempt with the LOWEST
-median floor_pct (tie: lower total), and stop early once the median
-drops to ``--quiet-median`` (integer percent of the committed floors,
-default 120). The chosen attempt becomes the artifact; every attempt's
-(median, total) is recorded in bench_last_detail.json so a loaded run
-is distinguishable from a genuinely slower build.
-
-Auto-quiet (DEFAULT path, no flags): the driver invokes this script with
-no arguments, so the r13 official artifact recorded a contended host
-(median floor_pct 174) even though ``--until-quiet`` existed and a
-hand-run hunt the same session measured 113.6. The default path now
-engages the same hunt AUTOMATICALLY when the first pass looks loaded:
-if its median floor_pct exceeds ``--auto-engage-median`` (default 135),
-re-run up to ``--auto-max-attempts`` total passes (default 4), stop
-early once an attempt's median drops to ``--quiet-median``, and emit the
-best attempt — identical artifact/stdout contract either way. Hunt
-passes after the first are single-run-per-query (the first stays
-best-of-2), so roughly twice as many weather samples fit the
-``--auto-budget-sec`` wall budget (default 780 s — the hunt must never
-outlast whatever timeout the driver enforces; the per-query 3x-floor
-stall-retry still guards single-run passes). A quiet first pass
-(median <= 135) keeps the historical single-pass behavior and wall
-time. ``--no-auto-quiet`` restores the unconditional single pass.
-
-r15 hardening: the warm-up phase exercises the GROUPED Arrow exchange
-(two trivial applyInPandas passes) so the first grouped-map query
-doesn't pay worker/exchange spin-up; best-attempt selection keys on
-per-query COVERAGE before median/total (an attempt with an errored
-query can't win on its smaller sum); and every attempts_log entry
-records n_queries/n_errors/runs_per_query/n_runs plus ambient
-steal/idle/loadavg sampled around the attempt, so weather is
-adjudicable from the artifact alone.
-
-r16 hardening: the chosen attempt's steal/idle/load markers ride on
-the driver-captured stdout headline itself (``amb`` positional array),
-selection breaks coverage ties on fewest errors (a first-run-ok/
-retry-errored query lands in both per_query and errors), the
-next-attempt wall estimate divides by ALL executions including errored
-ones, and /proc/stat totals exclude the guest/guest_nice double-count.
+This script keeps its one-line stdout contract; it does not decide
+whether a change is faster. That is perfbench/run.py's job: it runs
+seeded, interleaved parent/change pairs and judges them against the fixed
+bounds in BENCHMARK.json, so host load shows up as spread, not as a
+verdict.
 """
 
 from __future__ import annotations
@@ -62,94 +25,152 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import functions as F
+
 from counsel_data_pipeline_spark.catalog import all_queries
+from counsel_data_pipeline_spark.io.sources import load_table
 from counsel_data_pipeline_spark.session import get_spark
 
-
-def _median(vals: list[float]) -> float | None:
-    if not vals:
-        return None
-    s = sorted(vals)
-    mid = len(s) // 2
-    return float(s[mid]) if len(s) % 2 else (s[mid - 1] + s[mid]) / 2.0
+# The caller keeps the last 2000 chars of stdout and the headline is the
+# final stdout write, so the whole line parses iff it fits that tail
+# (earlier stdout noise can only scroll off the FRONT of the tail). 1985
+# leaves room for the trailing newline plus slack.
+HEADLINE_BUDGET = 1985
 
 
-def _cpu_snap() -> tuple[int, int, int] | None:
-    """(steal, idle, total) jiffies from /proc/stat's aggregate cpu line."""
+def warm_up(spark, sf_dir: str) -> None:
+    """Warm the JVM, parquet footer cache and execution machinery so the
+    first timed query does not pay session start-up. A failed step only
+    shifts timings, so it is reported on stderr and never aborts."""
+
+    def _warm(fn) -> None:
+        try:
+            fn()
+        except Exception as exc:  # noqa: BLE001
+            print(f"# warmup failed: {type(exc).__name__}: {exc}", file=sys.stderr)
+
+    def _noop(df) -> None:
+        df.write.format("noop").mode("overwrite").save()
+
+    # Both fact tables (events goes through load_table for the nanos-
+    # timestamp conf) ...
+    _warm(lambda: spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count())
+    _warm(lambda: load_table(spark, sf_dir, "events").count())
+    # ... documents/embeddings too: the alphabetically-first timed queries
+    # are documents-family, and an unwarmed footer/scan showed up as a fake
+    # ~2x on curation_hash_split in the r3 clean run.
+    _warm(lambda: spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).count())
+    _warm(lambda: spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).count())
+    # ... and the execution machinery itself: one cheap aggregate through
+    # whole-stage codegen + the noop sink, and one trivial Arrow exchange to
+    # spawn the Python worker pool — so the first timed query of whichever
+    # family doesn't pay JIT/codegen/worker-fork cost (round-2 bench showed
+    # fake 2-4x swings on whatever ran first).
+    _warm(lambda: _noop(all_queries()["tpch_q6_forecast_revenue"].fn(spark, sf_dir)))
+    _warm(lambda: _noop(spark.range(64).mapInPandas(lambda it: it, "id long")))
+    # ... and the GROUPED-map Arrow path specifically: mapInPandas alone
+    # leaves the first applyInPandas query paying worker/exchange spin-up
+    # (r14 measured dedup_embedding_cosine_topn at 3-7x wall on its first
+    # runs with the host 94% idle; a clean A/B with this warm cut its
+    # best-of-2 9.6s -> 3.7s). Two iterations of a trivial 32-group
+    # applyInPandas, ~3s total.
+    for _ in range(2):
+        _warm(lambda: _noop(spark.range(4096)
+                            .withColumn("g", F.col("id") % 32)
+                            .groupBy("g")
+                            .applyInPandas(lambda pdf: pdf, "id long, g long")))
+
+
+def time_noop(spark, fn, sf_dir: str) -> float:
+    """Seconds for one build + full execution of ``fn(spark, sf_dir)``.
+
+    The noop sink forces FULL evaluation uniformly: count() on wide
+    results would let Catalyst prune unused aggregate expressions, and
+    collect() adds driver-transfer cost only for narrow ones. The cache is
+    cleared afterwards, also on failure, because several plans persist()
+    intermediates: every timing stays a cold execution with respect to
+    them (only JVM/codegen stays warm, the steady state a cluster runs in)
+    and executor storage does not accumulate."""
+    t0 = time.time()
     try:
-        with open("/proc/stat") as fh:
-            parts = fh.readline().split()
-        vals = [int(v) for v in parts[1:]]
-        # user nice system idle iowait irq softirq steal [guest guest_nice]
-        # — guest/guest_nice are EXCLUDED from the total: the kernel
-        # already accounts guest time inside user/nice, so summing them
-        # would double-count jiffies and deflate steal/idle percentages
-        # on guest-running hosts (r15 ADVICE).
-        steal = vals[7] if len(vals) > 7 else 0
-        return steal, vals[3], sum(vals[:8])
-    except (OSError, ValueError, IndexError):
-        return None
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return round(time.time() - t0, 3)
+    finally:
+        spark.catalog.clearCache()
 
 
-def _load_1m() -> float | None:
-    try:
-        with open("/proc/loadavg") as fh:
-            return float(fh.read().split()[0])
-    except (OSError, ValueError, IndexError):
-        return None
+def headline_line(
+    per_query: dict[str, float],
+    total: float,
+    sf: float | None,
+    floors: dict[str, float],
+    errors: dict[str, str],
+) -> str:
+    """The compact stdout line, at most HEADLINE_BUDGET chars.
 
-
-def _ambient_delta(before, after) -> dict:
-    """Steal/idle percentages over an attempt — the weather marker that
-    separates hypervisor-steal waves from real regressions (r14 spent a
-    session re-deriving this from control queries; now it rides in the
-    artifact). Degrades to {} off-Linux."""
-    out: dict[str, float] = {}
-    load = _load_1m()
-    if load is not None:
-        out["load_1m_after"] = load
-    if before and after:
-        dtot = after[2] - before[2]
-        if dtot > 0:
-            out["steal_pct"] = round(100.0 * (after[0] - before[0]) / dtot, 1)
-            out["idle_pct"] = round(100.0 * (after[1] - before[1]) / dtot, 1)
-    return out
-
-
-def _parse_args(argv: list[str]) -> argparse.Namespace:
-    p = argparse.ArgumentParser(description=__doc__)
-    p.add_argument("--until-quiet", action="store_true",
-                   help="repeat the headline pass until the floor_pct "
-                        "median is quiet, keep the best attempt")
-    p.add_argument("--max-attempts", type=int, default=6,
-                   help="attempt budget for --until-quiet (default 6)")
-    p.add_argument("--quiet-median", type=float, default=120.0,
-                   help="stop early when the median floor_pct drops to "
-                        "this integer percent (default 120)")
-    p.add_argument("--no-auto-quiet", action="store_true",
-                   help="disable the default-path auto hunt: always a "
-                        "single headline pass")
-    p.add_argument("--auto-engage-median", type=float, default=135.0,
-                   help="default path: engage the quiet hunt when the "
-                        "first pass's median floor_pct exceeds this "
-                        "(default 135)")
-    p.add_argument("--auto-max-attempts", type=int, default=4,
-                   help="attempt budget once the auto hunt engages "
-                        "(default 4, counting the first pass)")
-    p.add_argument("--auto-budget-sec", type=float, default=780.0,
-                   help="wall-clock budget for the auto hunt: another "
-                        "attempt starts only if elapsed + the longest "
-                        "attempt so far fits (default 780 s — the "
-                        "longest driver-tolerated bench on record, the "
-                        "r5 358s-headline run, took ~13 min; an absent "
-                        "artifact is worse than a noisy one)")
-    return p.parse_args(argv)
+    Required fields only, per-query seconds at 2dp, no separator spaces.
+    ``floor_pct`` is each query's integer percent of its committed floor
+    (106 = 1.06x), positional with the ``queries`` key order (a second
+    name-keyed map would double the line past the capture tail), capped at
+    999, null where no floor exists. An overlong line degrades
+    deterministically — first without floor_pct (derivable from
+    bench_floors.json), then without the per-query map — because a line
+    cut mid-JSON parses to nothing."""
+    headline: dict = {
+        "metric": "bench_total_headline_queries",
+        "value": total,
+        "unit": "sec",
+        "queries": {n: round(t, 2) for n, t in per_query.items()},
+        "sf": sf,
+        "floor_pct": [
+            min(999, int(round(100 * t / floors[n]))) if floors.get(n) else None
+            for n, t in per_query.items()
+        ],
+    }
+    if errors:
+        headline["errors"] = {n: e[:80] for n, e in errors.items()}
+    line = json.dumps(headline, separators=(",", ":"))
+    if len(line) <= HEADLINE_BUDGET:
+        return line
+    print(f"# WARNING: headline {len(line)} chars exceeds the capture "
+          "tail — dropping floor_pct (recompute from bench_floors.json)",
+          file=sys.stderr)
+    headline.pop("floor_pct")
+    line = json.dumps(headline, separators=(",", ":"))
+    if len(line) <= HEADLINE_BUDGET:
+        return line
+    # The per-query map lives in bench_last_detail.json regardless. Failing
+    # query NAMES are the one thing the detail file may not preserve on a
+    # crashed run, so carry as many as fit.
+    print(f"# WARNING: full headline {len(line)} chars exceeds the "
+          "2000-char capture tail — emitting compact form; "
+          "per-query map is in bench_last_detail.json", file=sys.stderr)
+    compact: dict = {
+        "metric": headline["metric"],
+        "value": total,
+        "unit": "sec",
+        "queries": {},
+        "n_queries": len(per_query),
+        "sf": sf,
+    }
+    if errors:
+        compact["n_errors"] = len(errors)
+        kept: list[str] = []
+        for name in sorted(errors):
+            kept.append(name)
+            compact["err_q"] = kept
+            if len(json.dumps(compact, separators=(",", ":"))) > HEADLINE_BUDGET:
+                kept.pop()
+                break
+    return json.dumps(compact, separators=(",", ":"))
 
 
 def main(argv: list[str] | None = None) -> None:
-    # argv=None (library/test callers) means "no flags": pytest's own
-    # sys.argv must not leak into the bench parser.
-    args = _parse_args(argv if argv is not None else [])
+    # No options: the parser only makes a stale flag (e.g. the retired
+    # --until-quiet) fail loudly. argv=None (library/test callers) means
+    # "no flags": pytest's own sys.argv must not leak into it.
+    argparse.ArgumentParser(description=__doc__).parse_args(
+        argv if argv is not None else [])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     try:
@@ -173,59 +194,11 @@ def main(argv: list[str] | None = None) -> None:
     # verification window), which would otherwise reshuffle which query
     # absorbs residual warm-up and make per-round deltas uninterpretable.
     queries = {n: q for n, q in sorted(all_queries().items()) if q.bench}
+    warm_up(spark, sf_dir)
 
-    # Warm up the JVM / parquet footer cache so the first timed query doesn't
-    # pay session startup: touch both fact tables (events goes through
-    # load_table for the nanos-timestamp conf).
-    from counsel_data_pipeline_spark.io.sources import load_table
-
-    def _warm(fn) -> None:
-        # A failed warmup shifts timings; it must not abort the bench.
-        try:
-            fn()
-        except Exception as exc:  # noqa: BLE001
-            print(f"# warmup failed: {type(exc).__name__}: {exc}", file=sys.stderr)
-
-    _warm(lambda: spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count())
-    _warm(lambda: load_table(spark, sf_dir, "events").count())
-    # ... documents/embeddings too: the alphabetically-first timed queries
-    # are documents-family, and an unwarmed footer/scan showed up as a fake
-    # ~2x on curation_hash_split in the r3 clean run.
-    _warm(lambda: spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).count())
-    _warm(lambda: spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).count())
-    # ... and the execution machinery itself: one cheap aggregate through
-    # whole-stage codegen + the noop sink, and one trivial Arrow exchange to
-    # spawn the Python worker pool — so the first timed query of whichever
-    # family doesn't pay JIT/codegen/worker-fork cost (round-2 bench showed
-    # fake 2-4x swings on whatever ran first).
-    _warm(lambda: all_queries()["tpch_q6_forecast_revenue"].fn(spark, sf_dir)
-          .write.format("noop").mode("overwrite").save())
-    _warm(lambda: spark.range(64).mapInPandas(lambda it: it, "id long")
-          .write.format("noop").mode("overwrite").save())
-    # ... and the GROUPED-map Arrow path specifically: mapInPandas alone
-    # leaves the first applyInPandas query paying worker/exchange spin-up
-    # (r14 verdict measured dedup_embedding_cosine_topn at 3-7x wall on
-    # its first runs with the host 94% idle, converging to floor-band
-    # only after ~4 runs; a clean A/B with this warm cut its best-of-2
-    # 9.6s -> 3.7s). Two iterations of a trivial 32-group applyInPandas
-    # (one Exchange + grouped Arrow exchange each, ~3s total) are the
-    # same "JVM warm is the steady state a cluster runs in" argument as
-    # the best-of-2 comment below — run BEFORE timing starts.
-    from pyspark.sql import functions as F
-
-    for _ in range(2):
-        _warm(lambda: spark.range(4096)
-              .withColumn("g", F.col("id") % 32)
-              .groupBy("g")
-              .applyInPandas(lambda pdf: pdf, "id long, g long")
-              .write.format("noop").mode("overwrite").save())
-
-    # Reference floors (quiet-machine minima, maintained per round): a
-    # query whose best-of-2 still exceeds 3x its floor is almost certainly
-    # riding a host stall that spanned both attempts (observed: identical
-    # code, same session, 1.6s and 16.0s ten minutes apart) — grant up to
-    # two extra attempts before accepting the number. Floors bound the
-    # retry budget; they never change a measurement, only when to retry.
+    # Reference floors (quiet-machine minima, maintained per round) only
+    # annotate the result as floor_pct/floor_ratio; they never change a
+    # measurement.
     floors_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                "bench_floors.json")
     try:
@@ -234,202 +207,35 @@ def main(argv: list[str] | None = None) -> None:
     except Exception:
         floors = {}
 
-    def _headline_pass(
-        runs_per_query: int = 2,
-    ) -> tuple[dict, dict, dict, float, int, int]:
-        per_query: dict[str, float] = {}
-        first_run: dict[str, float] = {}
-        errors: dict[str, str] = {}
-        n_runs = 0  # timed executions actually performed (incl. retries)
-        n_execs = 0  # every execution incl. errored ones (wall accounting)
-        t_all = time.time()
-        # Pass-wide stall-retry budget: the 3x-floor retry exists for
-        # ISOLATED single-query stalls. Under uniform hypervisor steal
-        # every query looks "stalled" and unbounded retries tripled a
-        # hunt attempt's wall (measured r14: a single-run attempt cost
-        # 389s vs ~200s). If many queries trip the retry it's weather,
-        # not a stall — stop burning wall on it.
-        retry_budget = 10
-        for name, q in queries.items():
-            # Best-of-2 per query: the r5 official artifact recorded a 358s
-            # total that an identical-code quiet-machine rerun measured at
-            # 53s — a single host CPU-steal stall poisoned the round's number
-            # because one run WAS the artifact. Two executions make a
-            # same-query stall survivable: the minimum is the code's real
-            # cost, the first-run time is kept separately so cold-plan cost
-            # stays observable. clearCache() between attempts keeps both runs
-            # cold w.r.t. persisted intermediates (only JVM/codegen stays
-            # warm, which is the steady-state a cluster would run in anyway).
-            # Hunt attempts after the first pass runs_per_query=1: halving
-            # the attempt wall doubles how many weather samples fit the
-            # auto budget, and the stall-retry below still guards a
-            # single-run query that lands on a steal spike.
-            floor = floors.get(name)
-            times: list[float] = []
-            attempt = 0
-            while attempt < runs_per_query + 2:
-                attempt += 1
-                if attempt > runs_per_query:
-                    # extra attempts only while the best time looks stalled
-                    if not times or floor is None or min(times) <= max(
-                        1.0, 3.0 * floor
-                    ):
-                        break
-                    if retry_budget <= 0:
-                        break
-                    retry_budget -= 1
-                    print(
-                        f"# {name}: best {min(times)}s > 3x floor {floor}s — retrying",
-                        file=sys.stderr,
-                    )
-                t0 = time.time()
-                n_execs += 1
-                # One broken plan must cost one entry, not the whole bench:
-                # the r4 bench produced NOTHING because a single query threw
-                # at plan time.
-                try:
-                    df = q.fn(spark, sf_dir)
-                    # Force FULL evaluation uniformly via the noop sink:
-                    # count() on wide results would let Catalyst prune unused
-                    # aggregate expressions (under-measuring wide queries),
-                    # and collect() adds driver-transfer cost only for narrow
-                    # ones. The noop write executes every operator JVM-side
-                    # and discards rows.
-                    df.write.format("noop").mode("overwrite").save()
-                except Exception as exc:  # noqa: BLE001 — record and keep benching
-                    errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-                    print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
-                    break
-                else:
-                    times.append(round(time.time() - t0, 3))
-                    n_runs += 1
-                finally:
-                    # Isolate queries/attempts: several plans persist()
-                    # intermediates; dropping them keeps every timing a true
-                    # cold execution (and keeps executor storage from
-                    # accumulating). In finally so a FAILED query's partially
-                    # materialized caches can't feed the next timing either.
-                    spark.catalog.clearCache()
-            if times:
-                per_query[name] = min(times)
-                first_run[name] = times[0]
-                print(f"# {name}: {per_query[name]}s (runs: {times})", file=sys.stderr)
-        wall = round(time.time() - t_all, 3)
-        return per_query, first_run, errors, wall, n_runs, n_execs
-
-    # Quiet-window hunt (see module docstring). Three regimes:
-    #   --until-quiet      unconditional hunt, --max-attempts budget
-    #   default            single pass; AUTO-engages the same hunt when
-    #                      that pass's median floor_pct > --auto-engage-
-    #                      median (the driver passes no flags, so this is
-    #                      the only way the official artifact rides out a
-    #                      load wave)
-    #   --no-auto-quiet    unconditional single pass (historical)
-    auto = not args.until_quiet and not args.no_auto_quiet
-    if args.until_quiet:
-        n_attempts = max(1, args.max_attempts)
-    elif auto:
-        n_attempts = max(1, args.auto_max_attempts)
-    else:
-        n_attempts = 1
-    best = None  # (key, payload) — see selection note below
-    chosen_attempt = 1
-    attempts_log: list[dict] = []
-    hunt_t0 = time.time()
-    max_attempt_wall = 0.0
-    for attempt in range(1, n_attempts + 1):
-        runs_per_query = 2 if attempt == 1 else 1
-        amb_before = _cpu_snap()
-        per_query, first_run, errors, wall, n_runs, n_execs = _headline_pass(
-            runs_per_query=runs_per_query
-        )
-        ambient = _ambient_delta(amb_before, _cpu_snap())
-        # Budget estimate for the NEXT attempt, which is single-run:
-        # scale this attempt's wall by executions actually performed
-        # (attempt 1 is nominally 2 runs/query but stall retries can add
-        # 3rd/4th runs — the old wall/2 mis-counted those; errored
-        # executions spend wall without a timed-run credit, so they
-        # count here too or a pass with failures inflates the estimate
-        # and ends the hunt early — r15 ADVICE), plus headroom for the
-        # next attempt spending its own pass-wide retry budget (10 runs)
-        # on stall retries.
-        max_attempt_wall = max(
-            max_attempt_wall,
-            wall * ((len(queries) + 10) / n_execs) if n_execs else wall,
-        )
-        total = round(sum(per_query.values()), 3)
-        med = _median([
-            100.0 * t / floors[n]
-            for n, t in per_query.items() if floors.get(n)
-        ])
-        entry = {
-            "attempt": attempt,
-            "median_floor_pct": round(med, 1) if med is not None else None,
-            "total_sec": total,
-            # auditability (r14 ADVICE): an attempt with errored queries
-            # has a smaller per_query set — record coverage and run
-            # methodology so a single-run- or partial-coverage-backed
-            # headline is distinguishable in the trail.
-            "n_queries": len(per_query),
-            "n_errors": len(errors),
-            "runs_per_query": runs_per_query,
-            "n_runs": n_runs,
-            "n_execs": n_execs,
-        }
-        entry.update(ambient)
-        attempts_log.append(entry)
-        print(f"# attempt {attempt}/{n_attempts}: total {total}s, "
-              f"median floor_pct "
-              f"{round(med, 1) if med is not None else 'n/a'}, "
-              f"ambient {ambient}",
-              file=sys.stderr)
-        # Selection: coverage first (an attempt missing queries must not
-        # beat a complete one on a smaller-sum total — r14 ADVICE), then
-        # fewest errors (a query whose FIRST run succeeded but whose
-        # retry errored sits in both per_query and errors: equal
-        # coverage, degraded methodology — an error-free attempt must
-        # win the tie — r15 ADVICE), then quietest median, then total.
-        key = (
-            -len(per_query),
-            len(errors),
-            med if med is not None else float("inf"),
-            total,
-        )
-        if best is None or key < best[0]:
-            best = (key, (total, per_query, first_run, errors, wall))
-            chosen_attempt = attempt
-        if n_attempts == 1:
-            break
-        if med is None:
-            print("# quiet hunt: no committed floors for this query set "
-                  "— single attempt only", file=sys.stderr)
-            break
-        if auto and attempt == 1 and med <= args.auto_engage_median:
-            # Quiet first pass — historical single-pass behavior.
-            break
-        if (args.until_quiet or attempt > 1) and med <= args.quiet_median:
-            print(f"# quiet window found (median {round(med, 1)} <= "
-                  f"{args.quiet_median}) — stopping", file=sys.stderr)
-            break
-        if auto:
-            # Predictive wall budget: the driver-invoked path must never
-            # outlast whatever timeout the driver enforces — a missing
-            # artifact is worse than a loaded one. Start another attempt
-            # only if the worst attempt so far would still fit.
-            elapsed = time.time() - hunt_t0
-            if elapsed + max_attempt_wall > args.auto_budget_sec:
-                print(f"# auto-quiet: wall budget reached "
-                      f"({round(elapsed)}s elapsed + {round(max_attempt_wall)}s "
-                      f"next-attempt estimate > {args.auto_budget_sec}s) — "
-                      "emitting best attempt", file=sys.stderr)
+    per_query: dict[str, float] = {}
+    first_run: dict[str, float] = {}
+    errors: dict[str, str] = {}
+    t_all = time.time()
+    for name, q in queries.items():
+        # Best-of-2 per query: the r5 official artifact recorded a 358s
+        # total that an identical-code quiet-machine rerun measured at
+        # 53s — a single host CPU-steal stall poisoned the round's number
+        # because one run WAS the artifact. The minimum is the code's real
+        # cost; the first run is kept separately so cold-plan cost stays
+        # observable.
+        times: list[float] = []
+        for _ in range(2):
+            # One broken plan must cost one entry, not the whole bench:
+            # the r4 bench produced NOTHING because a single query threw
+            # at plan time. A query whose first run succeeded and whose
+            # second run raised stays in per_query AND errors.
+            try:
+                times.append(time_noop(spark, q.fn, sf_dir))
+            except Exception as exc:  # noqa: BLE001 — record and keep benching
+                errors[name] = f"{type(exc).__name__}: {exc}"[:500]
+                print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
                 break
-            if attempt == 1:
-                print(f"# auto-quiet: median {round(med, 1)} > "
-                      f"{args.auto_engage_median} looks like host load — "
-                      f"hunting a quiet window (up to {n_attempts} "
-                      "attempts)", file=sys.stderr)
-    total, per_query, first_run, errors, wall = best[1]
-    errors = dict(errors)
+        if times:
+            per_query[name] = min(times)
+            first_run[name] = times[0]
+            print(f"# {name}: {per_query[name]}s (runs: {times})", file=sys.stderr)
+    wall = round(time.time() - t_all, 3)
+    total = round(sum(per_query.values()), 3)
 
     # Write-path section (r8 verdict ask #8): the three materializing
     # queries — Z-order rewrite, bucketed dedup-store build, date-
@@ -447,51 +253,31 @@ def main(argv: list[str] | None = None) -> None:
         try:
             if q.reset is not None:
                 q.reset(spark, sf_dir)
-            t0 = time.time()
-            q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            rec["cold_write_sec"] = round(time.time() - t0, 3)
-            spark.catalog.clearCache()
-            t0 = time.time()
-            q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            rec["warm_read_sec"] = round(time.time() - t0, 3)
+            rec["cold_write_sec"] = time_noop(spark, q.fn, sf_dir)
+            rec["warm_read_sec"] = time_noop(spark, q.fn, sf_dir)
         except Exception as exc:  # noqa: BLE001 — record and keep benching
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
             print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
-        finally:
-            spark.catalog.clearCache()
         if rec:
             write_queries[name] = rec
             print(f"# {name}: write-path {rec}", file=sys.stderr)
 
-    # The driver captures only the LAST 2000 characters of this process's
-    # stdout (observed: BENCH_r09.json recorded parsed:null with a
-    # 2000-char tail that landed mid-line of the ~4KB record, losing the
-    # opening brace). So stdout gets a COMPACT headline line — required
-    # fields only, per-query seconds at 2dp, no separator spaces — that
-    # fits whole inside the tail and therefore parses. The full-precision
-    # record (3dp minima, first-run diagnostics, write-path section, loop
-    # wall time) goes to a repo-local file + stderr, which is what the
-    # committed BENCH_LOCAL_r{N}.json artifacts carry.
+    # stdout carries only the compact headline (the caller captures a
+    # 2000-char tail; BENCH_r09.json recorded parsed:null when a ~4KB
+    # record overflowed it). The full-precision record goes to a
+    # repo-local file, which is what the committed BENCH_LOCAL_r{N}.json
+    # artifacts carry.
     detail = {
         "metric": "bench_total_headline_queries",
         "value": total,
         "unit": "sec",
         "queries": per_query,
         "sf": sf_num,
-        # diagnostics: first (cold) attempt per query and loop wall time
+        # diagnostics: first (cold) run per query and loop wall time
         # (~2x the total since every query runs twice)
         "first_run": first_run,
         "wall_sec": wall,
         "write_queries": write_queries,
-        # one entry per --until-quiet attempt (a single entry on plain
-        # runs): the full hunt is auditable from the chosen artifact —
-        # each entry carries coverage (n_queries/n_errors), methodology
-        # (runs_per_query/n_runs) and the ambient steal/idle/load
-        # markers sampled around the attempt
-        "attempts": attempts_log,
-        "chosen_attempt": chosen_attempt,
-        # full-precision floor ratios (the stdout headline carries the
-        # same signal as a capped integer-percent array)
         "floor_ratio": {
             n: round(t / floors[n], 3)
             for n, t in per_query.items() if floors.get(n)
@@ -509,90 +295,7 @@ def main(argv: list[str] | None = None) -> None:
     except OSError as exc:
         print(f"# could not write {detail_path}: {exc}", file=sys.stderr)
 
-    headline = {
-        "metric": detail["metric"],
-        "value": total,
-        "unit": "sec",
-        "queries": {n: round(t, 2) for n, t in per_query.items()},
-        "sf": sf_num,
-    }
-    # Per-query floor ratio, self-adjudicating against host noise: the
-    # r11 driver artifact ran 11.5% over r10 purely from ambient host
-    # load, and telling that apart from a real regression took three
-    # files. With the ratio on the line itself, uniform host noise shows
-    # as uniformly elevated percentages while a real regression shows one
-    # outlier. Encoded as integer percent (106 = 1.06x floor) in a
-    # positional array aligned with the ``queries`` key order — a second
-    # name-keyed map would double the line (~3.4KB, measured) past the
-    # driver's capture tail. Capped at 999: past 10x floor the magnitude
-    # stops mattering, only the outlier-ness does.
-    headline["floor_pct"] = [
-        min(999, int(round(100 * per_query[n] / floors[n])))
-        if floors.get(n) else None
-        for n in headline["queries"]
-    ]
-    # The chosen attempt's weather, ON the driver-captured line (r15
-    # verdict ask #3): without it the official artifact still needed
-    # bench_last_detail.json archaeology to tell steal waves from real
-    # regressions. Positional [steal_pct, idle_pct, load_1m] — ~30
-    # bytes, well inside the capture budget; kept even in the degraded
-    # compact form.
-    chosen = attempts_log[chosen_attempt - 1]
-    headline["amb"] = [
-        chosen.get("steal_pct"),
-        chosen.get("idle_pct"),
-        chosen.get("load_1m_after"),
-    ]
-    if errors:
-        headline["errors"] = {n: e[:80] for n, e in errors.items()}
-
-    # The driver keeps the last 2000 chars of stdout and this line is the
-    # final stdout write, so the whole line parses iff it fits that tail
-    # (earlier stdout noise can only scroll off the FRONT of the tail).
-    # 1985 leaves room for the trailing newline plus slack. Degrade
-    # deterministically — never print an overlong line and hope:
-    # first shed the ratio array (derivable from bench_floors.json +
-    # per-query seconds), then the per-query map itself.
-    budget = 1985
-    line = json.dumps(headline, separators=(",", ":"))
-    if len(line) > budget:
-        print(f"# WARNING: headline {len(line)} chars exceeds the capture "
-              "tail — dropping floor_pct (recompute from bench_floors.json)",
-              file=sys.stderr)
-        headline.pop("floor_pct")
-        line = json.dumps(headline, separators=(",", ":"))
-    if len(line) > budget:
-        # Past the budget the driver's capture tail would land mid-line
-        # and parsed would silently regress to null, so drop the
-        # per-query map (it lives in bench_last_detail.json regardless)
-        # and emit a line that always fits. Failing query NAMES are the
-        # one thing the detail file may not preserve on a crashed run, so
-        # carry as many as fit.
-        print(f"# WARNING: full headline {len(line)} chars exceeds the "
-              "driver's 2000-char capture tail — emitting compact form; "
-              "per-query map is in bench_last_detail.json", file=sys.stderr)
-        compact = {
-            "metric": headline["metric"],
-            "value": total,
-            "unit": "sec",
-            "queries": {},
-            "n_queries": len(per_query),
-            "sf": sf_num,
-            "amb": headline["amb"],
-        }
-        if errors:
-            compact["n_errors"] = len(errors)
-            names = sorted(errors)
-            kept: list[str] = []
-            for nm in names:
-                kept.append(nm)
-                compact["err_q"] = kept
-                if len(json.dumps(compact, separators=(",", ":"))) > budget:
-                    kept.pop()
-                    compact["err_q"] = kept
-                    break
-        line = json.dumps(compact, separators=(",", ":"))
-    print(line)
+    print(headline_line(per_query, total, sf_num, floors, errors))
 
 
 if __name__ == "__main__":

@@ -6,6 +6,8 @@ import io
 import json
 from contextlib import redirect_stdout
 
+import pytest
+
 from counsel_data_pipeline_spark.catalog import Query
 
 
@@ -18,10 +20,21 @@ def test_bench_records_error_and_keeps_going(spark, monkeypatch, tmp_path):
     def broken(sp, sf_dir):
         raise RuntimeError("forced failure for the harness test")
 
+    calls = {"n": 0}
+
+    def second_run_fails(sp, sf_dir):
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise RuntimeError("forced second-run failure")
+        return good(sp, sf_dir)
+
     fake = {
         "a_good_query": Query("a_good_query", good, None, "", (), True),
         "b_broken_query": Query("b_broken_query", broken, None, "", (), True),
         "c_good_query": Query("c_good_query", good, None, "", (), True),
+        "d_second_run_fails": Query(
+            "d_second_run_fails", second_run_fails, None, "", (), True
+        ),
     }
     monkeypatch.setattr(bench, "all_queries", lambda: dict(fake))
     monkeypatch.setattr(bench, "get_spark", lambda name: spark)
@@ -31,6 +44,11 @@ def test_bench_records_error_and_keeps_going(spark, monkeypatch, tmp_path):
     # root bench_last_detail.json of a real run (r15 verdict ask #4)
     monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
 
+    # bench takes no options: a stale flag from a retired mode must fail
+    # before any query runs, not be silently ignored
+    with pytest.raises(SystemExit):
+        bench.main(["--until-quiet"])
+
     out = io.StringIO()
     with redirect_stdout(out):
         bench.main()
@@ -38,45 +56,66 @@ def test_bench_records_error_and_keeps_going(spark, monkeypatch, tmp_path):
     lines = [l for l in out.getvalue().strip().splitlines() if l.strip()]
     assert len(lines) == 1, "bench must print exactly one JSON line on stdout"
     d = json.loads(lines[0])
-    assert set(d["queries"]) == {"a_good_query", "c_good_query"}
+    assert set(d["queries"]) == {"a_good_query", "c_good_query", "d_second_run_fails"}
     assert all(v >= 0 for v in d["queries"].values())
     assert "b_broken_query" in d["errors"]
     assert "forced failure" in d["errors"]["b_broken_query"]
+    # first run timed, second run raised: reported in queries AND errors,
+    # so a best-of-1 number is never mistaken for a clean best-of-2
+    assert "forced second-run failure" in d["errors"]["d_second_run_fails"]
 
 
 def test_headline_stdout_line_fits_driver_capture_tail():
     """The driver keeps only the last 2000 chars of stdout and the
     headline is the FINAL stdout write, so it parses iff the line itself
-    fits that tail. Two guarantees: (a) the base headline (per-query 2dp
-    seconds, worst-case widths) always fits — the per-query map never
-    degrades away for the current bench set; (b) with the floor_pct
-    ratio array attached it still fits whenever every query runs under
-    10 s (the realistic regime; bench sheds the array deterministically
-    otherwise)."""
-    import json
-
+    fits that tail. Checked on the line bench.main prints, for the current
+    bench set: (a) at worst-case widths (per-query 99.99 s) the per-query
+    map never degrades away; (b) the floor_pct ratio array, at its widest
+    (every query capped at 999), still fits whenever every query runs
+    under 10 s (the realistic regime)."""
+    import bench
     from counsel_data_pipeline_spark.catalog import all_queries
 
-    names = [n for n, q in all_queries().items() if q.bench]
-    headline = {
-        "metric": "bench_total_headline_queries",
-        "value": 9999.99,
-        "unit": "sec",
-        "queries": {n: 99.99 for n in names},
-        "sf": 0.1,
-    }
-    line = json.dumps(headline, separators=(",", ":"))
-    assert len(line) <= 1985, (
-        f"{len(line)} chars for {len(names)} benched queries — trim the "
-        "headline set or shorten values before the driver runs bench"
+    names = sorted(n for n, q in all_queries().items() if q.bench)
+    tiny_floors = {n: 1e-9 for n in names}
+
+    line = bench.headline_line({n: 99.99 for n in names}, 9999.99, 0.1, tiny_floors, {})
+    assert len(line) <= 1985
+    assert list(json.loads(line)["queries"]) == names, (
+        f"per-query map degraded away for {len(names)} benched queries — "
+        "trim the headline set or shorten values"
     )
-    headline["queries"] = {n: 9.99 for n in names}
-    headline["floor_pct"] = [999] * len(names)
-    line = json.dumps(headline, separators=(",", ":"))
-    assert len(line) <= 1985, (
+
+    line = bench.headline_line({n: 9.99 for n in names}, 519.48, 0.1, tiny_floors, {})
+    assert len(line) <= 1985
+    assert json.loads(line).get("floor_pct") == [999] * len(names), (
         f"{len(line)} chars with floor_pct for {len(names)} benched "
         "queries — the ratio array would degrade away on every run"
     )
+
+
+def test_overlong_headline_degrades_to_parseable_compact_line():
+    """If the headline set ever grows past the 2000-char capture tail,
+    bench must degrade deterministically (drop the per-query map, keep
+    metric/value/sf) rather than print an overlong line the driver would
+    truncate mid-JSON back to parsed:null."""
+    import bench
+
+    per_query = {f"padded_query_name_{'x' * 60}_{i:03d}": 0.5 for i in range(30)}
+    errors = {"a_broken_query": "RuntimeError: forced failure for the degrade test"}
+
+    line = bench.headline_line(per_query, 15.0, 0.001, {}, errors)
+
+    assert len(line) <= 1985, "degraded line must fit the capture tail"
+    d = json.loads(line)
+    assert d["metric"] == "bench_total_headline_queries"
+    assert d["queries"] == {}
+    assert d["n_queries"] == 30
+    assert d["value"] == 15.0
+    # Failing query NAMES survive the degrade (the detail file may be
+    # unretrievable exactly when queries fail), clipped to the budget.
+    assert d["n_errors"] == 1
+    assert d["err_q"] == ["a_broken_query"]
 
 
 def test_headline_carries_aligned_floor_ratios(spark, monkeypatch, tmp_path):
@@ -113,265 +152,3 @@ def test_headline_carries_aligned_floor_ratios(spark, monkeypatch, tmp_path):
     assert d["floor_pct"][1] == 999  # capped
     detail = json.loads((tmp_path / "bench_last_detail.json").read_text())
     assert set(detail["floor_ratio"]) == {"a_query", "b_query"}
-
-
-def _run_fake_bench(spark, monkeypatch, tmp_path, floors, argv=None):
-    """Run bench.main with one trivial fake query and the given floors
-    map; return (headline dict, detail dict)."""
-    import bench
-
-    def good(sp, sf_dir):
-        return sp.range(3).selectExpr("id")
-
-    fake = {"a_query": Query("a_query", good, None, "", (), True)}
-    (tmp_path / "bench_floors.json").write_text(json.dumps(floors))
-    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
-    monkeypatch.setattr(bench, "all_queries", lambda: dict(fake))
-    monkeypatch.setattr(bench, "get_spark", lambda name: spark)
-    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-
-    out = io.StringIO()
-    with redirect_stdout(out):
-        bench.main(argv if argv is not None else [])
-    headline = json.loads(out.getvalue().strip().splitlines()[-1])
-    detail = json.loads((tmp_path / "bench_last_detail.json").read_text())
-    return headline, detail
-
-
-def test_auto_quiet_engages_on_loaded_first_pass(spark, monkeypatch, tmp_path):
-    """The driver invokes bench.py with NO flags, so the default path must
-    ride out host-load waves itself: a first pass whose median floor_pct
-    exceeds the engage threshold re-runs (up to --auto-max-attempts) and
-    the attempt trail is auditable in bench_last_detail.json."""
-    # Absurdly tiny floor -> median floor_pct far above 135 every attempt
-    # -> the hunt engages and exhausts its budget without finding quiet.
-    headline, detail = _run_fake_bench(
-        spark, monkeypatch, tmp_path, {"a_query": 1e-9},
-        argv=["--auto-max-attempts", "3"],
-    )
-    assert [a["attempt"] for a in detail["attempts"]] == [1, 2, 3]
-    assert all(a["median_floor_pct"] > 135 for a in detail["attempts"])
-    # Contract unchanged: one parseable headline, floor_pct attached.
-    assert headline["queries"].keys() == {"a_query"}
-    assert headline["floor_pct"] == [999]
-
-
-def test_auto_quiet_single_pass_when_first_attempt_quiet(
-    spark, monkeypatch, tmp_path
-):
-    """A quiet first pass (median <= engage threshold) keeps the
-    historical single-pass wall time — no extra attempts."""
-    headline, detail = _run_fake_bench(
-        spark, monkeypatch, tmp_path, {"a_query": 1000.0}
-    )
-    assert [a["attempt"] for a in detail["attempts"]] == [1]
-    assert detail["attempts"][0]["median_floor_pct"] <= 135
-
-
-def test_auto_quiet_respects_wall_budget(spark, monkeypatch, tmp_path):
-    """The driver-invoked path must never outlast the driver's patience:
-    with a zero wall budget the hunt emits the first attempt even on a
-    'loaded' (tiny-floor) run instead of re-running."""
-    headline, detail = _run_fake_bench(
-        spark, monkeypatch, tmp_path, {"a_query": 1e-9},
-        argv=["--auto-budget-sec", "0"],
-    )
-    assert [a["attempt"] for a in detail["attempts"]] == [1]
-    assert headline["floor_pct"] == [999]
-
-
-def test_no_auto_quiet_flag_restores_unconditional_single_pass(
-    spark, monkeypatch, tmp_path
-):
-    headline, detail = _run_fake_bench(
-        spark, monkeypatch, tmp_path, {"a_query": 1e-9},
-        argv=["--no-auto-quiet"],
-    )
-    assert [a["attempt"] for a in detail["attempts"]] == [1]
-
-
-def test_hunt_prefers_full_coverage_attempt(spark, monkeypatch, tmp_path):
-    """Best-attempt selection must key on coverage FIRST: an attempt in
-    which a query errored has a smaller per_query set and therefore a
-    smaller total — under the old (median, total) key it could win and
-    ship a headline that silently omits a query (r14 ADVICE)."""
-    import bench
-
-    calls = {"n": 0}
-
-    def good(sp, sf_dir):
-        return sp.range(3).selectExpr("id")
-
-    def flaky(sp, sf_dir):
-        # Attempt 1 is best-of-2 (calls 1-2 succeed); every later
-        # attempt's single call fails -> attempts 2+ cover fewer queries.
-        calls["n"] += 1
-        if calls["n"] > 2:
-            raise RuntimeError("forced failure after attempt 1")
-        return sp.range(3).selectExpr("id")
-
-    fake = {
-        "a_query": Query("a_query", good, None, "", (), True),
-        "b_flaky": Query("b_flaky", flaky, None, "", (), True),
-    }
-    (tmp_path / "bench_floors.json").write_text(
-        json.dumps({"a_query": 1e-9, "b_flaky": 1e-9})
-    )
-    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
-    monkeypatch.setattr(bench, "all_queries", lambda: dict(fake))
-    monkeypatch.setattr(bench, "get_spark", lambda name: spark)
-    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-
-    out = io.StringIO()
-    with redirect_stdout(out):
-        bench.main(["--auto-max-attempts", "3"])
-    headline = json.loads(out.getvalue().strip().splitlines()[-1])
-    detail = json.loads((tmp_path / "bench_last_detail.json").read_text())
-
-    # All three attempts ran; only attempt 1 covered both queries.
-    assert [a["n_queries"] for a in detail["attempts"]] == [2, 1, 1]
-    assert detail["chosen_attempt"] == 1
-    assert set(headline["queries"]) == {"a_query", "b_flaky"}
-
-
-def test_attempt_trail_records_methodology_and_ambient(
-    spark, monkeypatch, tmp_path
-):
-    """Each attempts_log entry must be auditable on its own: coverage,
-    error count, runs-per-query methodology (attempt 1 best-of-2, hunt
-    attempts single-run), actual runs executed, and the ambient
-    steal/idle/load markers sampled around the attempt (r14 verdict ask:
-    separate weather from regression without re-deriving it from control
-    queries)."""
-    headline, detail = _run_fake_bench(
-        spark, monkeypatch, tmp_path, {"a_query": 1e-9},
-        argv=["--auto-max-attempts", "2", "--auto-budget-sec", "1e9"],
-    )
-    att = detail["attempts"]
-    assert [a["runs_per_query"] for a in att] == [2, 1]
-    for a in att:
-        assert a["n_queries"] == 1
-        assert a["n_errors"] == 0
-        assert a["n_runs"] >= a["n_queries"]
-        # /proc exists on this platform, so the markers must be present
-        assert "load_1m_after" in a
-        assert "steal_pct" in a and "idle_pct" in a
-        assert 0.0 <= a["idle_pct"] <= 100.0
-    assert detail["chosen_attempt"] in (1, 2)
-
-
-def test_overlong_headline_degrades_to_parseable_compact_line(
-    spark, monkeypatch, tmp_path
-):
-    """If the headline set ever grows past the 2000-char capture tail,
-    bench must degrade deterministically (drop the per-query map, keep
-    metric/value/sf) rather than print an overlong line the driver would
-    truncate mid-JSON back to parsed:null."""
-    import bench
-
-    def good(sp, sf_dir):
-        return sp.range(2).selectExpr("id")
-
-    def broken(sp, sf_dir):
-        raise RuntimeError("forced failure for the degrade test")
-
-    fake = {
-        f"padded_query_name_{'x' * 60}_{i:03d}": Query(
-            f"padded_query_name_{'x' * 60}_{i:03d}", good, None, "", (), True
-        )
-        for i in range(30)
-    }
-    fake["a_broken_query"] = Query("a_broken_query", broken, None, "", (), True)
-    monkeypatch.setattr(bench, "all_queries", lambda: dict(fake))
-    monkeypatch.setattr(bench, "get_spark", lambda name: spark)
-    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    # this test's forced failure must never clobber the repo-root detail
-    # file of a real bench run (r15 verdict ask #4)
-    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
-
-    out = io.StringIO()
-    with redirect_stdout(out):
-        bench.main()
-
-    lines = [l for l in out.getvalue().strip().splitlines() if l.strip()]
-    assert len(lines) == 1
-    assert len(lines[0]) <= 1985, "degraded line must fit the capture tail"
-    d = json.loads(lines[0])
-    assert d["metric"] == "bench_total_headline_queries"
-    assert d["queries"] == {}
-    assert d["n_queries"] == 30
-    assert d["value"] >= 0
-    # Failing query NAMES survive the degrade (the detail file may be
-    # unretrievable exactly when queries fail), clipped to the budget.
-    assert d["n_errors"] == 1
-    assert d["err_q"] == ["a_broken_query"]
-
-
-def test_hunt_breaks_coverage_tie_on_fewest_errors(spark, monkeypatch, tmp_path):
-    """A query whose FIRST run succeeds but whose retry errors lands in
-    BOTH per_query and errors: coverage alone counts that attempt as
-    complete even though its best-of-2 degraded to a single run. The
-    selection key must break the coverage tie on fewest errors so an
-    error-free attempt of equal coverage always wins (r15 ADVICE)."""
-    import bench
-
-    calls = {"n": 0}
-
-    def good(sp, sf_dir):
-        return sp.range(3).selectExpr("id")
-
-    def second_call_fails(sp, sf_dir):
-        # Attempt 1 is best-of-2: call 1 succeeds, call 2 errors -> the
-        # query is in per_query AND errors. Later single-run attempts
-        # (calls 3+) succeed -> equal coverage, zero errors.
-        calls["n"] += 1
-        if calls["n"] == 2:
-            raise RuntimeError("forced retry failure")
-        return sp.range(3).selectExpr("id")
-
-    fake = {
-        "a_query": Query("a_query", good, None, "", (), True),
-        "b_retry_dies": Query("b_retry_dies", second_call_fails, None, "", (), True),
-    }
-    (tmp_path / "bench_floors.json").write_text(
-        json.dumps({"a_query": 1e-9, "b_retry_dies": 1e-9})
-    )
-    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
-    monkeypatch.setattr(bench, "all_queries", lambda: dict(fake))
-    monkeypatch.setattr(bench, "get_spark", lambda name: spark)
-    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-
-    out = io.StringIO()
-    with redirect_stdout(out):
-        bench.main(["--auto-max-attempts", "3"])
-    detail = json.loads((tmp_path / "bench_last_detail.json").read_text())
-
-    atts = detail["attempts"]
-    assert atts[0]["n_queries"] == 2 and atts[0]["n_errors"] == 1
-    assert all(a["n_queries"] == 2 and a["n_errors"] == 0 for a in atts[1:])
-    chosen = atts[detail["chosen_attempt"] - 1]
-    assert chosen["n_errors"] == 0, (
-        "equal-coverage attempt with an errored retry must lose to an "
-        "error-free one"
-    )
-    # errored executions count toward the wall-estimate denominator
-    assert atts[0]["n_execs"] == atts[0]["n_runs"] + 1
-
-
-def test_headline_carries_chosen_attempt_ambient(spark, monkeypatch, tmp_path):
-    """The driver-captured stdout line must be weather-self-adjudicating
-    (r15 verdict ask #3): it carries the CHOSEN attempt's
-    [steal_pct, idle_pct, load_1m] so telling a steal wave from a real
-    regression needs no detail-file archaeology."""
-    headline, detail = _run_fake_bench(
-        spark, monkeypatch, tmp_path, {"a_query": 1000.0}
-    )
-    assert "amb" in headline and len(headline["amb"]) == 3
-    chosen = detail["attempts"][detail["chosen_attempt"] - 1]
-    assert headline["amb"] == [
-        chosen.get("steal_pct"),
-        chosen.get("idle_pct"),
-        chosen.get("load_1m_after"),
-    ]
-    # on this Linux host the /proc markers are live, not null
-    assert headline["amb"][2] is not None

@@ -1,6 +1,7 @@
 """Dangling-reference guard: every ``tools/<name>.py`` script cited in the
-package sources or README.md must exist, so a deleted tool cannot leave
-a docstring pointing readers at a file they cannot run."""
+package sources, bench.py, the tools themselves or README.md must exist,
+so a deleted tool cannot leave a docstring pointing readers at a file
+they cannot run."""
 
 import re
 from pathlib import Path
@@ -10,7 +11,8 @@ _CITE = re.compile(r"(?<![\w/.])tools/[\w*]+\.py")
 
 
 def test_cited_tool_scripts_exist():
-    sources = [ROOT / "README.md",
+    sources = [ROOT / "README.md", ROOT / "bench.py",
+               *(ROOT / "tools").glob("*.py"),
                *(ROOT / "counsel_data_pipeline_spark").rglob("*.py")]
     missing = [
         f"{src.relative_to(ROOT)}: {cite}"

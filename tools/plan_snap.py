@@ -4,14 +4,15 @@ Usage:
     python tools/plan_snap.py --suffix before --sf /root/testdata/sf0.1 \
         graph_pagerank_copurchase dedup_jaccard_prefix_filter ...
 
-Writes plans/r16/<query>_<suffix>.txt (the formatted physical plan) and
+Writes <out-dir>/<query>_<suffix>.txt (the formatted physical plan) and
 prints per-query best-of-N noop timings as one JSON line, so before/after
-evidence for OPTIMIZATION_r16.md comes from one reproducible command.
+plan and timing evidence comes from one reproducible command.
 
 Plans are captured AFTER the timing runs (same session), so AQE-visible
 artifacts (materialized sketches, persisted intermediates) reflect the
-executed query; the timing itself follows bench.py's methodology: noop
-sink, spark.catalog.clearCache() between runs, best-of-N.
+executed query; warm-up and each timed run are bench.py's own
+(``warm_up``, ``time_noop``: noop sink, spark.catalog.clearCache() after
+every run), taken best-of-N.
 tools/core_scaling_probe.py reuses this timing path at two core counts.
 """
 
@@ -23,10 +24,10 @@ import io
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import time_noop, warm_up
 from counsel_data_pipeline_spark.catalog import all_queries
 from counsel_data_pipeline_spark.session import get_spark
 
@@ -48,17 +49,7 @@ def main() -> None:
 
     spark = get_spark("plan-snap")
     qs = all_queries()
-    # Same execution-machinery warmup family as bench.py so the first
-    # timed query doesn't absorb codegen/worker spin-up.
-    from pyspark.sql import functions as F
-
-    spark.read.parquet(os.path.join(args.sf, "lineitem.parquet")).count()
-    qs["tpch_q6_forecast_revenue"].fn(spark, args.sf).write.format(
-        "noop").mode("overwrite").save()
-    for _ in range(2):
-        (spark.range(4096).withColumn("g", F.col("id") % 32).groupBy("g")
-         .applyInPandas(lambda pdf: pdf, "id long, g long")
-         .write.format("noop").mode("overwrite").save())
+    warm_up(spark, args.sf)
 
     timings: dict[str, float] = {}
     runs_all: dict[str, list[float]] = {}
@@ -67,12 +58,7 @@ def main() -> None:
         spark.sparkContext.setJobDescription(f"plan_snap:{name}")
         times = []
         if not args.no_time:
-            for _ in range(args.runs):
-                t0 = time.time()
-                q.fn(spark, args.sf).write.format("noop").mode(
-                    "overwrite").save()
-                times.append(round(time.time() - t0, 3))
-                spark.catalog.clearCache()
+            times = [time_noop(spark, q.fn, args.sf) for _ in range(args.runs)]
             timings[name] = min(times)
             runs_all[name] = times
         # plan AFTER execution: persisted frames show as InMemoryRelation
