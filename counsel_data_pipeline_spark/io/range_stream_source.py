@@ -119,6 +119,7 @@ def run_complete_until(
     progress and stops once the cumulative numInputRows reaches the
     known table size — progress for a batch is reported after its sink
     commit, so the memory table already holds that batch's state."""
+    import shutil
     import tempfile
     import time
     import uuid
@@ -153,8 +154,11 @@ def run_complete_until(
                 f"within {timeout_s}s"
             )
     finally:
-        q.stop()
-        q.awaitTermination()
+        try:
+            q.stop()
+            q.awaitTermination()  # re-raises the query's own error
+        finally:
+            shutil.rmtree(ckpt, ignore_errors=True)
     spark = result.sparkSession
     out = spark.table(name)
     rows = out.collect()

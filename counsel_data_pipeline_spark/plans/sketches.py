@@ -446,39 +446,6 @@ def _sliced_sql(key_sql: str, seed_col: str = "seed") -> str:
     )
 
 
-def _sliced_cms(df: DataFrame, key_col: str, rel: str) -> DataFrame:
-    """(rel, seed, bucket, cnt) count-min built from ONE md5 per row: the
-    32-hex digest splits into four 8-hex slices, one per depth row. Versus
-    cms_build's per-seed digests this quarters the hash work — the
-    dominant cost of sketching a 100 TB scan — at the price of slice-level
-    (rather than digest-level) independence, which the estimator tests
-    still bound."""
-    h = F.md5(
-        F.encode(F.concat(F.lit("cms4:"), F.col(key_col).cast("string")), "UTF-8")
-    )
-    rows = df.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("seed"),
-                        (
-                            F.conv(F.substring(h, 1 + 8 * s, 8), 16, 10).cast("bigint")
-                            % _JS_WIDTH
-                        ).alias("bucket"),
-                    )
-                    for s in range(_JS_DEPTH)
-                ]
-            )
-        ).alias("sb")
-    )
-    return (
-        rows.groupBy("sb.seed", "sb.bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(F.lit(rel).alias("rel"), "seed", "bucket", "cnt")
-    )
-
-
 @register(
     "sketch_cms_join_size",
     oracle=f"""

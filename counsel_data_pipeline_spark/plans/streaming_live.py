@@ -6,7 +6,10 @@ the external driver never executed a stream. The queries here EXECUTE a
 real Structured Streaming job inside the plan function (the same
 execute-inside-the-plan pattern sim_ivf_persisted_query proved out) and
 return its final state, so a green CORRECTNESS row attests a value that
-was actually computed by the streaming engine.
+was actually computed by the streaming engine. Each query combines its
+operator with streaming/microbatch.py: inputs staged as one file per
+micro-batch, drained with AvailableNow into a memory sink or a
+foreachBatch handler.
 
 Oracle strategy: the streamed operator is the A-ES weighted reservoir
 (streaming/sampling.py), whose exponential-race key is a pure function
@@ -18,34 +21,37 @@ maintenance instead of TakeOrdered.
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from counsel_data_pipeline_spark.catalog import register
 from counsel_data_pipeline_spark.io.fingerprint import derived_cache_dir
 from counsel_data_pipeline_spark.io.sources import load_table
+from counsel_data_pipeline_spark.streaming.microbatch import (
+    read_batches,
+    run_available_now,
+    stage_batches,
+)
 from counsel_data_pipeline_spark.streaming.sampling import run_weighted_sample_stream
 
 _K = 25
 _SEED = 777  # same seed as curation_weighted_sample → same sample
-_N_FILES = 4  # staged input files → micro-batches (maxFilesPerTrigger=1)
+_N_FILES = 4  # staged input files → micro-batches
 _STREAM_COLS = "doc_id BIGINT, source STRING, n_chars BIGINT"
 
 
-def _staged_input_dir(sf_dir: str) -> str:
-    """Stage documents(doc_id, source, n_chars) as N parquet files so the
-    file stream sees N micro-batches. Cached under a path keyed by the
-    source file fingerprint (io/fingerprint.py — same pattern as the
-    persisted IVF index): sweeps and bench reruns reuse one staging copy;
-    a testdata regeneration changes the fingerprint and forces a restage.
-    The file SPLIT need not be deterministic — the reservoir is the
-    global top-k of a pure row function, invariant to how rows are
-    batched."""
-    return derived_cache_dir("counsel_stream_stage", sf_dir, "documents")
+def _ntile(df: DataFrame, n: int, *order: str) -> DataFrame:
+    """``df`` with batch column ``b`` = ntile(n) - 1 over ``order``: the
+    deterministic contiguous split every staging here uses. Its window is
+    single-partition, but staging runs once per source fingerprint
+    (io/fingerprint.derived_cache_dir): sweeps and bench reruns reuse one
+    staged copy, and a testdata regeneration forces a restage."""
+    return df.withColumn("b", F.ntile(n).over(Window.orderBy(*order)) - 1)
 
 
 @register(
@@ -74,14 +80,17 @@ def _staged_input_dir(sf_dir: str) -> str:
     tags=("llm", "curation", "sampling", "streaming"),
 )
 def streaming_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stage = _staged_input_dir(sf_dir)
-    done = os.path.join(stage, "_SUCCESS")
-    if not os.path.exists(done):
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "n_chars"
-        )
-        docs.repartition(_N_FILES).write.mode("overwrite").parquet(stage)
-    # Fresh checkpoint + reservoir per invocation: the stream genuinely
+    # The reservoir is the global top-k of a pure row function, so the
+    # oracle is invariant to how rows are batched.
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "n_chars"
+    )
+    stage = stage_batches(
+        _ntile(docs, _N_FILES, "doc_id"),
+        derived_cache_dir("counsel_stream_stage", sf_dir, "documents"),
+        _N_FILES,
+    )
+    # Fresh reservoir per invocation: the stream genuinely
     # re-executes every time this plan is built (no stale streaming state
     # can masquerade as a fresh computation). The final reservoir is k
     # rows — collecting it is bounded by construction — which lets the
@@ -95,10 +104,6 @@ def streaming_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
             schema=_STREAM_COLS,
             k=_K,
             seed=_SEED,
-            id_col="doc_id",
-            weight_col="n_chars",
-            carry_cols=("source",),
-            max_files_per_trigger=1,
         )
         rows = final.collect()
         schema = final.schema
@@ -110,17 +115,6 @@ def streaming_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CMS_DEPTH, _CMS_WIDTH = 4, 64  # must match sketch_cms_user_counts
-
-
-def _staged_events_dir(spark: SparkSession, sf_dir: str) -> str:
-    """events(user_id) staged as N parquet files (one micro-batch each),
-    cached by source fingerprint like the documents staging."""
-    stage = derived_cache_dir("counsel_stream_stage_events", sf_dir, "events")
-    if not os.path.exists(os.path.join(stage, "_SUCCESS")):
-        load_table(spark, sf_dir, "events").select("user_id").repartition(
-            _N_FILES
-        ).write.mode("overwrite").parquet(stage)
-    return stage
 
 
 @register(
@@ -164,29 +158,28 @@ def _staged_events_dir(spark: SparkSession, sf_dir: str) -> str:
     tags=("sketch", "events", "streaming"),
 )
 def streaming_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     from counsel_data_pipeline_spark.ops import sketches as sk
     from counsel_data_pipeline_spark.streaming.sketches import (
         merge_cms_partials,
         run_cms_stream,
     )
 
-    stage = _staged_events_dir(spark, sf_dir)
+    # Counters add, so the merged sketch is invariant to how rows are
+    # batched.
+    ev = load_table(spark, sf_dir, "events")
+    stage = stage_batches(
+        _ntile(ev.select("event_id", "user_id"), _N_FILES, "event_id"),
+        derived_cache_dir("counsel_stream_stage_events", sf_dir, "events"),
+        _N_FILES,
+    )
     work = tempfile.mkdtemp(prefix="counsel_stream_cms_")
     try:
-        stream = (
-            spark.readStream.schema("user_id BIGINT")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
         partials = run_cms_stream(
-            stream,
+            read_batches(spark, "user_id BIGINT", stage),
             "user_id",
             _CMS_DEPTH,
             _CMS_WIDTH,
             partials_path=os.path.join(work, "partials"),
-            checkpoint_path=os.path.join(work, "ckpt"),
         )
         merged = merge_cms_partials(spark, partials)
         # the merged sketch is bounded (<= depth*width rows) — collect it
@@ -196,7 +189,6 @@ def streaming_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(work, ignore_errors=True)
     sketch = spark.createDataFrame(sketch_rows, sketch_schema)
-    ev = load_table(spark, sf_dir, "events")
     probes = ev.select("user_id").distinct()
     est = sk.cms_estimate(sketch, probes, "user_id", _CMS_DEPTH, _CMS_WIDTH)
     true = ev.groupBy(F.col("user_id").alias("key")).agg(
@@ -217,47 +209,6 @@ def streaming_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _ID_N_BATCHES = 4
 _ID_NH, _ID_BANDS, _ID_THRESH = 16, 4, 0.5
-
-
-def _staged_range_batches_dir(spark: SparkSession, sf_dir: str) -> str:
-    """documents staged as ascending doc_id-range files, one micro-batch
-    each, with strictly increasing mtimes so FileStreamSource's
-    modification-time ordering replays them in range order. Arrival order
-    therefore equals doc_id order, which makes the stream's
-    first-arrival-wins verdicts a deterministic function of the data —
-    exactly what the oracle needs. (The ntile staging window is
-    single-partition, but staging is a one-time test-scale convenience;
-    a production ingest is already arriving in time order.)"""
-    import glob as _glob
-    import shutil as _shutil
-    import time as _time
-
-    from pyspark.sql import Window
-
-    stage = derived_cache_dir("counsel_stream_stage_docranges", sf_dir, "documents")
-    marker = os.path.join(stage, "_STAGED")
-    if not os.path.exists(marker):
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        from pyspark.sql import functions as F
-
-        with_b = docs.withColumn(
-            "b", F.ntile(_ID_N_BATCHES).over(Window.orderBy("doc_id")) - 1
-        )
-        os.makedirs(stage, exist_ok=True)
-        now = _time.time()
-        for k in range(_ID_N_BATCHES):
-            tmp = os.path.join(stage, f"tmp{k}")
-            with_b.filter(F.col("b") == k).drop("b").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            src = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            dst = os.path.join(stage, f"{k:03d}.parquet")
-            os.replace(src, dst)
-            _shutil.rmtree(tmp)
-            os.utime(dst, (now + k, now + k))
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return stage
 
 
 def _streaming_dedup_oracle() -> str:
@@ -374,7 +325,16 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_incremental_dedup_stream,
     )
 
-    stage = _staged_range_batches_dir(spark, sf_dir)
+    # Ascending doc_id-range batches: arrival order equals doc_id order,
+    # which makes the first-arrival-wins verdicts a deterministic function
+    # of the data, as the oracle needs. (A production ingest is already
+    # arriving in time order.)
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    stage = stage_batches(
+        _ntile(docs, _ID_N_BATCHES, "doc_id"),
+        derived_cache_dir("counsel_stream_stage_docranges", sf_dir, "documents"),
+        _ID_N_BATCHES,
+    )
     work = tempfile.mkdtemp(prefix="counsel_stream_dedup_")
     try:
         verdicts = run_incremental_dedup_stream(
@@ -382,7 +342,6 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             input_dir=stage,
             work_dir=work,
             schema="doc_id BIGINT, text STRING",
-            max_files_per_trigger=1,
             n=3,
             n_hashes=_ID_NH,
             bands=_ID_BANDS,
@@ -404,46 +363,20 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EW_N_BATCHES = 4
 
 
-def _staged_ts_batches_dir(spark: SparkSession, sf_dir: str) -> str:
-    """events staged as ascending (ts, event_id)-range files, one
-    micro-batch each, strictly increasing mtimes so FileStreamSource
-    replays them in event-time order — the arrival-order contract the
-    stateful EWMA's determinism (and therefore its batch-window oracle)
-    requires. Same one-time staging pattern as the doc-range batches."""
-    import glob as _glob
-    import shutil as _shutil
-    import time as _time
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    # v2: carries event_type so the SCD2 stream shares the staging; each
-    # consumer projects its own columns via its readStream schema
-    stage = derived_cache_dir("counsel_stream_stage_evranges_v2", sf_dir, "events")
-    marker = os.path.join(stage, "_STAGED")
-    if not os.path.exists(marker):
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_id", "user_id", "ts", "event_type", "value"
-        )
-        with_b = ev.withColumn(
-            "b",
-            F.ntile(_EW_N_BATCHES).over(Window.orderBy("ts", "event_id")) - 1,
-        )
-        os.makedirs(stage, exist_ok=True)
-        now = _time.time()
-        for k in range(_EW_N_BATCHES):
-            tmp = os.path.join(stage, f"tmp{k}")
-            with_b.filter(F.col("b") == k).drop("b").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            src = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            dst = os.path.join(stage, f"{k:03d}.parquet")
-            os.replace(src, dst)
-            _shutil.rmtree(tmp)
-            os.utime(dst, (now + k, now + k))
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return stage
+def _event_ranges(spark: SparkSession, sf_dir: str) -> str:
+    """events staged as ascending (ts, event_id)-range micro-batches:
+    files replay in event-time order, the arrival-order contract the
+    stateful twins' determinism (and so their batch oracles) requires.
+    Each consumer projects its own columns through its read schema."""
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "ts", "event_type", "value"
+    )
+    return stage_batches(
+        _ntile(ev, _EW_N_BATCHES, "ts", "event_id"),
+        # v2: carries event_type so the SCD2 stream shares the staging
+        derived_cache_dir("counsel_stream_stage_evranges_v2", sf_dir, "events"),
+        _EW_N_BATCHES,
+    )
 
 
 def _ewma_stream_oracle() -> str:
@@ -468,26 +401,14 @@ def _ewma_stream_oracle() -> str:
 )
 def streaming_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     from counsel_data_pipeline_spark.plans.window import _EWMA_W
-    from counsel_data_pipeline_spark.streaming.ewma import run_ewma_stream
+    from counsel_data_pipeline_spark.streaming.ewma import ewma_stateful
 
-    stage = _staged_ts_batches_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="counsel_stream_ewma_")
-    try:
-        out = run_ewma_stream(
-            spark,
-            input_dir=stage,
-            work_dir=work,
-            schema="event_id BIGINT, user_id BIGINT, ts TIMESTAMP, value DOUBLE",
-            weights=_EWMA_W,
-            max_files_per_trigger=1,
-        )
-        rows = out.collect()
-        schema = out.schema
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema).select(
-        "event_id", "user_id", "ts_s", "ewma_value", "deviation"
+    stream = read_batches(
+        spark,
+        "event_id BIGINT, user_id BIGINT, ts TIMESTAMP, value DOUBLE",
+        _event_ranges(spark, sf_dir),
     )
+    return run_available_now(ewma_stateful(stream, _EWMA_W), "append")
 
 
 # ---------------------------------------------------------------------------
@@ -517,28 +438,17 @@ def _scd2_stream_oracle() -> str:
     tags=("events", "window", "incremental", "streaming"),
 )
 def streaming_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from counsel_data_pipeline_spark.streaming.scd2 import run_scd2_stream
-
-    stage = _staged_ts_batches_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="counsel_stream_scd2_")
-    try:
-        out = run_scd2_stream(
-            spark,
-            input_dir=stage,
-            work_dir=work,
-            schema=(
-                "event_id BIGINT, user_id BIGINT, ts TIMESTAMP, "
-                "event_type STRING"
-            ),
-            max_files_per_trigger=1,
-        )
-        rows = out.collect()
-        schema = out.schema
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema).select(
-        "user_id", "event_type", "valid_from_s", "valid_to_s", "is_current"
+    from counsel_data_pipeline_spark.streaming.scd2 import (
+        compact_changelog,
+        scd2_stateful,
     )
+
+    stream = read_batches(
+        spark,
+        "event_id BIGINT, user_id BIGINT, ts TIMESTAMP, event_type STRING",
+        _event_ranges(spark, sf_dir),
+    )
+    return compact_changelog(run_available_now(scd2_stateful(stream), "append"))
 
 
 # ---------------------------------------------------------------------------
@@ -546,19 +456,6 @@ def streaming_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _KM_N_CENTROIDS, _KM_ITERS, _KM_DIM = 16, 3, 64
-
-
-def _staged_embeddings_dir(spark: SparkSession, sf_dir: str) -> str:
-    """embeddings(vec_id, embedding) staged as N parquet files (one
-    micro-batch each), fingerprint-cached like the other stagings. The
-    split need not be deterministic — per-cell sufficient statistics are
-    batching-invariant (integer sums commute)."""
-    stage = derived_cache_dir("counsel_stream_stage_emb", sf_dir, "embeddings")
-    if not os.path.exists(os.path.join(stage, "_SUCCESS")):
-        load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-        ).repartition(_N_FILES).write.mode("overwrite").parquet(stage)
-    return stage
 
 
 def _kmeans_cell_stats_oracle() -> str:
@@ -618,9 +515,7 @@ def _kmeans_cell_stats_oracle() -> str:
 )
 def streaming_kmeans_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from counsel_data_pipeline_spark.ops import similarity as sim
-    from counsel_data_pipeline_spark.streaming.kmeans import (
-        run_kmeans_cell_stats_stream,
-    )
+    from counsel_data_pipeline_spark.streaming.kmeans import cell_stats_stream
 
     emb = load_table(spark, sf_dir, "embeddings")
     grid = sim.kmeans_centroids_exact(
@@ -631,21 +526,22 @@ def streaming_kmeans_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids6 = [
         (int(r["__cid"]), [int(x) for x in r["__c6"]]) for r in grid.collect()
     ]
-    stage = _staged_embeddings_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="counsel_stream_kmeans_")
-    try:
-        out = run_kmeans_cell_stats_stream(
-            spark,
-            input_dir=stage,
-            work_dir=work,
-            schema="vec_id BIGINT, embedding ARRAY<DOUBLE>",
-            centroids6=centroids6,
+    # Per-cell sufficient statistics are integer sums, which commute, so
+    # the oracle is invariant to how vectors are batched.
+    vecs = emb.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+    stage = stage_batches(
+        _ntile(vecs, _N_FILES, "vec_id"),
+        derived_cache_dir("counsel_stream_stage_emb", sf_dir, "embeddings"),
+        _N_FILES,
+    )
+    stats = run_available_now(
+        cell_stats_stream(
+            read_batches(spark, "vec_id BIGINT, embedding ARRAY<DOUBLE>", stage),
+            centroids6,
         )
-        rows = out.collect()
-        schema = out.schema
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    stats = spark.createDataFrame(rows, schema)
+    )
     trained = spark.createDataFrame(
         [
             (cid, pos, int(v))
@@ -686,24 +582,17 @@ def _sessionize_stream_oracle() -> str:
 )
 def streaming_sessionize_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from counsel_data_pipeline_spark.streaming.sessionize import (
-        run_sessionize_stream,
+        compact_summaries,
+        sessionize_stateful,
     )
 
-    stage = _staged_ts_batches_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="counsel_stream_sess_")
-    try:
-        out = run_sessionize_stream(
-            spark,
-            input_dir=stage,
-            work_dir=work,
-            schema="event_id BIGINT, user_id BIGINT, ts TIMESTAMP",
-        )
-        rows = out.collect()
-        schema = out.schema
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema).select(
-        "user_id", "n_sessions", "max_session_events", "n_events"
+    stream = read_batches(
+        spark,
+        "event_id BIGINT, user_id BIGINT, ts TIMESTAMP",
+        _event_ranges(spark, sf_dir),
+    )
+    return compact_summaries(
+        run_available_now(sessionize_stateful(stream), "append")
     )
 
 
@@ -714,51 +603,6 @@ def streaming_sessionize_user_stats(spark: SparkSession, sf_dir: str) -> DataFra
 
 _WM_N_BATCHES = 6
 _WM_DELAY_HOURS = 24
-
-
-def _staged_late_batches_dir(spark: SparkSession, sf_dir: str) -> str:
-    """events staged as ascending (ts, event_id)-range micro-batch files
-    LIKE _staged_ts_batches_dir, except two deterministic row classes
-    arrive late: event_id % 7 == 0 rows two batches after their range
-    (far beyond the 24 h watermark -> always dropped) and event_id % 7
-    == 1 rows one batch late (only their trailing 24 h survives — the
-    mixed boundary that makes the watermark predicate observable)."""
-    import glob as _glob
-    import shutil as _shutil
-    import time as _time
-
-    from pyspark.sql import Window
-
-    stage = derived_cache_dir("counsel_stream_stage_late", sf_dir, "events")
-    marker = os.path.join(stage, "_STAGED")
-    if not os.path.exists(marker):
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_id", "ts", "value"
-        )
-        n = _WM_N_BATCHES
-        with_b = ev.withColumn(
-            "b0", F.ntile(n).over(Window.orderBy("ts", "event_id")) - 1
-        ).withColumn(
-            "b",
-            F.when(F.col("event_id") % 7 == 0, F.least(F.col("b0") + 2, F.lit(n - 1)))
-            .when(F.col("event_id") % 7 == 1, F.least(F.col("b0") + 1, F.lit(n - 1)))
-            .otherwise(F.col("b0")),
-        )
-        os.makedirs(stage, exist_ok=True)
-        now = _time.time()
-        for k in range(n):
-            tmp = os.path.join(stage, f"tmp{k}")
-            with_b.filter(F.col("b") == k).drop("b0", "b").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            src = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            dst = os.path.join(stage, f"{k:03d}.parquet")
-            os.replace(src, dst)
-            _shutil.rmtree(tmp)
-            os.utime(dst, (now + k, now + k))
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return stage
 
 
 def _watermark_late_oracle() -> str:
@@ -839,15 +683,27 @@ def streaming_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame
     BEFORE the shuffle, so a flood of ancient events costs a scan, not
     state. The staged arrival order makes the drop set deterministic,
     which is what lets a batch oracle attest a streaming-only behavior."""
-    from counsel_data_pipeline_spark.plans._parity import dec  # noqa: F401
-    from counsel_data_pipeline_spark.streaming.windows import run_available_now
-
-    stage = _staged_late_batches_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema("event_id BIGINT, ts TIMESTAMP, value DOUBLE")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
+    # Ascending (ts, event_id)-range batches, except two deterministic row
+    # classes that arrive late: event_id % 7 == 0 rows two batches after
+    # their range (far beyond the 24 h watermark, so always dropped) and
+    # event_id % 7 == 1 rows one batch late (only their trailing 24 h
+    # survives: the mixed boundary that makes the watermark predicate
+    # observable).
+    n = _WM_N_BATCHES
+    ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "value")
+    late = (
+        F.when(F.col("event_id") % 7 == 0, 2)
+        .when(F.col("event_id") % 7 == 1, 1)
+        .otherwise(0)
     )
+    stage = stage_batches(
+        _ntile(ev, n, "ts", "event_id").withColumn(
+            "b", F.least(F.col("b") + late, F.lit(n - 1))
+        ),
+        derived_cache_dir("counsel_stream_stage_late", sf_dir, "events"),
+        n,
+    )
+    stream = read_batches(spark, "event_id BIGINT, ts TIMESTAMP, value DOUBLE", stage)
     agg = (
         stream.withWatermark("ts", f"{_WM_DELAY_HOURS} hours")
         .groupBy(F.window("ts", "1 hour").alias("w"))
@@ -863,10 +719,7 @@ def streaming_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame
             "sum_value_mi",
         )
     )
-    out = run_available_now(agg, output_mode="append")
-    rows = out.collect()
-    schema = out.schema
-    return spark.createDataFrame(rows, schema)
+    return run_available_now(agg, "append")
 
 
 # ---------------------------------------------------------------------------
@@ -905,16 +758,9 @@ def streaming_static_join_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     COMPLETE mode is right because the key space is bounded; the
     watermarked APPEND twin (streaming_watermark_late_drop) covers the
     unbounded-key discipline."""
-    from counsel_data_pipeline_spark.streaming.windows import run_available_now
-
-    stage = _staged_ts_batches_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(
-            "event_id BIGINT, user_id BIGINT, ts TIMESTAMP, "
-            "event_type STRING, value DOUBLE"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
+    stream = read_batches(
+        spark, "user_id BIGINT, ts TIMESTAMP, value DOUBLE",
+        _event_ranges(spark, sf_dir),
     )
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
@@ -938,10 +784,7 @@ def streaming_static_join_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value_mi",
         )
     )
-    out = run_available_now(agg)  # complete mode
-    rows = out.collect()
-    schema = out.schema
-    return spark.createDataFrame(rows, schema)
+    return run_available_now(agg)  # complete mode
 
 
 # ---------------------------------------------------------------------------
@@ -963,15 +806,10 @@ def _click_purchase_streams(
     part than two independent sources over the same dir. Keeping this
     in one place keeps the twins (whose tests compare match sets)
     structurally identical."""
-    stage = _staged_ts_batches_dir(spark, sf_dir)
-    cols = (
-        "event_id BIGINT, user_id BIGINT, ts TIMESTAMP, "
-        "event_type STRING, value DOUBLE"
-    )
-    src_df = (
-        spark.readStream.schema(cols)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
+    src_df = read_batches(
+        spark,
+        "event_id BIGINT, user_id BIGINT, ts TIMESTAMP, event_type STRING",
+        _event_ranges(spark, sf_dir),
     )
     clicks = (
         src_df.filter(F.col("event_type") == "click")
@@ -1033,8 +871,6 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan runs with RocksDB state and more shuffle partitions, unchanged.
     Emission is on second-side arrival (inner join), so no result waits
     for the watermark — only eviction does."""
-    from counsel_data_pipeline_spark.streaming.windows import run_available_now
-
     clicks, purchases = _click_purchase_streams(spark, sf_dir)
     joined = purchases.join(
         clicks,
@@ -1048,10 +884,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_user").alias("user_id"),
         (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("gap_us"),
     )
-    out = run_available_now(joined, output_mode="append")
-    rows = out.collect()
-    schema = out.schema
-    return spark.createDataFrame(rows, schema)
+    return run_available_now(joined, "append")
 
 
 @register(
@@ -1118,8 +951,6 @@ def streaming_stream_stream_outer_join(
     emission is gated by the GLOBAL (min-policy) watermark across both
     sides, and the eviction predicate is strict — both probed at the
     boundary before this was registered."""
-    from counsel_data_pipeline_spark.streaming.windows import run_available_now
-
     clicks, purchases = _click_purchase_streams(spark, sf_dir)
     joined = clicks.join(
         purchases,
@@ -1134,10 +965,7 @@ def streaming_stream_stream_outer_join(
         "purchase_id",
         (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("gap_us"),
     )
-    out = run_available_now(joined, output_mode="append")
-    rows = out.collect()
-    schema = out.schema
-    return spark.createDataFrame(rows, schema)
+    return run_available_now(joined, "append")
 
 
 @register(
@@ -1200,65 +1028,6 @@ def streaming_python_source_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DD_N_BATCHES = 12
 _DD_DELAY_HOURS = 2
 _DD_FAR_HOURS = 250  # far-duplicate event-time offset (> 4 batch spans)
-
-
-def _staged_dup_batches_dir(spark: SparkSession, sf_dir: str) -> str:
-    """events staged as ascending (ts, event_id)-range micro-batch files
-    with three deterministic duplicate classes planted on the dedup key
-    (event_id): %10==0 an identical copy in the SAME batch (dropped by
-    within-batch state), %10==1 an identical copy one batch later
-    (dropped — the offset-log watermark lag keeps the key's state alive),
-    %10==2 a copy four batches later with event time shifted +250 h
-    (the key's state has expired by then -> RE-emitted; the shifted time
-    also keeps the copy above the watermark's late filter)."""
-    import glob as _glob
-    import time as _time
-
-    from pyspark.sql import Window
-
-    stage = derived_cache_dir("counsel_stream_stage_dup", sf_dir, "events")
-    marker = os.path.join(stage, "_STAGED")
-    if not os.path.exists(marker):
-        n = _DD_N_BATCHES
-        ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "value")
-        base = ev.withColumn(
-            "b", F.ntile(n).over(Window.orderBy("ts", "event_id")) - 1
-        )
-        dup_same = base.filter(F.col("event_id") % 10 == 0)
-        dup_next = base.filter(F.col("event_id") % 10 == 1).withColumn(
-            "b", F.least(F.col("b") + 1, F.lit(n - 1))
-        )
-        dup_far = (
-            base.filter(F.col("event_id") % 10 == 2)
-            .withColumn("b", F.least(F.col("b") + 4, F.lit(n - 1)))
-            .withColumn("ts", F.col("ts") + F.expr(f"INTERVAL {_DD_FAR_HOURS} HOURS"))
-        )
-        # persisted: the lineage contains a single-partition global
-        # ntile sort, and the per-batch writes below would otherwise
-        # re-execute it once per staged batch (n times)
-        allrows = (
-            base.unionByName(dup_same)
-            .unionByName(dup_next)
-            .unionByName(dup_far)
-        ).persist()
-        os.makedirs(stage, exist_ok=True)
-        now = _time.time()
-        try:
-            for k in range(n):
-                tmp = os.path.join(stage, f"tmp{k}")
-                allrows.filter(F.col("b") == k).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(tmp)
-                src = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-                dst = os.path.join(stage, f"{k:03d}.parquet")
-                os.replace(src, dst)
-                shutil.rmtree(tmp)
-                os.utime(dst, (now + k, now + k))
-        finally:
-            allrows.unpersist()
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return stage
 
 
 def _dropdup_wm_oracle() -> str:
@@ -1363,21 +1132,38 @@ def streaming_dropdup_within_watermark(
     scan (filtered before the state lookup). The emitted set is folded
     per (duplicate class, arrival batch) so every drop AND re-emit
     boundary lands in the hash."""
-    from counsel_data_pipeline_spark.streaming.windows import run_available_now
-
-    stage = _staged_dup_batches_dir(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(
-            "event_id BIGINT, ts TIMESTAMP, value DOUBLE, b INT"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
+    # Ascending (ts, event_id)-range batches with three deterministic
+    # duplicate classes planted on the dedup key (event_id): %10==0 an
+    # identical copy in the SAME batch (dropped by within-batch state),
+    # %10==1 an identical copy one batch later (dropped: the offset-log
+    # watermark lag keeps the key's state alive), %10==2 a copy four
+    # batches later with event time shifted +250 h (the key's state has
+    # expired by then, so it is RE-emitted; the shifted time also keeps
+    # the copy above the watermark's late filter).
+    n = _DD_N_BATCHES
+    ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "value")
+    base = _ntile(ev, n, "ts", "event_id")
+    dup_same = base.filter(F.col("event_id") % 10 == 0)
+    dup_next = base.filter(F.col("event_id") % 10 == 1).withColumn(
+        "b", F.least(F.col("b") + 1, F.lit(n - 1))
+    )
+    dup_far = (
+        base.filter(F.col("event_id") % 10 == 2)
+        .withColumn("b", F.least(F.col("b") + 4, F.lit(n - 1)))
+        .withColumn("ts", F.col("ts") + F.expr(f"INTERVAL {_DD_FAR_HOURS} HOURS"))
+    )
+    stage = stage_batches(
+        base.unionByName(dup_same).unionByName(dup_next).unionByName(dup_far),
+        derived_cache_dir("counsel_stream_stage_dup", sf_dir, "events"),
+        n,
+    )
+    stream = read_batches(
+        spark, "event_id BIGINT, ts TIMESTAMP, value DOUBLE, b INT", stage
     )
     deduped = stream.withWatermark(
         "ts", f"{_DD_DELAY_HOURS} hours"
     ).dropDuplicatesWithinWatermark(["event_id"])
-    out = run_available_now(deduped, output_mode="append")
-    agg = out.groupBy(
+    return run_available_now(deduped, "append").groupBy(
         (F.col("event_id") % 10).cast("bigint").alias("dup_class"),
         F.col("b").cast("int").alias("b"),
     ).agg(
@@ -1389,8 +1175,6 @@ def streaming_dropdup_within_watermark(
         .cast("bigint")
         .alias("ts_checksum"),
     )
-    rows = agg.collect()
-    return spark.createDataFrame(rows, agg.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1427,65 +1211,47 @@ def streaming_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     only unconsumed files; aggregate state round-trips through the
     checkpoint. The two-phase copy makes the recovery observable: phase
     2's numInputRows is asserted == the new files' rows, so a silent
-    full-replay (which would double-count into the memory sink's
-    complete-mode output) or an offset loss fails loudly rather than
-    flipping the hash."""
-    import glob as _glob
-    import uuid as _uuid
-
+    full-replay (which would double-count into the complete-mode
+    state) or an offset loss fails loudly rather than flipping the
+    hash."""
     files = sorted(
-        _glob.glob(os.path.join(_staged_ts_batches_dir(spark, sf_dir), "*.parquet"))
+        glob.glob(os.path.join(_event_ranges(spark, sf_dir), "*.parquet"))
     )
     live = tempfile.mkdtemp(prefix="ckpt_restart_live_")
     ckpt = tempfile.mkdtemp(prefix="ckpt_restart_ckpt_")
-    half = len(files) // 2
-
-    def _run_once() -> tuple[DataFrame, int]:
-        stream = spark.readStream.schema(
-            "event_id BIGINT, user_id BIGINT, ts TIMESTAMP, "
-            "event_type STRING, value DOUBLE"
-        ).parquet(live)
-        agg = stream.groupBy("event_type").agg(
+    agg = (
+        read_batches(spark, "event_type STRING, value DOUBLE", live)
+        .groupBy("event_type")
+        .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
             F.sum(F.expr("CAST(round(value * 1000000) AS BIGINT)"))
             .cast("bigint")
             .alias("sum_value_mi"),
         )
-        name = f"q_{_uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    )
+    state: dict = {}
+
+    def keep(batch: DataFrame, _: int) -> None:
+        # complete mode: every batch carries the whole event-type-sized state
+        state["rows"], state["schema"] = batch.collect(), batch.schema
+
+    def phase(paths: list[str], what: str) -> None:
+        for f in paths:
+            shutil.copy2(f, live)
+        q = run_available_now(agg, "complete", handler=keep, checkpoint=ckpt)
         n_in = sum(int(p["numInputRows"]) for p in q.recentProgress)
-        return spark.table(name), n_in
+        exp = spark.read.parquet(*paths).count()
+        if n_in != exp:
+            raise RuntimeError(f"{what} read {n_in} rows, expected exactly {exp}")
 
-    def _expected(paths: list[str]) -> int:
-        return spark.read.parquet(*paths).count()
-
-    for f in files[:half]:
-        shutil.copy2(f, live)
-    _, n1 = _run_once()
-    exp1 = _expected(files[:half])
-    if n1 != exp1:
-        raise RuntimeError(f"phase 1 read {n1} rows, staged {exp1}")
-
-    for f in files[half:]:
-        shutil.copy2(f, live)
-    out, n2 = _run_once()
-    exp2 = _expected(files[half:])
-    if n2 != exp2:
-        raise RuntimeError(
-            f"restart read {n2} rows, expected exactly the {exp2} new ones"
-        )
-    rows = out.collect()
-    shutil.rmtree(live, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.createDataFrame(rows, out.schema)
+    half = len(files) // 2
+    try:
+        phase(files[:half], "phase 1")
+        phase(files[half:], "restart")
+    finally:
+        shutil.rmtree(live, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return spark.createDataFrame(state["rows"], state["schema"])
 
 
 # ---------------------------------------------------------------------------
@@ -1564,23 +1330,12 @@ def streaming_closed_sessions_timeout(spark: SparkSession, sf_dir: str) -> DataF
     attests. Timer semantics (ms truncation, strict compare, no-data
     final batch) are pinned by tests/test_r16_ops.py."""
     from counsel_data_pipeline_spark.streaming.timeout_sessions import (
-        run_closed_sessions_stream,
+        closed_sessions_stateful,
     )
 
-    stage = _staged_ts_batches_dir(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="counsel_stream_close_")
-    try:
-        out = run_closed_sessions_stream(
-            spark,
-            input_dir=stage,
-            work_dir=work,
-            schema="user_id BIGINT, ts TIMESTAMP",
-            gap_s=_TS_GAP_S,
-        )
-        rows = out.collect()
-        schema = out.schema
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(rows, schema).select(
-        "user_id", "session_start_s", "session_end_s", "n_events"
+    stream = read_batches(
+        spark, "user_id BIGINT, ts TIMESTAMP", _event_ranges(spark, sf_dir)
     )
+    return run_available_now(
+        closed_sessions_stateful(stream, gap_s=_TS_GAP_S), "append"
+    ).drop("close_reason")

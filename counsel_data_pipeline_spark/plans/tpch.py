@@ -45,15 +45,10 @@ def _disc_price(price: str = "l_extendedprice", disc: str = "l_discount") -> F.C
     return F.col(price).cast(P) * (F.lit(1).cast(R) - F.col(disc).cast(R))
 
 
-def _charge() -> F.Column:
-    return _disc_price() * (F.lit(1).cast(R) + F.col("l_tax").cast(R))
-
-
 _SQL_DISC_PRICE = (
     "CAST(l_extendedprice AS DECIMAL(18,6))"
     " * (CAST(1 AS DECIMAL(8,6)) - CAST(l_discount AS DECIMAL(8,6)))"
 )
-_SQL_CHARGE = f"{_SQL_DISC_PRICE} * (CAST(1 AS DECIMAL(8,6)) + CAST(l_tax AS DECIMAL(8,6)))"
 
 
 # ---------------------------------------------------------------------------

@@ -27,7 +27,7 @@ from __future__ import annotations
 from typing import Any, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 STATE_SCHEMA = "hist array<bigint>"
@@ -102,36 +102,3 @@ def ewma_stateful(events: DataFrame, weights: list[int]) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def run_ewma_stream(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    schema: str,
-    weights: list[int],
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
-    """Execute the stateful EWMA over a staged file stream with
-    Trigger.AvailableNow and return the accumulated output (read back
-    from the parquet sink)."""
-    import os
-
-    out_dir = os.path.join(work_dir, "out")
-    ckpt = os.path.join(work_dir, "ckpt")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    q = (
-        ewma_stateful(stream, weights)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.schema(OUT_SCHEMA).parquet(out_dir)

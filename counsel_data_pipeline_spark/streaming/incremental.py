@@ -6,8 +6,7 @@ the batch operator already generates only (new × existing) and
 (new × lower-id new) candidates, which is exactly the per-micro-batch
 work unit. ``foreachBatch`` supplies the loop: read the persisted corpus
 store, judge the batch, append verdicts, grow the store. State between
-batches lives in parquet (at scale: the persisted signature store), so a
-restart resumes from the last committed batch via the checkpoint.
+batches lives in parquet (at scale: the persisted signature store).
 """
 
 from __future__ import annotations
@@ -21,6 +20,10 @@ from counsel_data_pipeline_spark.ops.text_dedup import (
     build_dedup_store,
     incremental_dedup_against_store,
 )
+from counsel_data_pipeline_spark.streaming.microbatch import (
+    read_batches,
+    run_available_now,
+)
 
 
 def run_incremental_dedup_stream(
@@ -30,16 +33,14 @@ def run_incremental_dedup_stream(
     schema: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_files_per_trigger: int = 1,
     **dedup_kwargs,
 ) -> DataFrame:
     """Process every parquet file in ``input_dir`` as its own micro-batch
-    (Trigger.AvailableNow honors ``maxFilesPerTrigger``), dedup each batch
+    (streaming/microbatch.read_batches), dedup each batch
     against the accumulated corpus, and return the verdict table
     (doc_id, verdict, dup_of, batch_id)."""
     store_dir = os.path.join(work_dir, "store")
     verdict_dir = os.path.join(work_dir, "verdicts")
-    checkpoint = os.path.join(work_dir, "checkpoint")
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.select(id_col, text_col)
@@ -71,16 +72,5 @@ def run_incremental_dedup_stream(
             store.unpersist()
             new_store.unpersist()
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(read_batches(spark, schema, input_dir), handler=handle)
     return spark.read.parquet(verdict_dir)

@@ -30,9 +30,7 @@ the vector stream itself never reshuffles.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -91,35 +89,3 @@ def cell_stats_stream(
         F.count(F.lit(1)).cast("bigint").alias("n_vecs"),
         F.sum("val").cast("bigint").alias("sum_v6"),
     )
-
-
-def run_kmeans_cell_stats_stream(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    schema: str,
-    centroids6: list[tuple[int, list[int]]],
-    vec_col: str = "embedding",
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
-    """Execute the cell-stats maintainer over a staged file stream with
-    Trigger.AvailableNow; COMPLETE mode into a memory sink (the state is
-    n_centroids × dim rows — bounded by construction, never data-sized)."""
-    ckpt = os.path.join(work_dir, "ckpt")
-    qname = "kmeans_cells_" + os.path.basename(work_dir).replace("-", "_")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    q = (
-        cell_stats_stream(stream, centroids6, vec_col=vec_col)
-        .writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(qname)

@@ -9,9 +9,8 @@ exponential-race keys over an unbounded stream. The key
 
 — each micro-batch folds its local top-k against the persisted
 reservoir; no batch ever needs the others' raw rows. State between
-batches is the k-row reservoir in parquet (dated per batch, restart
-resumes from the checkpoint's last committed batch), which is the same
-store-not-recompute shape as the incremental-dedup signature store.
+batches is the k-row reservoir in parquet (dated per batch), which is
+the same store-not-recompute shape as the incremental-dedup signature store.
 
 At scale: per-batch cost is one scan of the batch + TakeOrdered k; the
 reservoir is k rows regardless of stream length. Replays within the
@@ -27,6 +26,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from counsel_data_pipeline_spark.ops.curation import es_sample_key
+from counsel_data_pipeline_spark.streaming.microbatch import (
+    read_batches,
+    run_available_now,
+)
 
 
 def run_weighted_sample_stream(
@@ -39,13 +42,11 @@ def run_weighted_sample_stream(
     id_col: str = "doc_id",
     weight_col: str = "n_chars",
     carry_cols: tuple[str, ...] = ("source",),
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Run an AvailableNow stream over the parquet files in ``input_dir``
     (one micro-batch per file) and return the final k-row reservoir
     (id, carry_cols..., weight, es_key)."""
     reservoir_root = os.path.join(work_dir, "reservoir")
-    checkpoint = os.path.join(work_dir, "checkpoint")
     out_cols = [id_col, *carry_cols, weight_col, "es_key"]
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
@@ -94,18 +95,7 @@ def run_weighted_sample_stream(
             os.path.join(reservoir_root, f"batch={batch_id}")
         )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_available_now(read_batches(spark, schema, input_dir), handler=handle)
     res = spark.read.parquet(reservoir_root)
     last = res.agg(F.max("batch")).collect()[0][0]
     return res.where(F.col("batch") == last).select(*out_cols)

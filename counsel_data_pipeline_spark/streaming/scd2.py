@@ -39,7 +39,7 @@ from __future__ import annotations
 from typing import Any, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -154,38 +154,4 @@ def compact_changelog(changelog: DataFrame) -> DataFrame:
             "valid_to_s",
             F.col("valid_to_s").isNull().alias("is_current"),
         )
-    )
-
-
-def run_scd2_stream(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    schema: str,
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
-    """Execute the stateful SCD2 builder over a staged file stream with
-    Trigger.AvailableNow, then compact the appended upsert changelog into
-    the dimension view."""
-    import os
-
-    out_dir = os.path.join(work_dir, "out")
-    ckpt = os.path.join(work_dir, "ckpt")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    q = (
-        scd2_stateful(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return compact_changelog(
-        spark.read.schema(CHANGELOG_SCHEMA).parquet(out_dir)
     )

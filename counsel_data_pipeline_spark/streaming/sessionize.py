@@ -27,11 +27,10 @@ by user across shuffle partitions.
 
 from __future__ import annotations
 
-import os
 from typing import Any, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -124,33 +123,3 @@ def compact_summaries(changelog: DataFrame) -> DataFrame:
         F.col("s.max_session_events").alias("max_session_events"),
         F.col("s.n_events").alias("n_events"),
     )
-
-
-def run_sessionize_stream(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    schema: str,
-    gap_s: int = 1800,
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
-    """Execute the stateful sessionizer over a staged file stream with
-    Trigger.AvailableNow, then compact the summary changelog."""
-    out_dir = os.path.join(work_dir, "out")
-    ckpt = os.path.join(work_dir, "ckpt")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    q = (
-        sessionize_stateful(stream, gap_s=gap_s)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return compact_summaries(spark.read.schema(OUT_SCHEMA).parquet(out_dir))

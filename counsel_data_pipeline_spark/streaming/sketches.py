@@ -17,12 +17,12 @@ arithmetic on a DataFrame.
 from __future__ import annotations
 
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from counsel_data_pipeline_spark.ops.sketches import cms_build
+from counsel_data_pipeline_spark.streaming.microbatch import run_available_now
 
 
 def run_cms_stream(
@@ -31,16 +31,12 @@ def run_cms_stream(
     depth: int = 4,
     width: int = 64,
     partials_path: str | None = None,
-    checkpoint_path: str | None = None,
 ) -> str:
     """Consume a streaming DataFrame with Trigger.AvailableNow, writing one
     CMS partial (depth×width counters) per micro-batch. Returns the
     partials path (an append-only parquet log of (batch_id, seed, bucket,
-    cnt) — at real scale, a tiny keyed table). Pass ``checkpoint_path``
-    to keep the checkpoint inside a caller-owned scratch dir (so the
-    caller's cleanup removes it)."""
+    cnt) — at real scale, a tiny keyed table)."""
     out = partials_path or tempfile.mkdtemp(prefix="cms_partials_")
-    ckpt = checkpoint_path or tempfile.mkdtemp(prefix="ckpt_cms_")
 
     def write_partial(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -50,14 +46,7 @@ def run_cms_stream(
             .parquet(out)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(write_partial)
-        .queryName(f"cms_{uuid.uuid4().hex[:8]}")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(stream, handler=write_partial)
     return out
 
 

@@ -29,11 +29,10 @@ timed-out state is removed, so idle users cost nothing after one gap.
 
 from __future__ import annotations
 
-import os
 from typing import Any, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -120,31 +119,3 @@ def _out_cols() -> list[str]:
     return [
         "user_id", "session_start_s", "session_end_s", "n_events", "close_reason",
     ]
-
-
-def run_closed_sessions_stream(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    schema: str,
-    gap_s: int = 1800,
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
-    out_dir = os.path.join(work_dir, "out")
-    ckpt = os.path.join(work_dir, "ckpt")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    q = (
-        closed_sessions_stateful(stream, gap_s=gap_s)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.schema(OUT_SCHEMA).parquet(out_dir)

@@ -1,7 +1,8 @@
 """Structured Streaming surface (SURVEY §2.10 + north-star streaming).
 
 The reference's 'streaming' is a cron micro-batch (Trigger.AvailableNow is
-the exact Spark analog, SURVEY T4); on top of that, this module provides
+the exact Spark analog, SURVEY T4, run by streaming/microbatch.py); on
+top of that, this module provides
 the event-time operators Spark adds for free: watermarked tumbling/sliding
 window aggregation and gap-based session windows — each the streaming twin
 of a batch plan in plans/events.py (tests assert batch ≡ stream on the
@@ -15,8 +16,6 @@ store partitioning follows spark.sql.shuffle.partitions.
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -113,30 +112,6 @@ def session_windows_30m(events: DataFrame, watermark: str = "2 hours") -> DataFr
             "session_events",
         )
     )
-
-
-def run_available_now(
-    result: DataFrame, name: str | None = None, output_mode: str | None = None
-) -> DataFrame:
-    """Execute a streaming DataFrame with Trigger.AvailableNow (the
-    reference's cron-batch semantics, T4) into a memory sink and return the
-    materialized result as a batch DataFrame.
-
-    ``output_mode`` defaults to ``complete`` (windowed aggregations);
-    append-only operators (e.g. applyInPandasWithState with append mode)
-    must pass ``append``."""
-    name = name or f"q_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
-    q = (
-        result.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode or "complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return result.sparkSession.table(name)
 
 
 def sliding_6h_daily(events: DataFrame, watermark: str = "2 hours") -> DataFrame:

@@ -20,3 +20,17 @@ def spark():
     os.environ["PYTHONPATH"] = f"{extra}{os.pathsep}{prev}" if prev else extra
     s = get_spark("pytest")
     yield s
+
+
+@pytest.fixture
+def stage_rows(spark, tmp_path):
+    """Stage row lists as micro-batch files, one file per list, in order:
+    ``stage_rows(batches, "x bigint, ...", sub="in")`` returns the dir."""
+    from counsel_data_pipeline_spark.streaming.microbatch import stage_batches
+
+    def stage(batches, schema, sub="in"):
+        rows = [(b, *r) for b, rs in enumerate(batches) for r in rs]
+        frame = spark.createDataFrame(rows, f"b int, {schema}")
+        return stage_batches(frame, str(tmp_path / sub), len(batches))
+
+    return stage

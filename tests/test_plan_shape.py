@@ -194,7 +194,20 @@ def test_distributed_quartiles_have_no_single_partition_funnel(spark):
     assert "SinglePartition" in glob
 
 
-def test_catalog_fleet_plan_audit(spark):
+@pytest.fixture(scope="module")
+def catalog_plans(spark):
+    """Every catalog query's DataFrame, built once for both fleet-wide
+    audits. Each physical plan is forced right after its build, so it is
+    planned under the session state that build left, as a build-and-plan
+    loop would."""
+    plans = {}
+    for name, q in all_queries().items():
+        plans[name] = q.fn(spark, SF)
+        plans[name]._jdf.queryExecution().executedPlan()
+    return plans
+
+
+def test_catalog_fleet_plan_audit(catalog_plans):
     """Fleet-wide scale audit over EVERY catalog query's physical plan
     (pre-AQE): no CartesianProduct anywhere, no unpartitioned Window
     (the every-row-through-one-task shape) outside the explicit
@@ -215,8 +228,8 @@ def test_catalog_fleet_plan_audit(spark):
             yield from walk(node.children().apply(i))
 
     bad = {}
-    for name, q in all_queries().items():
-        plan = q.fn(spark, SF)._jdf.queryExecution().sparkPlan()
+    for name, df in catalog_plans.items():
+        plan = df._jdf.queryExecution().sparkPlan()
         issues = []
         for node in walk(plan):
             nn = node.nodeName()
@@ -244,7 +257,7 @@ def test_catalog_fleet_plan_audit(spark):
     assert not bad, f"scale anti-patterns: {bad}"
 
 
-def test_catalog_fact_scan_budget(spark):
+def test_catalog_fact_scan_budget(catalog_plans):
     """Fleet-wide I/O budget: no query's FINAL plan may scan the same
     FACT table more than twice (self-joins and sketch-vs-exact twins are
     two passes; anything above that is a consumer re-deriving a shared
@@ -289,10 +302,10 @@ def test_catalog_fact_scan_budget(spark):
         ("dedup_levenshtein_blocked", "documents.parquet"),
     }
     bad = {}
-    for name, q in all_queries().items():
+    for name, df in catalog_plans.items():
         if name.startswith(SKIP_PREFIXES):
             continue  # write-path / stateful surfaces audited elsewhere
-        for t, n in scan_counts(spark, q.fn, SF).items():
+        for t, n in scan_counts(df).items():
             if t in fact_tables and n > 2 and (name, t) not in allow:
                 bad[(name, t)] = n
     assert not bad, f"fact tables scanned >2x in one plan: {bad}"

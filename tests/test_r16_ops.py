@@ -7,10 +7,6 @@ AvailableNow no-data batch) are pinned at the 1 ms boundary.
 """
 
 import datetime
-import glob
-import os
-import shutil
-import time
 
 import pyspark.sql.functions as F
 from pyspark.sql import Window
@@ -19,38 +15,25 @@ SF_DIR = "/root/testdata/sf0.001"
 GAP_S = 1800
 
 
-def _stage(spark, tmp_path, batches):
-    """Stage rows as one parquet file per batch with ascending mtimes —
-    the event-time-ordered arrival the registered staging guarantees."""
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    now = time.time()
-    for i, rows in enumerate(batches):
-        tmp = tmp_path / f"tmp{i}"
-        spark.createDataFrame(
-            rows, "user_id bigint, ts timestamp"
-        ).coalesce(1).write.mode("overwrite").parquet(str(tmp))
-        src = glob.glob(str(tmp / "part-*.parquet"))[0]
-        dst = in_dir / f"b{i}.parquet"
-        os.replace(src, str(dst))
-        shutil.rmtree(tmp)
-        os.utime(dst, (now + 10 * i, now + 10 * i))
-    return str(in_dir)
-
-
-def _run(spark, tmp_path, batches):
+def _run(spark, stage_rows, batches):
+    """Stage rows as one micro-batch file per batch — the event-time-
+    ordered arrival the registered staging guarantees — and return the
+    closed sessions' (user, reason) pairs."""
+    from counsel_data_pipeline_spark.streaming.microbatch import (
+        read_batches,
+        run_available_now,
+    )
     from counsel_data_pipeline_spark.streaming.timeout_sessions import (
-        run_closed_sessions_stream,
+        closed_sessions_stateful,
     )
 
-    out = run_closed_sessions_stream(
-        spark, _stage(spark, tmp_path, batches), str(tmp_path / "work"),
-        schema="user_id bigint, ts timestamp", gap_s=GAP_S,
-    )
+    schema = "user_id bigint, ts timestamp"
+    stream = read_batches(spark, schema, stage_rows(batches, schema))
+    out = run_available_now(closed_sessions_stateful(stream, gap_s=GAP_S), "append")
     return sorted((r.user_id, r.close_reason) for r in out.collect())
 
 
-def test_timer_boundary_equal_deadline_does_not_fire(spark, tmp_path):
+def test_timer_boundary_equal_deadline_does_not_fire(spark, stage_rows):
     """deadline_ms == final watermark_ms -> NOT fired (strict compare),
     with both sides carrying sub-millisecond components that truncation
     must drop: last event at +500us (deadline floor-ms = gap_ms), final
@@ -58,20 +41,20 @@ def test_timer_boundary_equal_deadline_does_not_fire(spark, tmp_path):
     t0 = datetime.datetime(2024, 1, 1, 8, 0, 0)
     us = lambda x: t0 + datetime.timedelta(microseconds=x)
     got = _run(
-        spark, tmp_path,
+        spark, stage_rows,
         [[(1, us(500))], [(9, us(GAP_S * 1_000_000 + 999))]],
     )
     assert got == []  # both sessions still open: nothing emitted
 
 
-def test_timer_boundary_one_ms_below_fires(spark, tmp_path):
+def test_timer_boundary_one_ms_below_fires(spark, stage_rows):
     """deadline_ms == final watermark_ms - 1 -> fired in the no-data
     batch: same staging, final event one micro-second later so its
     floor-ms crosses to gap_ms + 1."""
     t0 = datetime.datetime(2024, 1, 1, 8, 0, 0)
     us = lambda x: t0 + datetime.timedelta(microseconds=x)
     got = _run(
-        spark, tmp_path,
+        spark, stage_rows,
         [[(1, us(500))], [(9, us(GAP_S * 1_000_000 + 1000))]],
     )
     assert got == [(1, "timeout")]

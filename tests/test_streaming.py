@@ -3,11 +3,21 @@ aggregations must produce exactly the batch plans' results when run with
 Trigger.AvailableNow over the same files (the reference's cron-micro-batch
 execution model, SURVEY §2.10 T4)."""
 
+import os
+import tempfile
+
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from counsel_data_pipeline_spark.catalog import all_queries
+from counsel_data_pipeline_spark.io.sources import load_table
 from counsel_data_pipeline_spark.streaming import windows as sw
+from counsel_data_pipeline_spark.streaming.microbatch import (
+    read_batches,
+    run_available_now,
+    stage_batches,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -19,7 +29,7 @@ def _rows(df, cols):
 def test_stream_tumbling_equals_batch(spark):
     stream = sw.stream_events(spark, SF)
     assert stream.isStreaming
-    result = sw.run_available_now(sw.tumbling_hourly(stream))
+    result = run_available_now(sw.tumbling_hourly(stream))
 
     batch = all_queries()["events_tumbling_hourly"].fn(spark, SF)
     cols = ["hour_start", "event_type", "n_events", "sum_value"]
@@ -28,7 +38,7 @@ def test_stream_tumbling_equals_batch(spark):
 
 def test_stream_session_windows(spark):
     stream = sw.stream_events(spark, SF)
-    result = sw.run_available_now(sw.session_windows_30m(stream))
+    result = run_available_now(sw.session_windows_30m(stream))
     rows = result.collect()
     assert len(rows) > 0
     # Per-user session event counts must total the per-user event counts.
@@ -43,7 +53,6 @@ def test_stream_session_windows(spark):
 
 
 def test_stateful_first_seen_dedup_matches_batch(spark):
-    from counsel_data_pipeline_spark.io.sources import load_table
     from counsel_data_pipeline_spark.ops.dedup import first_wins
     from counsel_data_pipeline_spark.streaming import stateful, windows
 
@@ -51,7 +60,7 @@ def test_stateful_first_seen_dedup_matches_batch(spark):
     stream = stateful.first_seen_filter(
         windows.stream_events(spark, sf), key_cols=["user_id", "event_type"]
     )
-    got = windows.run_available_now(stream, "first_seen", output_mode="append")
+    got = run_available_now(stream, "append")
     got_rows = {
         (r.user_id, r.event_type): r.event_id for r in got.collect()
     }
@@ -67,8 +76,7 @@ def test_stateful_first_seen_dedup_matches_batch(spark):
 def test_stream_sliding_equals_batch(spark):
     batch = all_queries()["events_sliding_6h_daily"].fn(spark, SF)
     stream = sw.sliding_6h_daily(sw.stream_events(spark, SF))
-    got = _rows(sw.run_available_now(stream, "sliding6h"),
-                ["win_start", "n_events", "sum_value"])
+    got = _rows(run_available_now(stream), ["win_start", "n_events", "sum_value"])
     exp = _rows(batch, ["win_start", "n_events", "sum_value"])
     assert got == exp and len(got) > 50
 
@@ -76,8 +84,6 @@ def test_stream_sliding_equals_batch(spark):
 def test_stream_static_join_matches_batch(spark):
     """Stream-static dimension enrichment: streamed result ≡ the same plan
     over the batch reader."""
-    from counsel_data_pipeline_spark.io.sources import load_table
-
     user_dim = (
         load_table(spark, SF, "events")
         .select("user_id")
@@ -87,10 +93,7 @@ def test_stream_static_join_matches_batch(spark):
     stream = sw.stream_events(spark, SF)
     cols = ["hour_start", "tier", "n_events"]
     got = _rows(
-        sw.run_available_now(
-            sw.stream_static_enriched_hourly(stream, user_dim), "stream_static"
-        ),
-        cols,
+        run_available_now(sw.stream_static_enriched_hourly(stream, user_dim)), cols
     )
     batch_events = load_table(spark, SF, "events")
     want = _rows(sw.stream_static_enriched_hourly(batch_events, user_dim), cols)
@@ -100,8 +103,6 @@ def test_stream_static_join_matches_batch(spark):
 def test_stream_dedup_within_watermark_removes_replays(spark, tmp_path):
     """A source that delivered every file twice (at-least-once replay) must
     come out exactly-once after watermark-bounded streaming dedup."""
-    from counsel_data_pipeline_spark.io.sources import load_table
-
     events = load_table(spark, SF, "events")
     dup_dir = str(tmp_path / "dup_events")
     events.write.mode("overwrite").parquet(dup_dir)
@@ -109,9 +110,7 @@ def test_stream_dedup_within_watermark_removes_replays(spark, tmp_path):
 
     schema = "event_id bigint, ts timestamp, user_id bigint, event_type string, value double, props string"
     stream = spark.readStream.schema(schema).parquet(dup_dir)
-    deduped = sw.run_available_now(
-        sw.stream_dedup_within_watermark(stream), "dedup_wm", output_mode="append"
-    )
+    deduped = run_available_now(sw.stream_dedup_within_watermark(stream), "append")
     assert deduped.count() == events.count()
     assert deduped.select("event_id").distinct().count() == events.count()
 
@@ -119,7 +118,6 @@ def test_stream_dedup_within_watermark_removes_replays(spark, tmp_path):
 def test_stream_stream_join_matches_batch(spark):
     """Watermarked stream-stream join (purchases x preceding clicks within
     10 min) must equal the identical batch join."""
-    from counsel_data_pipeline_spark.io.sources import load_table
 
     def split(df):
         return (
@@ -128,8 +126,8 @@ def test_stream_stream_join_matches_batch(spark):
         )
 
     s = sw.stream_events(spark, SF)
-    got_df = sw.run_available_now(
-        sw.stream_stream_click_purchase_join(*split(s)), "ss_join", output_mode="append"
+    got_df = run_available_now(
+        sw.stream_stream_click_purchase_join(*split(s)), "append"
     )
     cols = ["purchase_id", "user_id", "purchase_ts_s", "click_ts_s"]
     got = _rows(got_df, cols)
@@ -140,46 +138,28 @@ def test_stream_stream_join_matches_batch(spark):
     assert got == want
 
 
-def test_streaming_incremental_dedup_across_batches(spark, tmp_path):
+def test_streaming_incremental_dedup_across_batches(spark, stage_rows, tmp_path):
     """Three micro-batches of documents, duplicates planted across batch
     boundaries: a doc repeating an EARLIER batch's doc must come back
     exact_existing (the store remembers), a doc repeating its own batch
     exact_new, and order of arrival — not doc_id — decides who is 'existing'."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from counsel_data_pipeline_spark.streaming.incremental import (
         run_incremental_dedup_stream,
     )
 
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    mk = lambda rows: pa.table(
-        {"doc_id": pa.array([r[0] for r in rows], pa.int64()),
-         "text": pa.array([r[1] for r in rows], pa.string())}
+    in_dir = stage_rows(
+        [
+            [(10, "alpha beta gamma delta"), (11, "one two three four")],
+            [(20, "alpha beta gamma delta"),        # dup of batch-0 #10
+             (21, "five six seven eight"),
+             (22, "five six seven eight")],         # dup of same-batch #21
+            [(5, "one two three four"),             # LOWER id, later arrival
+             (30, "nine ten eleven twelve")],
+        ],
+        "doc_id long, text string",
     )
-    # The file source orders micro-batches by MODIFICATION TIME; three
-    # files written within the same millisecond tie nondeterministically
-    # (observed: b1/b2 swapping under load). Pin distinct mtimes so the
-    # batch order b0 → b1 → b2 is guaranteed.
-    import os
-    import time
-
-    now = time.time()
-    pq.write_table(mk([(10, "alpha beta gamma delta"), (11, "one two three four")]),
-                   in_dir / "b0.parquet")
-    pq.write_table(mk([(20, "alpha beta gamma delta"),        # dup of batch-0 #10
-                       (21, "five six seven eight"),
-                       (22, "five six seven eight")]),        # dup of same-batch #21
-                   in_dir / "b1.parquet")
-    pq.write_table(mk([(5, "one two three four"),             # LOWER id, later arrival
-                       (30, "nine ten eleven twelve")]),
-                   in_dir / "b2.parquet")
-    for i, f in enumerate(["b0.parquet", "b1.parquet", "b2.parquet"]):
-        os.utime(in_dir / f, (now + 10 * i, now + 10 * i))
-
     out = run_incremental_dedup_stream(
-        spark, str(in_dir), str(tmp_path / "work"),
+        spark, in_dir, str(tmp_path / "work"),
         schema="doc_id long, text string",
     )
     rows = {r["doc_id"]: r for r in out.collect()}
@@ -230,9 +210,6 @@ def test_streaming_weighted_sample_equals_batch(spark, tmp_path):
     """Split the sf0.001 documents into three micro-batch files: the
     streaming reservoir must equal the batch A-ES top-k over the union —
     the pure-row-function key makes top-k mergeable across batches."""
-    import os
-    import time
-
     from counsel_data_pipeline_spark.ops.curation import es_sample_key
     from counsel_data_pipeline_spark.streaming.sampling import (
         run_weighted_sample_stream,
@@ -241,19 +218,14 @@ def test_streaming_weighted_sample_equals_batch(spark, tmp_path):
     docs = spark.read.parquet(f"{SF}/documents.parquet").select(
         "doc_id", "source", "n_chars"
     )
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    now = time.time()
-    for i, frac in enumerate([(0, 17), (17, 34), (34, 10**9)]):
-        part = docs.where(
-            (F.col("doc_id") >= frac[0]) & (F.col("doc_id") < frac[1])
-        )
-        part.toPandas().to_parquet(in_dir / f"b{i}.parquet", index=False)
-        os.utime(in_dir / f"b{i}.parquet", (now + 10 * i, now + 10 * i))
+    batch = F.when(F.col("doc_id") < 17, 0).when(F.col("doc_id") < 34, 1)
+    in_dir = stage_batches(
+        docs.withColumn("b", batch.otherwise(2)), str(tmp_path / "in"), 3
+    )
 
     got = run_weighted_sample_stream(
         spark,
-        str(in_dir),
+        in_dir,
         str(tmp_path / "work"),
         schema="doc_id bigint, source string, n_chars bigint",
         k=10,
@@ -276,116 +248,74 @@ def test_streaming_weighted_sample_equals_batch(spark, tmp_path):
     assert snaps.select("batch").distinct().count() == 3
 
 
+def _event_thirds(spark, tmp_path, *cols):
+    """sf0.001 events staged as three ascending (ts, event_id)-range
+    micro-batch files."""
+    ranked = load_table(spark, SF, "events").select(*cols).withColumn(
+        "b", F.ntile(3).over(Window.orderBy("ts", "event_id")) - 1
+    )
+    return stage_batches(ranked, str(tmp_path / "in"), 3)
+
+
 def test_streaming_scd2_equals_batch_twin(spark, tmp_path):
     """Split sf0.001 events into three ascending (ts, event_id)-range
     micro-batch files: the stateful SCD2 builder's compacted changelog
     must equal the batch window twin row-for-row — including intervals
     that OPEN in one micro-batch and CLOSE in a later one (the per-user
     open-interval state crossing the batch boundary)."""
-    import glob
-    import os
-    import shutil
-    import time
-
-    from pyspark.sql import Window
-
-    from counsel_data_pipeline_spark.io.sources import load_table
-    from counsel_data_pipeline_spark.streaming.scd2 import run_scd2_stream
-
-    ev = load_table(spark, SF, "events").select(
-        "event_id", "user_id", "ts", "event_type"
+    from counsel_data_pipeline_spark.streaming.scd2 import (
+        compact_changelog,
+        scd2_stateful,
     )
-    ranked = ev.withColumn(
-        "b", F.ntile(3).over(Window.orderBy("ts", "event_id")) - 1
-    )
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    now = time.time()
-    # Spark-written files so ts round-trips as a Spark timestamp (a
-    # pandas write stores INT64 nanos the stream schema can't read)
-    for i in range(3):
-        tmp = tmp_path / f"tmp{i}"
-        ranked.filter(F.col("b") == i).drop("b").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp))
-        src = glob.glob(str(tmp / "part-*.parquet"))[0]
-        dst = in_dir / f"b{i}.parquet"
-        os.replace(src, str(dst))
-        shutil.rmtree(tmp)
-        os.utime(dst, (now + 10 * i, now + 10 * i))
 
-    got = run_scd2_stream(
-        spark,
-        str(in_dir),
-        str(tmp_path / "work"),
-        schema="event_id bigint, user_id bigint, ts timestamp, event_type string",
+    schema = "event_id bigint, user_id bigint, ts timestamp, event_type string"
+    in_dir = _event_thirds(spark, tmp_path, "event_id", "user_id", "ts", "event_type")
+    changelog = run_available_now(
+        scd2_stateful(read_batches(spark, schema, in_dir)), "append"
     )
+    got = compact_changelog(changelog)
     expected = all_queries()["window_scd2_intervals"].fn(spark, SF)
     cols = ["user_id", "event_type", "valid_from_s", "valid_to_s", "is_current"]
     assert _rows(got, cols) == _rows(expected, cols)
     # cross-batch statefulness actually exercised: at least one close
     # (upsert pair) must span micro-batches, i.e. the changelog holds
     # more rows than a single batch could have produced alone
-    changelog = spark.read.parquet(str(tmp_path / "work" / "out"))
     closes = changelog.filter(F.col("valid_to_s").isNotNull()).count()
     opens = changelog.filter(F.col("valid_to_s").isNull()).count()
     assert closes > 0 and opens > closes  # open rows include current ones
 
 
-def test_streaming_scd2_raises_on_out_of_order_feed(spark, tmp_path):
+def test_streaming_scd2_raises_on_out_of_order_feed(spark, stage_rows):
     """The determinism contract is enforced, not assumed: a micro-batch
     regressing a user's event-time high-water mark must fail the stream
     loudly (it would otherwise silently emit a wrong interval)."""
     import datetime
-    import glob
-    import os
-    import shutil
-    import time
 
-    from counsel_data_pipeline_spark.streaming.scd2 import run_scd2_stream
+    from counsel_data_pipeline_spark.streaming.scd2 import scd2_stateful
 
     def _ts(minute):
         return datetime.datetime(2024, 1, 1, 10, minute)
 
-    batches = [
-        [(1, 7, _ts(0), "view"), (2, 7, _ts(2), "click")],
-        # event_id 3 is BEHIND user 7's high-water mark (10:02)
-        [(3, 7, _ts(1), "purchase")],
-    ]
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    now = time.time()
-    for i, rows in enumerate(batches):
-        tmp = tmp_path / f"tmp{i}"
-        spark.createDataFrame(
-            rows, "event_id bigint, user_id bigint, ts timestamp, event_type string"
-        ).coalesce(1).write.mode("overwrite").parquet(str(tmp))
-        src = glob.glob(str(tmp / "part-*.parquet"))[0]
-        dst = in_dir / f"b{i}.parquet"
-        os.replace(src, str(dst))
-        shutil.rmtree(tmp)
-        os.utime(dst, (now + 10 * i, now + 10 * i))
-
+    schema = "event_id bigint, user_id bigint, ts timestamp, event_type string"
+    in_dir = stage_rows(
+        [
+            [(1, 7, _ts(0), "view"), (2, 7, _ts(2), "click")],
+            # event_id 3 is BEHIND user 7's high-water mark (10:02)
+            [(3, 7, _ts(1), "purchase")],
+        ],
+        schema,
+    )
     with pytest.raises(Exception, match="out-of-order SCD2 feed"):
-        run_scd2_stream(
-            spark,
-            str(in_dir),
-            str(tmp_path / "work"),
-            schema="event_id bigint, user_id bigint, ts timestamp, event_type string",
-        )
+        run_available_now(scd2_stateful(read_batches(spark, schema, in_dir)), "append")
 
 
 def test_kmeans_cell_stats_stream_equals_batch(spark, tmp_path):
     """Streamed per-cell sufficient statistics must equal a batch
     recompute regardless of how vectors are batched into files, and the
     literal-fold assignment must break distance ties on lowest cid."""
-    import glob
-    import os
-    import shutil
-
     from counsel_data_pipeline_spark.streaming.kmeans import (
         assign_cell_expr,
-        run_kmeans_cell_stats_stream,
+        cell_stats_stream,
     )
 
     cents = [(0, [0, 0]), (1, [1_000_000, 0]), (2, [0, 0])]  # cid 2 dups cid 0
@@ -395,7 +325,8 @@ def test_kmeans_cell_stats_stream_equals_batch(spark, tmp_path):
         (3, [0.6, 0.0]),      # nearer cid 1
         (4, [0.1, 0.2]),      # cid 0
     ]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    schema = "vec_id bigint, embedding array<double>"
+    df = spark.createDataFrame(rows, schema)
     got = {
         r.vec_id: r.cell
         for r in df.select(
@@ -413,14 +344,10 @@ def test_kmeans_cell_stats_stream_equals_batch(spark, tmp_path):
     # stream over two different file splits -> identical final stats
     results = []
     for split, part in (("a", 1), ("b", 3)):
-        in_dir = tmp_path / f"in_{split}"
-        df.repartition(part).write.parquet(str(in_dir))
-        out = run_kmeans_cell_stats_stream(
-            spark,
-            str(in_dir),
-            str(tmp_path / f"work_{split}"),
-            schema="vec_id bigint, embedding array<double>",
-            centroids6=cents,
+        in_dir = str(tmp_path / f"in_{split}")
+        df.repartition(part).write.parquet(in_dir)
+        out = run_available_now(
+            cell_stats_stream(read_batches(spark, schema, in_dir), cents)
         )
         results.append(
             sorted((r.cell, r.pos, r.n_vecs, r.sum_v6) for r in out.collect())
@@ -434,151 +361,86 @@ def test_kmeans_cell_stats_stream_equals_batch(spark, tmp_path):
     assert (2, 0) not in stats                 # duplicate centroid never wins
 
 
+def _sessionize(spark, in_dir):
+    from counsel_data_pipeline_spark.streaming.sessionize import (
+        compact_summaries,
+        sessionize_stateful,
+    )
+
+    stream = read_batches(
+        spark, "event_id bigint, user_id bigint, ts timestamp", in_dir
+    )
+    return compact_summaries(run_available_now(sessionize_stateful(stream), "append"))
+
+
 def test_streaming_sessionize_equals_batch_twin(spark, tmp_path):
     """Stateful gap-sessionizer: summaries maintained across micro-batch
     boundaries (sessions spanning files) must equal the batch lag+flag
     plan; exact-gap events merge (strict >); out-of-order batches raise."""
-    import glob
-    import os
-    import shutil
-    import time
-
-    from pyspark.sql import Window
-
-    from counsel_data_pipeline_spark.io.sources import load_table
-    from counsel_data_pipeline_spark.streaming.sessionize import (
-        run_sessionize_stream,
-    )
-
-    ev = load_table(spark, SF, "events").select("event_id", "user_id", "ts")
-    ranked = ev.withColumn(
-        "b", F.ntile(3).over(Window.orderBy("ts", "event_id")) - 1
-    )
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    now = time.time()
-    for i in range(3):
-        tmp = tmp_path / f"tmp{i}"
-        ranked.filter(F.col("b") == i).drop("b").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(tmp))
-        src = glob.glob(str(tmp / "part-*.parquet"))[0]
-        dst = in_dir / f"b{i}.parquet"
-        os.replace(src, str(dst))
-        shutil.rmtree(tmp)
-        os.utime(dst, (now + 10 * i, now + 10 * i))
-
-    got = run_sessionize_stream(
-        spark, str(in_dir), str(tmp_path / "work"),
-        schema="event_id bigint, user_id bigint, ts timestamp",
-    )
+    got = _sessionize(spark, _event_thirds(spark, tmp_path, "event_id", "user_id", "ts"))
     expected = all_queries()["events_sessionize_30m"].fn(spark, SF)
     cols = ["user_id", "n_sessions", "max_session_events", "n_events"]
     assert _rows(got, cols) == _rows(expected, cols)
 
 
-def test_streaming_sessionize_exact_gap_merges_and_ooo_raises(spark, tmp_path):
+def test_streaming_sessionize_exact_gap_merges_and_ooo_raises(spark, stage_rows):
     import datetime
-    import glob
-    import os
-    import shutil
-    import time
-
-    from counsel_data_pipeline_spark.streaming.sessionize import (
-        run_sessionize_stream,
-    )
 
     t0 = datetime.datetime(2024, 1, 1, 8, 0, 0)
-
-    def stage(batches, sub):
-        in_dir = tmp_path / sub
-        in_dir.mkdir()
-        now = time.time()
-        for i, rows in enumerate(batches):
-            tmp = tmp_path / f"{sub}_tmp{i}"
-            spark.createDataFrame(
-                rows, "event_id bigint, user_id bigint, ts timestamp"
-            ).coalesce(1).write.mode("overwrite").parquet(str(tmp))
-            src = glob.glob(str(tmp / "part-*.parquet"))[0]
-            dst = in_dir / f"b{i}.parquet"
-            os.replace(src, str(dst))
-            shutil.rmtree(tmp)
-            os.utime(dst, (now + 10 * i, now + 10 * i))
-        return str(in_dir)
+    schema = "event_id bigint, user_id bigint, ts timestamp"
 
     # exactly 1800 s gaps across a batch boundary -> ONE session of 3
-    d = stage(
+    d = stage_rows(
         [
             [(1, 7, t0), (2, 7, t0 + datetime.timedelta(seconds=1800))],
             [(3, 7, t0 + datetime.timedelta(seconds=3600))],
         ],
+        schema,
         "gap",
     )
-    [r] = run_sessionize_stream(
-        spark, d, str(tmp_path / "w1"),
-        schema="event_id bigint, user_id bigint, ts timestamp",
-    ).collect()
+    [r] = _sessionize(spark, d).collect()
     assert (r.n_sessions, r.max_session_events, r.n_events) == (1, 3, 3)
 
     # out-of-order second batch -> loud failure
-    d2 = stage(
+    d2 = stage_rows(
         [
             [(1, 9, t0 + datetime.timedelta(seconds=60))],
             [(2, 9, t0)],
         ],
+        schema,
         "ooo",
     )
     with pytest.raises(Exception, match="out-of-order session feed"):
-        run_sessionize_stream(
-            spark, d2, str(tmp_path / "w2"),
-            schema="event_id bigint, user_id bigint, ts timestamp",
-        )
+        _sessionize(spark, d2)
 
 
-def test_timeout_sessions_gap_timeout_and_open_contract(spark, tmp_path):
+def test_timeout_sessions_gap_timeout_and_open_contract(spark, stage_rows):
     """EventTimeTimeout session closer: (a) an in-stream gap closes with
     reason 'gap'; (b) a user who goes quiet closes with reason 'timeout'
     once OTHER users' events advance the watermark past last_ts + gap;
     (c) a session still open at stream end is NOT emitted (state would
     close it on a later trigger) — the documented contract."""
     import datetime
-    import glob
-    import os
-    import shutil
-    import time
 
     from counsel_data_pipeline_spark.streaming.timeout_sessions import (
-        run_closed_sessions_stream,
+        closed_sessions_stateful,
     )
 
     t0 = datetime.datetime(2024, 1, 1, 8, 0, 0)
     mins = lambda m: t0 + datetime.timedelta(minutes=m)
-    batches = [
-        # user 1: two events, then silence. user 2 keeps the clock moving.
-        [(1, mins(0)), (1, mins(5)), (2, mins(6))],
-        # user 1's 5:00-8:05... gap for user 2 closes inline ('gap');
-        # watermark reaches mins(90): user 1's (5 + 30) deadline passed
-        # -> 'timeout'. user 2's new session stays open.
-        [(2, mins(90)), (2, mins(95))],
-    ]
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    now = time.time()
-    for i, rows in enumerate(batches):
-        tmp = tmp_path / f"tmp{i}"
-        spark.createDataFrame(
-            rows, "user_id bigint, ts timestamp"
-        ).coalesce(1).write.mode("overwrite").parquet(str(tmp))
-        src = glob.glob(str(tmp / "part-*.parquet"))[0]
-        dst = in_dir / f"b{i}.parquet"
-        os.replace(src, str(dst))
-        shutil.rmtree(tmp)
-        os.utime(dst, (now + 10 * i, now + 10 * i))
-
-    out = run_closed_sessions_stream(
-        spark, str(in_dir), str(tmp_path / "work"),
-        schema="user_id bigint, ts timestamp", gap_s=1800,
+    in_dir = stage_rows(
+        [
+            # user 1: two events, then silence. user 2 keeps the clock moving.
+            [(1, mins(0)), (1, mins(5)), (2, mins(6))],
+            # user 1's 5:00-8:05... gap for user 2 closes inline ('gap');
+            # watermark reaches mins(90): user 1's (5 + 30) deadline passed
+            # -> 'timeout'. user 2's new session stays open.
+            [(2, mins(90)), (2, mins(95))],
+        ],
+        "user_id bigint, ts timestamp",
     )
+    stream = read_batches(spark, "user_id bigint, ts timestamp", in_dir)
+    out = run_available_now(closed_sessions_stateful(stream, gap_s=1800), "append")
     rows = {(r.user_id, r.close_reason): r for r in out.collect()}
     # user 2's first session (mins 6) closed by the in-batch gap
     g = rows[(2, "gap")]
@@ -591,3 +453,20 @@ def test_timeout_sessions_gap_timeout_and_open_contract(spark, tmp_path):
     )
     # user 2's second session (mins 90-95) is still open: NOT emitted
     assert len(rows) == 2
+
+
+def test_runner_leaves_no_checkpoint_behind(spark, stage_rows, tmp_path, monkeypatch):
+    """The runner owns its checkpoint: no dir of it is left behind after a
+    drained run or after a failed one."""
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    stream = read_batches(spark, "x bigint", stage_rows([[(1,)], [(2,)]], "x bigint"))
+    assert sorted(r.x for r in run_available_now(stream, "append").collect()) == [1, 2]
+
+    def fail(batch, batch_id):
+        raise ValueError("handler failed")
+
+    with pytest.raises(Exception, match="handler failed"):
+        run_available_now(stream, handler=fail)
+    assert os.listdir(scratch) == []

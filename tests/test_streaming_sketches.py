@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from counsel_data_pipeline_spark.io.sources import load_table
 from counsel_data_pipeline_spark.ops.sketches import cms_build, cms_estimate
 from counsel_data_pipeline_spark.streaming import sketches as ssk
+from counsel_data_pipeline_spark.streaming.microbatch import read_batches
 
 SF = "/root/testdata/sf0.001"
 # NOT the driver parquet's physical schema: the stream below reads the
@@ -20,19 +21,15 @@ EVENTS_SCHEMA = "event_id bigint, ts timestamp, user_id bigint, event_type strin
 
 @pytest.fixture(scope="module")
 def split_events_dir(spark, tmp_path_factory):
-    """The events table split into 3 files so maxFilesPerTrigger=1 yields 3
-    genuine micro-batches."""
+    """The events table split into 3 files, so one file per trigger
+    yields 3 genuine micro-batches."""
     out = str(tmp_path_factory.mktemp("events_split"))
     load_table(spark, SF, "events").repartition(3).write.mode("overwrite").parquet(out)
     return out
 
 
 def test_streamed_cms_equals_batch_cms(spark, split_events_dir):
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(split_events_dir)
-    )
+    stream = read_batches(spark, EVENTS_SCHEMA, split_events_dir)
     partials = ssk.run_cms_stream(stream, "user_id", depth=4, width=64)
 
     n_batches = spark.read.parquet(partials).select("batch_id").distinct().count()
@@ -45,11 +42,7 @@ def test_streamed_cms_equals_batch_cms(spark, split_events_dir):
 
 
 def test_merged_sketch_estimates_match_batch_estimates(spark, split_events_dir):
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(split_events_dir)
-    )
+    stream = read_batches(spark, EVENTS_SCHEMA, split_events_dir)
     partials = ssk.run_cms_stream(stream, "user_id", depth=4, width=64)
     merged = ssk.merge_cms_partials(spark, partials)
 

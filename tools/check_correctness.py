@@ -11,13 +11,20 @@ from __future__ import annotations
 
 import argparse
 import hashlib
+import os
 import sys
 import time
 from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# The repo root goes on this process's path AND on PYTHONPATH before the
+# session starts, so Python workers import the package too from any cwd.
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from counsel_data_pipeline_spark.catalog import all_queries
 from counsel_data_pipeline_spark.io.sources import TABLES

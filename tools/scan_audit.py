@@ -31,9 +31,9 @@ from counsel_data_pipeline_spark.session import get_spark
 SKIP_PREFIXES = ("streaming", "layout", "incremental", "ops_enrich", "multimodal")
 
 
-def scan_counts(spark, fn, sf_dir: str) -> Counter:
-    df = fn(spark, sf_dir)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+def scan_counts(df) -> Counter:
+    """Parquet scans per table file in ``df``'s final physical plan."""
+    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
     plan = df._jdf.queryExecution().explainString(mode)
@@ -61,7 +61,7 @@ def main() -> None:
     qs = all_queries()
     for name in names:
         try:
-            c = scan_counts(spark, qs[name].fn, sf_dir)
+            c = scan_counts(qs[name].fn(spark, sf_dir))
         except Exception as exc:  # noqa: BLE001 - survey must not die mid-fleet
             print(f"{name}\tERR\t{str(exc)[:80]}")
             continue
