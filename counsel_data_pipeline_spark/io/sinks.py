@@ -55,9 +55,13 @@ def wrapper_json(rows: list[dict], county: str = "全台灣") -> str:
 
 def collect_rows(df: DataFrame, order_col: str | None = None, drop: tuple[str, ...] = ()) -> list[dict]:
     """Materialize a (small) DataFrame to ordered row dicts for the parity
-    sinks, dropping engine-internal columns."""
+    sinks, dropping engine-internal columns.
+
+    Every row goes to the driver, so the sort runs in one partition: the
+    same order as ``orderBy`` (ascending, nulls first) without its
+    range-partition sampling job."""
     if order_col is not None:
-        df = df.orderBy(order_col)
+        df = df.repartition(1).sortWithinPartitions(order_col)
     drop_cols = set(drop) | ({order_col} if order_col else set())
     rows = []
     for r in df.collect():

@@ -24,13 +24,20 @@ from __future__ import annotations
 import json
 import os
 import stat
+from collections.abc import Sequence
 from typing import Any
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType, _make_type_verifier, _parse_datatype_string
+from pyspark.sql.types import (
+    LongType,
+    StructField,
+    StructType,
+    _make_type_verifier,
+    _parse_datatype_string,
+)
 
 TABLES = (
     "region",
@@ -174,30 +181,39 @@ def _jvm_frame(spark: SparkSession, table: pa.Table, schema: StructType | None =
 
 
 def read_clinic_json(
-    spark: SparkSession, path: str, schema=None, default_empty: bool = False
+    spark: SparkSession,
+    path: str | Sequence[str],
+    schema=None,
+    default_empty: bool = False,
 ) -> DataFrame:
-    """Read a wrapper-or-array clinic JSON file into a DataFrame.
+    """Read wrapper-or-array clinic JSON files into one DataFrame.
 
     These files are single-document JSON (the reference writes
     ``JSON.stringify(wrapper, null, 2)``), small by construction (one file
-    per county / per run), so they are parsed in Python and the rows reach
-    the JVM as one Arrow batch. Without ``schema``, each row becomes a
-    JSON line of a one-partition ``Dataset[String]`` that the JVM's
-    ``DataFrameReader.json`` parses with permissive schema inference (the
-    method ``spark.read.json(rdd)`` delegates to). With ``schema`` (a
-    StructType or DDL string), rows are checked by the type verifier
-    ``createDataFrame`` applies to local rows and keep its typing. Landing-zone
-    data at scale should instead be written as JSONL/parquet and read with
-    spark.read with a declared schema.
+    per county / per run), so they are parsed in Python and the rows of
+    every file reach the JVM as one Arrow batch. Without ``schema``, each
+    row becomes a JSON line of a one-partition ``Dataset[String]`` that the
+    JVM's ``DataFrameReader.json`` parses with permissive schema inference
+    (the method ``spark.read.json(rdd)`` delegates to): one inference job
+    for all the files. With ``schema`` (a StructType or DDL string), rows
+    are checked by the type verifier ``createDataFrame`` applies to local
+    rows and keep its typing. Landing-zone data at scale should instead be
+    written as JSONL/parquet and read with spark.read with a declared
+    schema.
 
-    An ``ingest_order`` column is attached — the reference's dedup/merge
-    semantics are insertion-order-sensitive (SURVEY §2.4 A1/A2) and Spark
-    DataFrames are unordered, so arrival order must be an explicit column.
+    An ``ingest_order`` column is attached, counted within each file — the
+    reference's dedup/merge semantics are insertion-order-sensitive
+    (SURVEY §2.4 A1/A2) and Spark DataFrames are unordered, so arrival
+    order must be an explicit column. Given a list of paths, each row also
+    carries ``file_index``, its file's position in the list.
     """
-    with open(path, encoding="utf-8") as f:
-        obj = json.load(f)
-    rows = extract_rows(obj, default_empty=default_empty)
-    indexed = [{**r, "ingest_order": i} for i, r in enumerate(rows)]
+    paths = [path] if isinstance(path, str) else list(path)
+    indexed = []
+    for fi, p in enumerate(paths):
+        with open(p, encoding="utf-8") as f:
+            rows = extract_rows(json.load(f), default_empty=default_empty)
+        tag = {} if isinstance(path, str) else {"file_index": fi}
+        indexed.extend({**r, **tag, "ingest_order": i} for i, r in enumerate(rows))
     if schema is None and indexed:
         lines = [json.dumps(r, ensure_ascii=False) for r in indexed]
         ds = _jvm_frame(spark, pa.table({"value": pa.array(lines, pa.string())}))
@@ -210,6 +226,8 @@ def read_clinic_json(
 
         schema = RAW_GRID_ROW
     struct = _parse_datatype_string(schema) if isinstance(schema, str) else schema
+    if not isinstance(path, str) and "file_index" not in struct.fieldNames():
+        struct = StructType([*struct.fields, StructField("file_index", LongType(), False)])
     verify = _make_type_verifier(struct)
     for r in indexed:
         verify(r)

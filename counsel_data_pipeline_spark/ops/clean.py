@@ -91,13 +91,14 @@ CLEAN_COLUMNS = [
 def clean_rows(raw: DataFrame) -> DataFrame:
     """The full cleanRows projection: raw grid rows → 15-column clinic rows.
 
-    Preserves an ``ingest_order`` column if present (required downstream by
-    the order-sensitive dedup/merge operators).
+    Preserves the reader's ``ingest_order`` and ``file_index`` columns if
+    present (required downstream by the order-sensitive dedup/merge
+    operators).
     """
     org_href = anchor_href(F.col("orgName"))
     addr_href = anchor_href(F.col("address"))
     out = raw.select(
-        *([F.col("ingest_order")] if "ingest_order" in raw.columns else []),
+        *[c for c in ("ingest_order", "file_index") if c in raw.columns],
         F.col("countyName").alias("county"),
         anchor_text(F.col("orgName")).alias("org_name"),
         null_if_none_sentinel(org_href).alias("org_url"),

@@ -21,15 +21,16 @@ from counsel_data_pipeline_spark.ops.clean import anchor_text
 
 def first_wins(
     df: DataFrame,
-    key: Column | Sequence[str],
+    key: Column | Sequence[str | Column],
     order_col: str | Sequence[str] = "ingest_order",
 ) -> DataFrame:
     """Keep the first row per key in ``order_col`` order (A1 semantics).
-    Pass multiple order columns when the primary one isn't unique within a
-    key — determinism requires a total order."""
-    key_col = key if isinstance(key, Column) else F.struct(*[F.col(k) for k in key])
+    A key given as several columns partitions on all of them. Pass multiple
+    order columns when the primary one isn't unique within a key —
+    determinism requires a total order."""
+    keys = [key] if isinstance(key, Column) else [F.col(k) if isinstance(k, str) else k for k in key]
     orders = [order_col] if isinstance(order_col, str) else list(order_col)
-    w = Window.partitionBy(key_col).orderBy(*[F.col(o) for o in orders])
+    w = Window.partitionBy(*keys).orderBy(*[F.col(o) for o in orders])
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)

@@ -61,8 +61,8 @@ def domain_of(c: Column) -> Column:
     return F.regexp_replace(F.coalesce(host, F.lit("")), r"^www\.", "")
 
 
-_GEO_TYPES = {
-    "lat": "double", "lng": "double", "confidence": "long", "formatted": "string",
+_GEO_TYPES = {  # type names as DataFrame.dtypes spells them
+    "lat": "double", "lng": "double", "confidence": "bigint", "formatted": "string",
     "components": "map<string,string>", "source": "string", "approx": "string",
     "usedQuery": "string", "note": "string",
 }
@@ -73,35 +73,41 @@ def ensure_geo_cols(df: DataFrame) -> DataFrame:
     typed nulls and coerce ``components`` (struct when schema-inferred from
     JSON, map in the declared schema) to map<string,string> so frames from
     different sources union/compare cleanly."""
-    out = df
+    dtypes = dict(df.dtypes)
+    geo = {}
     for name, typ in _GEO_TYPES.items():
-        if name not in out.columns:
-            out = out.withColumn(name, F.lit(None).cast(typ))
-        elif name == "components" and not dict(out.dtypes)[name].startswith("map"):
-            out = out.withColumn(
-                name, F.from_json(F.to_json(F.col(name)), "map<string,string>")
-            )
-        else:
-            out = out.withColumn(name, F.col(name).cast(typ))
-    return out
+        if name not in dtypes:
+            geo[name] = F.lit(None).cast(typ)
+        elif name == "components" and not dtypes[name].startswith("map"):
+            geo[name] = F.from_json(F.to_json(F.col(name)), "map<string,string>")
+        elif dtypes[name] != typ:
+            geo[name] = F.col(name).cast(typ)
+    return df.withColumns(geo) if geo else df
 
 
-def with_diff_keys(df: DataFrame) -> DataFrame:
+def with_diff_keys(df: DataFrame, key3: bool = False) -> DataFrame:
+    """Adds ``__phone_k`` and ``__domain_k``, and with ``key3`` the
+    recombine key ``__k3`` = phone_key + '|' + domain_key."""
     org_url = F.col("org_url") if "org_url" in df.columns else F.lit(None).cast("string")
     map_url = F.col("map_url") if "map_url" in df.columns else F.lit(None).cast("string")
     dom = domain_of(org_url)
-    return df.withColumn("__phone_k", normalize_phone(F.col("phone"))).withColumn(
-        "__domain_k",
-        F.when(dom != "", dom).otherwise(domain_of(map_url)),
-    )
+    keys = {
+        "__phone_k": normalize_phone(F.col("phone")),
+        "__domain_k": F.when(dom != "", dom).otherwise(domain_of(map_url)),
+    }
+    if key3:
+        keys["__k3"] = F.concat(keys["__phone_k"], F.lit("|"), keys["__domain_k"])
+    return df.withColumns(keys)
 
 
-def _bucket_stats(prev: DataFrame, key: str, order_col: str) -> DataFrame:
-    """Per key: does the bucket exist at all, and the first (snapshot-order)
-    row with non-null lat+lng — reference's ``.find(x => x.lat != null &&
-    x.lng != null)`` over the bucket."""
+def _bucket_stats(prev: DataFrame, tag: str, order_col: str) -> DataFrame:
+    """Per ``__{tag}_k`` key: does the bucket exist at all, and the first
+    (snapshot-order) row with non-null lat+lng — reference's
+    ``.find(x => x.lat != null && x.lng != null)`` over the bucket.
+    Columns ``__{tag}_key``, ``__{tag}_exists`` and ``__{tag}_good``."""
+    key = f"__{tag}_k"
     good = F.col("lat").isNotNull() & F.col("lng").isNotNull()
-    geo_struct = F.struct(*[F.col(c) for c in GEO_COLS])
+    geo_struct = F.struct(*GEO_COLS)
     return (
         prev.filter(F.col(key) != "")
         .groupBy(key)
@@ -112,7 +118,11 @@ def _bucket_stats(prev: DataFrame, key: str, order_col: str) -> DataFrame:
                 F.when(good, geo_struct), F.when(good, F.col(order_col))
             ).alias("__first_good"),
         )
-        .select(key, F.lit(True).alias("__bucket_exists"), F.col("__first_good"))
+        .select(
+            F.col(key).alias(f"__{tag}_key"),
+            F.lit(True).alias(f"__{tag}_exists"),
+            F.col("__first_good").alias(f"__{tag}_good"),
+        )
     )
 
 
@@ -127,27 +137,12 @@ def snapshot_split(
     clean_k = with_diff_keys(clean)
     prev_k = with_diff_keys(ensure_geo_cols(prev))
 
-    phone_stats = _bucket_stats(prev_k, "__phone_k", prev_order)
-    dom_stats = _bucket_stats(prev_k, "__domain_k", prev_order)
+    phone_stats = _bucket_stats(prev_k, "phone", prev_order)
+    dom_stats = _bucket_stats(prev_k, "domain", prev_order)
 
-    j = (
-        clean_k.join(
-            F.broadcast(phone_stats.withColumnRenamed("__phone_k", "__pk")),
-            F.col("__phone_k") == F.col("__pk"),
-            "left",
-        )
-        .withColumnRenamed("__bucket_exists", "__phone_exists")
-        .withColumnRenamed("__first_good", "__phone_good")
-        .drop("__pk")
-        .join(
-            F.broadcast(dom_stats.withColumnRenamed("__domain_k", "__dk")),
-            F.col("__domain_k") == F.col("__dk"),
-            "left",
-        )
-        .withColumnRenamed("__bucket_exists", "__domain_exists")
-        .withColumnRenamed("__first_good", "__domain_good")
-        .drop("__dk")
-    )
+    j = clean_k.join(
+        F.broadcast(phone_stats), F.col("__phone_k") == F.col("__phone_key"), "left"
+    ).join(F.broadcast(dom_stats), F.col("__domain_k") == F.col("__domain_key"), "left")
     # Priority: a non-empty phone bucket CLAIMS the row (even when it has no
     # coordinate-bearing entry); only phone-bucket-absent rows may use domain.
     phone_claims = (F.col("__phone_k") != "") & F.col("__phone_exists").isNotNull()
@@ -159,12 +154,9 @@ def snapshot_split(
     match = F.when(phone_claims, F.col("__phone_good")).when(
         domain_claims, F.col("__domain_good")
     )
-    j = j.withColumn("__match", match)
-
     clean_cols = clean.columns
-    carried = j.filter(F.col("__match").isNotNull()).select(
-        *clean_cols, *[F.col(f"__match.{c}").alias(c) for c in GEO_COLS]
-    )
+    j = j.select(*clean_cols, match.alias("__match"))
+    carried = j.filter(F.col("__match").isNotNull()).select(*clean_cols, "__match.*")
     need_geo = j.filter(F.col("__match").isNull()).select(*clean_cols)
     return carried, need_geo
 
@@ -188,42 +180,28 @@ def recombine(
     a newly hit only the geo columns come from the lookup
     (``{...r, ...pickGeo(n)}``, :152).
     """
-    key3 = lambda df: F.concat(F.col("__phone_k"), F.lit("|"), F.col("__domain_k"))  # noqa: E731
-
-    clean_k = with_diff_keys(clean).withColumn("__k3", key3(None))
-    carried_k = with_diff_keys(ensure_geo_cols(carried)).withColumn("__k3", key3(None))
-    newly_k = with_diff_keys(ensure_geo_cols(newly)).withColumn("__k3", key3(None))
+    clean_k = with_diff_keys(clean, key3=True)
+    carried_k = with_diff_keys(ensure_geo_cols(carried), key3=True)
+    newly_k = with_diff_keys(ensure_geo_cols(newly), key3=True)
 
     clean_cols = clean.columns
-    full_struct = F.struct(*[F.col(c) for c in clean_cols + GEO_COLS])
-    geo_struct = F.struct(*[F.col(c) for c in GEO_COLS])
+    full_struct = F.struct(*clean_cols, *GEO_COLS)
+    geo_struct = F.struct(*GEO_COLS)
     first_carried = (
         carried_k.groupBy("__k3")
-        .agg(F.min_by(full_struct, F.col(clean_order)).alias("__g"))
-        .select("__k3", F.lit(True).alias("__carried_hit"), "__g")
+        .agg(F.min_by(full_struct, F.col(clean_order)).alias("__cg"))
+        .select("__k3", F.lit(True).alias("__carried_hit"), "__cg")
     )
-    last_newly = (
-        newly_k.groupBy("__k3")
-        .agg(F.max_by(geo_struct, F.col(newly_order)).alias("__g"))
-        .select("__k3", F.lit(True).alias("__newly_hit"), "__g")
+    last_newly = newly_k.groupBy("__k3").agg(
+        F.max_by(geo_struct, F.col(newly_order)).alias("__ng")
     )
 
-    out = (
-        clean_k.join(
-            F.broadcast(first_carried.withColumnRenamed("__g", "__cg")), "__k3", "left"
-        )
-        .join(F.broadcast(last_newly.withColumnRenamed("__g", "__ng")), "__k3", "left")
+    out = clean_k.join(F.broadcast(first_carried), "__k3", "left").join(
+        F.broadcast(last_newly), "__k3", "left"
     )
-    pick_clean = lambda c: (  # noqa: E731
-        F.when(F.col("__carried_hit").isNotNull(), F.col(f"__cg.{c}"))
-        .otherwise(F.col(c))
+    # A carried hit is the whole row; otherwise the clean row takes the newly
+    # geocoded columns, null when there is no newly hit either.
+    row = F.when(F.col("__carried_hit").isNotNull(), F.col("__cg")).otherwise(
+        F.struct(*clean_cols, *[f"__ng.{c}" for c in GEO_COLS])
     )
-    pick_geo = lambda c: (  # noqa: E731
-        F.when(F.col("__carried_hit").isNotNull(), F.col(f"__cg.{c}"))
-        .when(F.col("__newly_hit").isNotNull(), F.col(f"__ng.{c}"))
-        .otherwise(F.lit(None))
-    )
-    return out.select(
-        *[pick_clean(c).alias(c) for c in clean_cols],
-        *[pick_geo(c).alias(c) for c in GEO_COLS],
-    )
+    return out.select(row.alias("__row")).select("__row.*")

@@ -460,11 +460,11 @@ def enrich(
         )
     )
 
-    joined = rows_id.join(hits, rid, "left")
+    # Both the hits and the misses read the probe; run it once.
+    joined = rows_id.join(hits, rid, "left").cache()
     cache_hit = joined.filter(F.col("__g").isNotNull()).select(
         *rows.columns,
-        *[F.col(f"__g.{c}").alias(c) for c in _geo_struct_cols()],
-        F.col("__g.usedQuery").alias("usedQuery"),
+        "__g.*",  # the geo struct columns, then usedQuery
         F.lit(None).cast("string").alias("note"),
     )
     misses = joined.filter(F.col("__g").isNull()).select(*rows.columns, rid)
@@ -590,7 +590,7 @@ def ensure_cache_schema(cache: DataFrame) -> DataFrame:
     df = ensure_geo_cols(cache)
     return df.select(
         F.col("query").cast("string"),
-        *[F.col(c) for c in _geo_struct_cols()],
+        *_geo_struct_cols(),
     )
 
 

@@ -8,14 +8,16 @@ columns take max; teleconsultation ORs; has_quota recomputed from
 max(in_4_weeks). Output sorted has_quota desc, stable → first-seen order
 as tiebreak (JS stable sort over Map insertion order).
 
-Spark shape: one shuffle on the merge key shared by the window (first-row
-pick) and the aggregation; output ordering is explicit (has_quota desc,
-first-seen order) because Spark sorts are not stable.
+Spark shape: one aggregation per key, so one shuffle on the merge key and
+no self-join. ``min_by`` over a (source rank, order) struct picks the first
+row's descriptive fields in the same pass that takes the max/OR columns;
+output ordering is explicit (has_quota desc, first-seen order) because
+Spark sorts are not stable.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 COUNT_COLS = ["this_week", "next_week", "next_2_week", "next_3_week", "in_4_weeks"]
@@ -38,56 +40,75 @@ def keyed_merge(
     """Generic A2 core: union two sources; per key keep the first row's
     descriptive fields (primary before secondary, ``order_col`` within
     each), take max over ``max_cols`` and logical OR over ``or_cols``.
+    Returns the merged rows plus ``__src`` (source rank of the surviving
+    first row)."""
+    return ranked_merge(_ranked(primary, secondary), [key], max_cols, or_cols, order_col)
 
-    One shuffle on the key serves both the first-row window and the
-    aggregation (Catalyst reuses the exchange). Returns the merged rows
-    plus ``__src`` (source rank of the surviving first row).
+
+def _ranked(primary: DataFrame, secondary: DataFrame) -> DataFrame:
+    """Union of two sources, ranked by ``__src`` (0 = primary)."""
+    return primary.withColumn("__src", F.lit(0)).unionByName(secondary.withColumn("__src", F.lit(1)))
+
+
+def ranked_merge(
+    ranked: DataFrame,
+    keys: list[Column],
+    max_cols: list[str],
+    or_cols: list[str],
+    order_col: str,
+) -> DataFrame:
+    """:func:`keyed_merge` over one frame whose ``__src`` column ranks the
+    sources (0 first). One ``groupBy(keys)``: ``min_by`` over
+    ``(__src, order_col)`` keeps the first row's fields — the struct
+    ordering sorts a null ``order_col`` first, as the ascending window of a
+    ``row_number`` pick does — while max/OR fold over every row.
+    Columns named ``__*`` other than ``__src`` are dropped."""
+    base_cols = [c for c in ranked.columns if not c.startswith("__")]
+    folded = set(max_cols) | set(or_cols)
+    first_cols = [c for c in base_cols if c not in folded]
+    return (
+        ranked.groupBy(*[k.alias(f"__k{i}") for i, k in enumerate(keys)])
+        .agg(
+            F.min_by(
+                F.struct(*first_cols, "__src"), F.struct("__src", order_col)
+            ).alias("__first"),
+            *[F.max(c).alias(c) for c in max_cols],
+            *[F.max(c).alias(c) for c in or_cols],  # bool OR == max(boolean)
+        )
+        .select("__first.*", *max_cols, *or_cols)
+        .select("__src", *base_cols)
+    )
+
+
+def merge_sides(sides: DataFrame, order_col: str = "ingest_order", by: tuple[str, ...] = ()) -> DataFrame:
+    """A2 + O1 over one frame of clean rows whose ``__src`` is 0 for the
+    has-quota side and 1 for the no-quota side. ``by`` names columns that
+    split the merge into independent groups (the crawl's ``county_rank``).
+
+    Returns the merged clean rows with a ``merge_order`` column encoding
+    the reference's output order (has_quota desc, first-seen); callers
+    sort on it when materializing.
     """
-    p = primary.withColumn("__src", F.lit(0))
-    s = secondary.withColumn("__src", F.lit(1))
-    unioned = p.unionByName(s).withColumn("__key", key)
-    w = Window.partitionBy("__key").orderBy("__src", order_col)
-    base_cols = [c for c in unioned.columns if not c.startswith("__")]
-    firsts = (
-        unioned.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("__key", "__src", *base_cols)
+    merged = ranked_merge(
+        sides,
+        [*[F.col(c) for c in by], js_template_key("county", "org_name", "address")],
+        max_cols=COUNT_COLS,
+        or_cols=["teleconsultation"],
+        order_col=order_col,
     )
-    aggs = unioned.groupBy("__key").agg(
-        *[F.max(c).alias(f"__max_{c}") for c in max_cols],
-        *[F.max(c).alias(f"__or_{c}") for c in or_cols],  # bool OR == max(boolean)
+    has_quota = F.col("in_4_weeks") > 0
+    # Reference output order: has_quota desc (stable) over first-seen order.
+    merge_order = F.struct(
+        (~has_quota).cast("int").alias("hq"),
+        F.col("__src").alias("src"),
+        F.col(order_col).alias("ord"),
     )
-    merged = firsts.join(aggs, "__key")
-    for c in max_cols:
-        merged = merged.withColumn(c, F.col(f"__max_{c}"))
-    for c in or_cols:
-        merged = merged.withColumn(c, F.col(f"__or_{c}"))
-    return merged.drop(
-        *[f"__max_{c}" for c in max_cols], *[f"__or_{c}" for c in or_cols], "__key"
-    )
+    return merged.withColumns({"has_quota": has_quota, "merge_order": merge_order}).drop("__src")
 
 
 def merge_yes_no(yes: DataFrame, no: DataFrame, order_col: str = "ingest_order") -> DataFrame:
     """Merge the has-quota and no-quota clean sets (A2 + O1).
 
-    Both inputs must carry ``order_col``. Returns the merged clean rows with
-    a ``merge_order`` column encoding the reference's output order
-    (has_quota desc, first-seen); callers sort on it when materializing.
+    Both inputs must carry ``order_col``. See :func:`merge_sides`.
     """
-    merged = keyed_merge(
-        yes,
-        no,
-        js_template_key("county", "org_name", "address"),
-        max_cols=COUNT_COLS,
-        or_cols=["teleconsultation"],
-        order_col=order_col,
-    ).withColumn("has_quota", F.col("in_4_weeks") > 0)
-    # Reference output order: has_quota desc (stable) over first-seen order.
-    return merged.withColumn(
-        "merge_order",
-        F.struct(
-            (~F.col("has_quota")).cast("int").alias("hq"),
-            F.col("__src").alias("src"),
-            F.col(order_col).alias("ord"),
-        ),
-    ).drop("__src")
+    return merge_sides(_ranked(yes, no), order_col)

@@ -3,9 +3,11 @@
 Two end-to-end dataflows mirroring the reference's entry points, minus the
 collector (browser/HTTP scraping stays outside the engine — SURVEY §2.1):
 
-  crawl_clean_merge   — §3.1 ``node src/index.js`` equivalent: per-county
-                        raw landing files → dedup → clean → yes/no merge →
-                        ordered union (reference src/index.js:319-436).
+  crawl_clean_merge   — §3.1 ``node src/index.js`` equivalent: every
+                        county's raw landing files read in one call →
+                        dedup → clean → yes/no merge, one plan for the
+                        whole batch with a county-ranked output order
+                        (reference src/index.js:319-436).
   diff_enrich_publish — §3.2+§3.4 ``geocode-diff-merge`` + entrypoint.sh:
                         snapshot carry-forward split, delta-only
                         enrichment, recombine, validation gates, and the
@@ -20,6 +22,11 @@ clean→split→enrich→recombine, and only the delta (typically tiny — the
 observed steady-state delta is 3 rows of 618) reaches the rate-limited
 enrichment stage. The expensive path scales with CHANGE, not data size —
 that is what makes the same DAG viable at 100 TB.
+
+The crawl side follows the same rule: all counties' landing files feed one
+read, one dedup, one clean and one merge, keyed by county rank, so the
+batch runs the same jobs for 1 county or 22 and its cost follows clinics,
+not counties.
 """
 
 from __future__ import annotations
@@ -32,10 +39,10 @@ from pyspark.sql import functions as F
 
 from .io.sources import read_clinic_json
 from .ops.clean import CLEAN_COLUMNS, clean_rows
-from .ops.dedup import uniq_by_key
+from .ops.dedup import first_wins, raw_grid_key
 from .ops.diff import GEO_COLS, recombine, snapshot_split
 from .ops.enrich import EnrichResult, Resolver, empty_cache, enrich, upsert_cache
-from .ops.merge import merge_yes_no
+from .ops.merge import merge_sides
 from .ops.validate import ValidationSplit, split_geocoded, split_valid
 
 # ---------------------------------------------------------------------------
@@ -49,38 +56,37 @@ class CrawlMergeResult:
     taiwan: DataFrame                 # ordered union; taiwan_order column
 
 
-def county_clean_merge(spark: SparkSession, yes_path: str, no_path: str) -> DataFrame:
-    """One county's §3.1 slice: S4 read → A1 dedup → P1-P8 clean → A2/O1
-    merge. Output carries ``merge_order`` (reference output order)."""
-    yes = uniq_by_key(read_clinic_json(spark, yes_path))
-    no = uniq_by_key(read_clinic_json(spark, no_path))
-    return merge_yes_no(clean_rows(yes), clean_rows(no))
-
-
 def crawl_clean_merge(
     spark: SparkSession, county_files: list[tuple[str, str, str]]
 ) -> CrawlMergeResult:
     """Full §3.1: ``county_files`` is an ordered [(county, yes_raw_path,
     no_raw_path)] list (order = the reference's county loop order, U2).
 
-    The whole-Taiwan frame is the union of per-county merges with a
-    ``taiwan_order`` struct — county rank first, then the county-local
-    merge order, exactly ``allMerged.push(...merged)``
-    (reference src/index.js:402-429)."""
-    per_county: dict[str, DataFrame] = {}
-    parts = []
-    for rank, (county, yes_path, no_path) in enumerate(county_files):
-        merged = county_clean_merge(spark, yes_path, no_path)
-        per_county[county] = merged
-        parts.append(
-            merged.withColumn(
-                "taiwan_order",
-                F.struct(F.lit(rank).alias("county_rank"), F.col("merge_order").alias("local")),
-            )
-        )
-    taiwan = parts[0]
-    for p in parts[1:]:
-        taiwan = taiwan.unionByName(p)
+    One plan for every county: S4 read of all landing files in one call →
+    A1 dedup → P1-P8 clean → A2/O1 merge. A file's position in
+    ``[yes_0, no_0, yes_1, no_1, …]`` gives its ``county_rank`` and side:
+    the dedup is keyed per file and the merge per county rank, so each
+    county's rows dedup and merge only among themselves. The whole-Taiwan
+    frame carries a ``taiwan_order`` struct — county rank first, then the
+    county-local merge order, exactly ``allMerged.push(...merged)``
+    (reference src/index.js:402-429); ``per_county`` frames are filters
+    on it."""
+    raw = read_clinic_json(spark, [p for _, yes, no in county_files for p in (yes, no)])
+    clean = clean_rows(first_wins(raw, [F.col("file_index"), raw_grid_key(raw)]))
+    sides = clean.withColumns({
+        "county_rank": F.shiftright("file_index", 1).cast("int"),
+        "__src": F.col("file_index").bitwiseAND(1).cast("int"),
+    }).drop("file_index")
+    merged = merge_sides(sides, by=("county_rank",))
+    cols = [c for c in merged.columns if c != "county_rank"]
+    taiwan = merged.select(
+        *cols,
+        F.struct(F.col("county_rank"), F.col("merge_order").alias("local")).alias("taiwan_order"),
+    )
+    per_county = {
+        county: merged.filter(F.col("county_rank") == rank).select(*cols)
+        for rank, (county, _, _) in enumerate(county_files)
+    }
     return CrawlMergeResult(per_county=per_county, taiwan=taiwan)
 
 

@@ -9,6 +9,7 @@ reading all columns fails here long before it fails a cluster.
 """
 
 import os
+import re
 
 import pytest
 
@@ -83,10 +84,11 @@ def test_cosine_topk_broadcasts_queries(spark):
 
 
 def test_merge_reuses_single_key_exchange(spark):
-    # keyed merge: window (first-row pick) and aggregation share the same
-    # key partitioning — the plan must not shuffle the union twice.
+    # keyed merge: the first-row pick and the max/OR fold are one
+    # aggregation — the plan shuffles the union once, on the key.
     plan = _plan(spark, "ops_keyed_merge_two_sources")
-    assert _n_shuffles(plan) <= 3, f"expected key-exchange reuse:\n{plan}"
+    assert _n_shuffles(plan) == 1, f"expected one key exchange:\n{plan}"
+    assert len(re.findall(r"^Arguments: hashpartitioning\(", plan, re.M)) == 1, plan
 
 
 def test_codegen_everywhere(spark):

@@ -10,7 +10,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from counsel_data_pipeline_spark.io.sinks import csv_text, write_csv, write_json
+from counsel_data_pipeline_spark.io.sinks import collect_rows, csv_text, write_csv, write_json
 
 
 def _df(spark):
@@ -136,3 +136,18 @@ def test_write_training_shards_layout(spark, tmp_path):
         import pyarrow.parquet as pq
 
         assert pq.read_metadata(f).num_rows <= 40
+
+
+def test_collect_rows_orders_like_order_by(spark):
+    # collect_rows sorts inside one partition; the order, nulls included,
+    # must be the global orderBy order of a many-partition frame. Ties may
+    # come in any order, so the sequences of order values are compared.
+    rows = [(i, None if i % 7 == 0 else (i * 37) % 11, None if i % 5 == 0 else i % 3) for i in range(60)]
+    df = spark.createDataFrame(rows, "id int, a int, b int").repartition(4).select(
+        "id", F.struct("a", "b").alias("o"), F.col("b").alias("ob")
+    )
+    for order in ("o", "ob"):
+        want = [r[order] for r in df.orderBy(order).collect()]
+        got = collect_rows(df.select("id", order, F.col(order).alias("v")), order_col=order)
+        assert [r["v"] for r in got] == [v.asDict() if order == "o" and v else v for v in want]
+        assert sorted(r["id"] for r in got) == list(range(60))
