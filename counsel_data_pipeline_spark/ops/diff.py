@@ -85,9 +85,9 @@ def ensure_geo_cols(df: DataFrame) -> DataFrame:
     return df.withColumns(geo) if geo else df
 
 
-def with_diff_keys(df: DataFrame, key3: bool = False) -> DataFrame:
-    """Adds ``__phone_k`` and ``__domain_k``, and with ``key3`` the
-    recombine key ``__k3`` = phone_key + '|' + domain_key."""
+def with_diff_keys(df: DataFrame) -> DataFrame:
+    """Adds ``__phone_k``, ``__domain_k`` and the recombine key ``__k3`` =
+    phone_key + '|' + domain_key."""
     org_url = F.col("org_url") if "org_url" in df.columns else F.lit(None).cast("string")
     map_url = F.col("map_url") if "map_url" in df.columns else F.lit(None).cast("string")
     dom = domain_of(org_url)
@@ -95,8 +95,7 @@ def with_diff_keys(df: DataFrame, key3: bool = False) -> DataFrame:
         "__phone_k": normalize_phone(F.col("phone")),
         "__domain_k": F.when(dom != "", dom).otherwise(domain_of(map_url)),
     }
-    if key3:
-        keys["__k3"] = F.concat(keys["__phone_k"], F.lit("|"), keys["__domain_k"])
+    keys["__k3"] = F.concat(keys["__phone_k"], F.lit("|"), keys["__domain_k"])
     return df.withColumns(keys)
 
 
@@ -180,9 +179,9 @@ def recombine(
     a newly hit only the geo columns come from the lookup
     (``{...r, ...pickGeo(n)}``, :152).
     """
-    clean_k = with_diff_keys(clean, key3=True)
-    carried_k = with_diff_keys(ensure_geo_cols(carried), key3=True)
-    newly_k = with_diff_keys(ensure_geo_cols(newly), key3=True)
+    clean_k = with_diff_keys(clean)
+    carried_k = with_diff_keys(ensure_geo_cols(carried))
+    newly_k = with_diff_keys(ensure_geo_cols(newly))
 
     clean_cols = clean.columns
     full_struct = F.struct(*clean_cols, *GEO_COLS)

@@ -460,7 +460,9 @@ def enrich(
         )
     )
 
-    # Both the hits and the misses read the probe; run it once.
+    # Both the hits and the misses read the probe; run it once. Like
+    # ``resolved`` below, it stays cached after the caller's first action:
+    # the gates and the cache upsert read the result again after publish.
     joined = rows_id.join(hits, rid, "left").cache()
     cache_hit = joined.filter(F.col("__g").isNotNull()).select(
         *rows.columns,

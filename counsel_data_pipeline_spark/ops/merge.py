@@ -17,6 +17,9 @@ Spark sorts are not stable.
 
 from __future__ import annotations
 
+import functools
+import operator
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -42,12 +45,8 @@ def keyed_merge(
     each), take max over ``max_cols`` and logical OR over ``or_cols``.
     Returns the merged rows plus ``__src`` (source rank of the surviving
     first row)."""
-    return ranked_merge(_ranked(primary, secondary), [key], max_cols, or_cols, order_col)
-
-
-def _ranked(primary: DataFrame, secondary: DataFrame) -> DataFrame:
-    """Union of two sources, ranked by ``__src`` (0 = primary)."""
-    return primary.withColumn("__src", F.lit(0)).unionByName(secondary.withColumn("__src", F.lit(1)))
+    ranked = primary.withColumn("__src", F.lit(0)).unionByName(secondary.withColumn("__src", F.lit(1)))
+    return ranked_merge(ranked, [key], max_cols, or_cols, order_col)
 
 
 def ranked_merge(
@@ -62,12 +61,17 @@ def ranked_merge(
     ``(__src, order_col)`` keeps the first row's fields — the struct
     ordering sorts a null ``order_col`` first, as the ascending window of a
     ``row_number`` pick does — while max/OR fold over every row.
-    Columns named ``__*`` other than ``__src`` are dropped."""
+
+    A row with a null key equals no other row, so it has nothing to merge
+    with and is dropped, as an equi-join on the key drops it. Columns
+    named ``__*`` other than ``__src`` are dropped."""
     base_cols = [c for c in ranked.columns if not c.startswith("__")]
     folded = set(max_cols) | set(or_cols)
     first_cols = [c for c in base_cols if c not in folded]
+    keyed = functools.reduce(operator.and_, [k.isNotNull() for k in keys])
     return (
-        ranked.groupBy(*[k.alias(f"__k{i}") for i, k in enumerate(keys)])
+        ranked.filter(keyed)
+        .groupBy(*[k.alias(f"__k{i}") for i, k in enumerate(keys)])
         .agg(
             F.min_by(
                 F.struct(*first_cols, "__src"), F.struct("__src", order_col)
@@ -80,10 +84,12 @@ def ranked_merge(
     )
 
 
-def merge_sides(sides: DataFrame, order_col: str = "ingest_order", by: tuple[str, ...] = ()) -> DataFrame:
-    """A2 + O1 over one frame of clean rows whose ``__src`` is 0 for the
-    has-quota side and 1 for the no-quota side. ``by`` names columns that
-    split the merge into independent groups (the crawl's ``county_rank``).
+def merge_sides(sides: DataFrame, by: list[str], order_col: str = "ingest_order") -> DataFrame:
+    """Merge the has-quota and no-quota clean sets (A2 + O1), given as one
+    frame of clean rows whose ``__src`` is 0 for the has-quota side and 1
+    for the no-quota side. ``by`` names columns that split the merge into
+    independent groups (the crawl's ``county_rank``); ``[]`` merges the
+    whole frame as one county.
 
     Returns the merged clean rows with a ``merge_order`` column encoding
     the reference's output order (has_quota desc, first-seen); callers
@@ -104,11 +110,3 @@ def merge_sides(sides: DataFrame, order_col: str = "ingest_order", by: tuple[str
         F.col(order_col).alias("ord"),
     )
     return merged.withColumns({"has_quota": has_quota, "merge_order": merge_order}).drop("__src")
-
-
-def merge_yes_no(yes: DataFrame, no: DataFrame, order_col: str = "ingest_order") -> DataFrame:
-    """Merge the has-quota and no-quota clean sets (A2 + O1).
-
-    Both inputs must carry ``order_col``. See :func:`merge_sides`.
-    """
-    return merge_sides(_ranked(yes, no), order_col)

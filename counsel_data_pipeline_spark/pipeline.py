@@ -77,7 +77,7 @@ def crawl_clean_merge(
         "county_rank": F.shiftright("file_index", 1).cast("int"),
         "__src": F.col("file_index").bitwiseAND(1).cast("int"),
     }).drop("file_index")
-    merged = merge_sides(sides, by=("county_rank",))
+    merged = merge_sides(sides, by=["county_rank"])
     cols = [c for c in merged.columns if c != "county_rank"]
     taiwan = merged.select(
         *cols,

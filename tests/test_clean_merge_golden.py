@@ -10,14 +10,22 @@ import json
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from counsel_data_pipeline_spark.io.sinks import csv_text, collect_rows
 from counsel_data_pipeline_spark.io.sources import extract_rows, read_clinic_json
 from counsel_data_pipeline_spark.ops.clean import CLEAN_COLUMNS, clean_rows
 from counsel_data_pipeline_spark.ops.dedup import uniq_by_key
-from counsel_data_pipeline_spark.ops.merge import merge_yes_no
+from counsel_data_pipeline_spark.ops.merge import merge_sides
 
 REF_OUT = "/root/reference/src/out"
+
+
+def _merge_yes_no(yes, no):
+    """One county's merge: the yes/no clean sets ranked 0/1."""
+    sides = yes.withColumn("__src", F.lit(0)).unionByName(no.withColumn("__src", F.lit(1)))
+    return merge_sides(sides, by=[])
+
 
 COUNTIES = [
     "01_臺北市", "02_臺中市", "03_臺南市", "04_高雄市", "05_基隆市",
@@ -36,7 +44,7 @@ def _load(spark, name):
 def test_clean_merge_reproduces_golden_json(spark, county):
     yes = uniq_by_key(_load(spark, f"{county}_yes_raw.json"))
     no = uniq_by_key(_load(spark, f"{county}_no_raw.json"))
-    merged = merge_yes_no(clean_rows(yes), clean_rows(no))
+    merged = _merge_yes_no(clean_rows(yes), clean_rows(no))
     got = collect_rows(merged.select("merge_order", *CLEAN_COLUMNS), order_col="merge_order")
 
     expected = json.load(open(os.path.join(REF_OUT, f"{county}_merged_clean.json")))
@@ -50,7 +58,7 @@ def test_clean_merge_reproduces_golden_json(spark, county):
 def test_clean_merge_reproduces_golden_csv(spark, county):
     yes = uniq_by_key(_load(spark, f"{county}_yes_raw.json"))
     no = uniq_by_key(_load(spark, f"{county}_no_raw.json"))
-    merged = merge_yes_no(clean_rows(yes), clean_rows(no))
+    merged = _merge_yes_no(clean_rows(yes), clean_rows(no))
     rows = collect_rows(merged.select("merge_order", *CLEAN_COLUMNS), order_col="merge_order")
 
     got = csv_text(rows, CLEAN_COLUMNS)

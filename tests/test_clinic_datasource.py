@@ -3,15 +3,22 @@
 clean/merge DAG over it must equal the driver-side reader path."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from counsel_data_pipeline_spark.io import clinic_datasource as ds
 from counsel_data_pipeline_spark.io.sources import read_clinic_json
 from counsel_data_pipeline_spark.ops.clean import CLEAN_COLUMNS, clean_rows
 from counsel_data_pipeline_spark.ops.dedup import uniq_by_key
-from counsel_data_pipeline_spark.ops.merge import merge_yes_no
+from counsel_data_pipeline_spark.ops.merge import merge_sides
 
 REF_OUT = "/root/reference/src/out"
 COUNTY = "05_基隆市"
+
+
+def _merge_yes_no(yes, no):
+    """One county's merge: the yes/no clean sets ranked 0/1."""
+    sides = yes.withColumn("__src", F.lit(0)).unionByName(no.withColumn("__src", F.lit(1)))
+    return merge_sides(sides, by=[])
 
 
 def test_datasource_partitions_and_lineage(spark):
@@ -30,9 +37,9 @@ def test_datasource_clean_merge_parity_with_driver_reader(spark):
     for kind in ("yes", "no"):
         side = raw.filter(raw.source_file.endswith(f"{COUNTY}_{kind}_raw.json"))
         sides[kind] = clean_rows(uniq_by_key(side.drop("source_file")))
-    got = merge_yes_no(sides["yes"], sides["no"])
+    got = _merge_yes_no(sides["yes"], sides["no"])
 
-    exp = merge_yes_no(
+    exp = _merge_yes_no(
         clean_rows(uniq_by_key(read_clinic_json(spark, f"{REF_OUT}/{COUNTY}_yes_raw.json"))),
         clean_rows(uniq_by_key(read_clinic_json(spark, f"{REF_OUT}/{COUNTY}_no_raw.json"))),
     )

@@ -1,11 +1,12 @@
 """The daily crawl as one plan (pipeline.crawl_clean_merge).
 
 The single-plan crawl must publish the same bytes as composing the public
-ops county by county (read → uniq_by_key → clean_rows → merge_yes_no,
-county-ranked union), on generated landing zones and on hostile inputs;
-its job count must not grow with the county count. ``keyed_merge``'s
-one-aggregate first-row pick is checked against the ``row_number`` window
-it replaced, with null and tied order values.
+ops county by county (read → uniq_by_key → clean_rows → merge_sides over
+the yes/no union, county-ranked union), on generated landing zones and on
+hostile inputs; its job count must not grow with the county count.
+``keyed_merge``'s one-aggregate first-row pick is checked against the
+``row_number`` window it replaced, with null keys and null and tied order
+values.
 """
 
 import functools
@@ -22,7 +23,7 @@ from counsel_data_pipeline_spark.io.sinks import collect_rows, wrapper_json
 from counsel_data_pipeline_spark.io.sources import read_clinic_json
 from counsel_data_pipeline_spark.ops.clean import CLEAN_COLUMNS, clean_rows
 from counsel_data_pipeline_spark.ops.dedup import uniq_by_key
-from counsel_data_pipeline_spark.ops.merge import keyed_merge, merge_yes_no
+from counsel_data_pipeline_spark.ops.merge import keyed_merge, merge_sides
 from counsel_data_pipeline_spark.schemas import RAW_GRID_ROW
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench"))
@@ -32,10 +33,9 @@ import clinic_gen  # noqa: E402
 def _per_county(spark, county_files) -> DataFrame:
     parts = []
     for rank, (_, yes, no) in enumerate(county_files):
-        merged = merge_yes_no(
-            clean_rows(uniq_by_key(read_clinic_json(spark, yes))),
-            clean_rows(uniq_by_key(read_clinic_json(spark, no))),
-        )
+        yes_c, no_c = (clean_rows(uniq_by_key(read_clinic_json(spark, p))) for p in (yes, no))
+        sides = yes_c.withColumn("__src", F.lit(0)).unionByName(no_c.withColumn("__src", F.lit(1)))
+        merged = merge_sides(sides, by=[])
         order = F.struct(F.lit(rank).alias("county_rank"), F.col("merge_order").alias("local"))
         parts.append(merged.withColumn("taiwan_order", order))
     return functools.reduce(DataFrame.unionByName, parts)
@@ -177,16 +177,19 @@ def test_keyed_merge_matches_window_with_null_and_tied_orders(spark):
         ("a", None, "p-null", 1, False), ("a", 0, "p0", 9, None),
         ("c", 5, "p5", None, None),
         ("d", 1, "tie-1", 2, False), ("d", 1, "tie-2", 3, False), ("d", 2, "p2", 1, True),
+        (None, 0, "p-nokey", 7, True),
     ], schema)
     secondary = spark.createDataFrame([
         ("b", 2, "s2", 4, False), ("b", None, "s-null", None, True),
         ("c", None, "s-null", 6, False),
         ("d", None, "s-null", 8, None),
+        (None, None, "s-nokey", 5, False),
     ], schema)
     args = (F.col("k"), ["n"], ["t"], "o")
     cols = ["k", "__src", "o", "v", "n", "t"]
     got = {r.k: tuple(r) for r in keyed_merge(primary, secondary, *args).select(*cols).collect()}
     want = {r.k: tuple(r) for r in _window_merge(primary, secondary, *args).select(*cols).collect()}
+    # null keys merge with nothing and are dropped, as the window's join did
     assert set(got) == set(want) == {"a", "b", "c", "d"}
     for k in "abc":
         assert got[k] == want[k], k
