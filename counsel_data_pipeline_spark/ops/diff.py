@@ -125,14 +125,12 @@ def _bucket_stats(prev: DataFrame, tag: str, order_col: str) -> DataFrame:
     )
 
 
-def snapshot_split(
+def match_snapshot(
     clean: DataFrame, prev: DataFrame, prev_order: str = "prev_order"
-) -> tuple[DataFrame, DataFrame]:
-    """J1/J5/J6 + T1: returns (carried, need_geo).
-
-    ``carried`` = clean columns + inherited GEO_COLS; ``need_geo`` = clean
-    columns only. Both retain ``clean``'s ingest_order column if present.
-    """
+) -> DataFrame:
+    """J1/J5/J6: ``clean``'s columns plus ``__match``, the GEO_COLS struct
+    a clean row inherits from the snapshot (null when it must be enriched).
+    :func:`split_matched` turns it into (carried, need_geo)."""
     clean_k = with_diff_keys(clean)
     prev_k = with_diff_keys(ensure_geo_cols(prev))
 
@@ -153,11 +151,28 @@ def snapshot_split(
     match = F.when(phone_claims, F.col("__phone_good")).when(
         domain_claims, F.col("__domain_good")
     )
-    clean_cols = clean.columns
-    j = j.select(*clean_cols, match.alias("__match"))
-    carried = j.filter(F.col("__match").isNotNull()).select(*clean_cols, "__match.*")
-    need_geo = j.filter(F.col("__match").isNull()).select(*clean_cols)
+    return j.select(*clean.columns, match.alias("__match"))
+
+
+def split_matched(matched: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """T1: (carried, need_geo) as two filters over one
+    :func:`match_snapshot` frame. ``carried`` = clean columns + inherited
+    GEO_COLS; ``need_geo`` = clean columns only."""
+    clean_cols = [c for c in matched.columns if c != "__match"]
+    carried = matched.filter(F.col("__match").isNotNull()).select(*clean_cols, "__match.*")
+    need_geo = matched.filter(F.col("__match").isNull()).select(*clean_cols)
     return carried, need_geo
+
+
+def snapshot_split(
+    clean: DataFrame, prev: DataFrame, prev_order: str = "prev_order"
+) -> tuple[DataFrame, DataFrame]:
+    """J1/J5/J6 + T1: returns (carried, need_geo).
+
+    ``carried`` = clean columns + inherited GEO_COLS; ``need_geo`` = clean
+    columns only. Both retain ``clean``'s ingest_order column if present.
+    """
+    return split_matched(match_snapshot(clean, prev, prev_order))
 
 
 def recombine(

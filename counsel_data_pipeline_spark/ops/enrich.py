@@ -15,24 +15,33 @@ Reference semantics (src/geocode.js:472-514 ``resolveOneRow``):
      ``approx='county_table'`` (:443-469).
   Failures end with ``note='No result'`` and null coordinates (:538).
 
-Spark shape (the whole point of the redesign):
+Spark shape:
 
-  * The CACHE PROBE is declarative and fully parallel: candidate fan-out
-    via one Arrow-batched pandas UDF (`array<string>` + ``posexplode`` to
-    keep priority rank), broadcast hash join against the cache table,
-    county validation as a Column predicate, ``min_by(rank)`` to pick the
-    highest-priority hit. At 100 TB the cache is a keyed table broadcast
-    to every executor — no Python in the hot path.
-  * Only cache MISSES reach Python: a single ``coalesce(1)`` partition
-    (narrow, no shuffle) runs the sequential waterfall inside
-    ``mapInPandas``, because the reference's 1-request/1.2-s global rate
-    limit (src/geocode.js:41) makes this stage *semantically* sequential.
-    Retries live inside the UDF — Spark task retries are the wrong
-    granularity (they would re-issue the whole partition against a
-    rate-limited API).
-  * New cache entries come back as a second DataFrame for a keyed
-    last-write-wins upsert — idempotent under task re-execution, unlike
-    the reference's per-row file rewrite (src/geocode.js:544-548).
+  * The input is the DELTA, the rows the snapshot diff could not carry
+    forward: the reference geocodes it in one process, one request at a
+    time, and it is a few rows of a few hundred. ``enrich`` collects it
+    once and builds the F19 candidates in the driver.
+  * The CACHE PROBE is one Spark join: the cache stays a partitioned
+    table and streams, the candidate frame (row id, priority rank, query,
+    county, address) is broadcast, county validation is the
+    ``expected_county_col``/``county_matches_col`` Column predicate, and
+    only matching entries reach the driver, which keeps the
+    highest-priority hit per row.
+  * Cache MISSES run the sequential waterfall in the driver, because the
+    reference's 1-request/1.2-s global rate limit (src/geocode.js:41)
+    makes this stage *semantically* sequential. Retries live in the
+    waterfall (E3), one resolver call at a time.
+  * Both results — ``enriched`` and the new cache entries for a keyed
+    last-write-wins upsert (unlike the reference's per-row file rewrite,
+    src/geocode.js:544-548) — are Arrow-backed JVM frames. Every resolver
+    call happens once per ``enrich`` call: reading the frames again never
+    re-runs the waterfall, no Python worker serves them and nothing is
+    cached.
+
+Scale bound: the delta and its enrichment live in the driver. The caller
+that publishes collects every final row anyway (``publish_to_store``), and
+the delta is a subset of those rows, so this adds no new limit; the cache
+itself is never collected or broadcast whole.
 
 The network resolver is pluggable: tests (and this container) use the
 deterministic :class:`StubResolver`; a real HTTP implementation plugs in
@@ -45,16 +54,20 @@ import hashlib
 import json
 import os
 import time
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any, Protocol
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    DoubleType, LongType, MapType, StringType, StructField, StructType,
+)
 
-from .diff import GEO_COLS, ensure_geo_cols
+from ..io.sources import _jvm_frame
+from .diff import ensure_geo_cols
 from .text import (
     build_query_candidates,
     build_street_centroid_candidates,
@@ -337,7 +350,8 @@ def with_retry(
 @dataclass
 class RateLimiter:
     """E4: global min-interval pacing (reference: Bottleneck minTime=1200,
-    maxConcurrent=1). Lives inside the single enrichment partition."""
+    maxConcurrent=1). One limiter paces every resolver call of an
+    ``enrich`` call."""
 
     min_interval_s: float = 1.2
     clock: Callable[[], float] = time.monotonic
@@ -411,6 +425,94 @@ def _geo_struct_cols() -> list[str]:
     return ["lat", "lng", "confidence", "formatted", "components", "source", "approx"]
 
 
+_GEO_STRUCT = StructType([
+    StructField("lat", DoubleType()),
+    StructField("lng", DoubleType()),
+    StructField("confidence", LongType()),
+    StructField("formatted", StringType()),
+    StructField("components", MapType(StringType(), StringType())),
+    StructField("source", StringType()),
+    StructField("approx", StringType()),
+    StructField("usedQuery", StringType()),
+    StructField("note", StringType()),
+])
+_CACHE_STRUCT = StructType([StructField("query", StringType()), *_GEO_STRUCT.fields[:7]])  # CACHE_SCHEMA
+
+
+def _probe_cache(
+    spark, cache: DataFrame, recs: list[dict], candidates: list[list[str]]
+) -> dict[int, dict]:
+    """J3/E6: row index → its highest-priority county-valid cache hit
+    (the geo columns plus ``usedQuery``). One join: the cache streams, the
+    candidate frame is broadcast, and only matching entries are collected."""
+    cand_rows = [
+        {"rid": i, "rank": k, "q": q, "county": recs[i]["county"], "address": recs[i]["address"]}
+        for i, qs in enumerate(candidates)
+        for k, q in enumerate(qs)
+    ]
+    cand_schema = pa.schema([("rid", pa.int64()), ("rank", pa.int64()), ("q", pa.string()),
+                             ("county", pa.string()), ("address", pa.string())])
+    cand = _jvm_frame(spark, pa.Table.from_pylist(cand_rows, schema=cand_schema)).select(
+        "rid", "rank", "q", expected_county_col(F.col("county"), F.col("address")).alias("exp")
+    )
+    cache = ensure_cache_schema(cache)
+    hits = (
+        cache.join(F.broadcast(cand), cache["query"] == cand["q"])
+        .filter(county_matches_col(F.col("components"), F.col("formatted"), F.col("exp")))
+        .select("rid", "rank", *_geo_struct_cols(), F.col("query").alias("usedQuery"))
+    )
+    best = {}
+    for h in hits.collect():
+        if h.rid not in best or h.rank < best[h.rid].rank:
+            best[h.rid] = h
+    return {rid: {c: h[c] for c in (*_geo_struct_cols(), "usedQuery")} for rid, h in best.items()}
+
+
+def _waterfall(
+    rec: dict,
+    queries: list[str],
+    call: Callable[[Resolver, str, Any], dict | None],
+    resolver: Resolver,
+    nominatim: Resolver | None,
+) -> tuple[dict | None, str | None, str | None]:
+    """E1–E5 for one cache miss: (geo, usedQuery, cache write-back query)."""
+    county, addr, org = rec["county"], rec["address"], rec["org_name"]
+    prox = get_proximity(county, addr)
+    expected = get_expected_county(county, addr)
+
+    # 2) primary, then 3) secondary, over ranked candidates, county-validated
+    for res in [resolver] + ([nominatim] if nominatim else []):
+        for q in queries:
+            g = call(res, q, prox)
+            if g and county_matches(g.get("components"), g.get("formatted"), expected):
+                return dict(g), q, q
+    # 4) street-centroid fallback (F20), validated once
+    street_qs = build_street_centroid_candidates(addr or "", org or "")
+    for res in [resolver] + ([nominatim] if nominatim else []):
+        g, q = None, None
+        for q in street_qs:
+            g = call(res, q, prox)
+            if g:
+                break
+        if g:
+            if county_matches(g.get("components"), g.get("formatted"), expected):
+                return {**g, "approx": "street"}, q, None
+            break  # reference takes first result, pass or fail
+    # 5) admin query, then built-in county centroid
+    pc, pd_ = parse_region_parts(addr or "")
+    for q in [x for x in (pc + pd_ if pc and pd_ else "", pc) if x]:
+        g = call(resolver, q, prox)
+        if g:
+            return {**g, "approx": "admin"}, q, None
+    if prox is not None:
+        return {
+            "lat": prox[0], "lng": prox[1], "confidence": None,
+            "formatted": (pc + pd_) or "county-centroid",
+            "components": {}, "source": "centroid", "approx": "county_table",
+        }, "county_table", None
+    return None, None, None
+
+
 def enrich(
     rows: DataFrame,
     cache: DataFrame | None,
@@ -427,163 +529,44 @@ def enrich(
     appended, plus the resolver-discovered cache entries for upsert.
     ``min_interval_s`` defaults to 0 for tests; production mirrors the
     reference's 1.2 s.
+
+    The rows are collected once and every resolver call happens here, in
+    the driver; both returned frames are Arrow-backed JVM frames over the
+    results, so reading them again never calls a resolver.
     """
     spark = rows.sparkSession
-    cache = ensure_cache_schema(cache) if cache is not None else empty_cache(spark)
+    table = rows.toArrow()
+    recs = table.select(["county", "org_name", "address"]).to_pylist()
+    candidates = [build_query_candidates(r["address"] or "", r["org_name"] or "") for r in recs]
+    hits = _probe_cache(spark, cache, recs, candidates) if cache is not None and any(candidates) else {}
 
-    @F.pandas_udf(ArrayType(StringType()))
-    def primary_candidates(address: pd.Series, org: pd.Series) -> pd.Series:
-        return pd.Series(
-            [build_query_candidates(a or "", o or "") for a, o in zip(address, org)]
-        )
+    limiter = RateLimiter(min_interval_s=min_interval_s)
 
-    rid = "__enrich_rid"
-    rows_id = rows.withColumn(rid, F.monotonically_increasing_id())
+    def call(res: Resolver, q: str, prox):
+        limiter.wait()
+        return with_retry(lambda: res.resolve(q, prox), sleep=retry_sleep)
 
-    # ---- phase 1: cache probe (parallel, declarative) ----
-    cand = rows_id.select(
-        F.col(rid),
-        expected_county_col(F.col("county"), F.col("address")).alias("__exp"),
-        F.posexplode(primary_candidates(F.col("address"), F.col("org_name"))).alias(
-            "__rank", "__q"
-        ),
-    )
-    hits = (
-        cand.join(F.broadcast(cache), cand["__q"] == cache["query"], "inner")
-        .filter(county_matches_col(F.col("components"), F.col("formatted"), F.col("__exp")))
-        .groupBy(rid)
-        .agg(
-            F.min_by(
-                F.struct(*_geo_struct_cols(), F.col("__q").alias("usedQuery")),
-                F.col("__rank"),
-            ).alias("__g")
-        )
-    )
+    geo_rows, new_entries = [], []
+    for i, (rec, queries) in enumerate(zip(recs, candidates)):
+        if i in hits:
+            geo_rows.append({**hits[i], "note": None})
+            continue
+        geo, used, cache_q = _waterfall(rec, queries, call, resolver, nominatim)
+        if geo is None:
+            geo_rows.append({"usedQuery": queries[0] if queries else "", "note": "No result"})
+            continue
+        geo = {c: geo.get(c) for c in _geo_struct_cols()}
+        geo["components"] = geo["components"] or {}
+        geo_rows.append({**geo, "usedQuery": used, "note": None})
+        if cache_q is not None:
+            new_entries.append({"query": cache_q, **geo})
 
-    # Both the hits and the misses read the probe; run it once. Like
-    # ``resolved`` below, it stays cached after the caller's first action:
-    # the gates and the cache upsert read the result again after publish.
-    joined = rows_id.join(hits, rid, "left").cache()
-    cache_hit = joined.filter(F.col("__g").isNotNull()).select(
-        *rows.columns,
-        "__g.*",  # the geo struct columns, then usedQuery
-        F.lit(None).cast("string").alias("note"),
-    )
-    misses = joined.filter(F.col("__g").isNull()).select(*rows.columns, rid)
-
-    # ---- phase 2: sequential waterfall over misses (single partition) ----
-    out_schema = misses.schema
-    from pyspark.sql.types import (  # local: keep module import surface tiny
-        DoubleType, LongType, MapType, StructField, StructType,
-    )
-
-    waterfall_fields = list(out_schema.fields) + [
-        StructField("lat", DoubleType()),
-        StructField("lng", DoubleType()),
-        StructField("confidence", LongType()),
-        StructField("formatted", StringType()),
-        StructField("components", MapType(StringType(), StringType())),
-        StructField("source", StringType()),
-        StructField("approx", StringType()),
-        StructField("usedQuery", StringType()),
-        StructField("note", StringType()),
-        StructField("__cache_q", StringType()),  # non-null → write-back entry
-    ]
-    waterfall_schema = StructType(waterfall_fields)
-
-    def run_waterfall(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        limiter = RateLimiter(min_interval_s=min_interval_s)
-
-        def call(res: Resolver, q: str, prox):
-            limiter.wait()
-            return with_retry(lambda: res.resolve(q, prox), sleep=retry_sleep)
-
-        for pdf in batches:
-            out_rows = []
-            for rec in pdf.to_dict("records"):
-                county, addr, org = rec.get("county"), rec.get("address"), rec.get("org_name")
-                queries = build_query_candidates(addr or "", org or "")
-                prox = get_proximity(county, addr)
-                expected = get_expected_county(county, addr)
-                geo, used, cache_q = None, None, None
-
-                # 2) primary over ranked candidates, county-validated (E1)
-                for q in queries:
-                    g = call(resolver, q, prox)
-                    if g and county_matches(g.get("components"), g.get("formatted"), expected):
-                        geo, used, cache_q = dict(g), q, q
-                        break
-                # 3) secondary (E2, optional)
-                if geo is None and nominatim is not None:
-                    for q in queries:
-                        g = call(nominatim, q, prox)
-                        if g and county_matches(
-                            g.get("components"), g.get("formatted"), expected
-                        ):
-                            geo, used, cache_q = dict(g), q, q
-                            break
-                # 4) street-centroid fallback (F20), validated once
-                if geo is None:
-                    street_qs = build_street_centroid_candidates(addr or "", org or "")
-                    for res in [resolver] + ([nominatim] if nominatim else []):
-                        g, q = None, None
-                        for q in street_qs:
-                            g = call(res, q, prox)
-                            if g:
-                                break
-                        if g:
-                            if county_matches(
-                                g.get("components"), g.get("formatted"), expected
-                            ):
-                                geo, used = {**g, "approx": "street"}, q
-                            break  # reference takes first result, pass or fail
-                # 5) admin query, then built-in county centroid
-                if geo is None:
-                    pc, pd_ = parse_region_parts(addr or "")
-                    for q in [x for x in (pc + pd_ if pc and pd_ else "", pc) if x]:
-                        g = call(resolver, q, prox)
-                        if g:
-                            geo, used = {**g, "approx": "admin"}, q
-                            break
-                    if geo is None and prox is not None:
-                        geo, used = {
-                            "lat": prox[0], "lng": prox[1], "confidence": None,
-                            "formatted": (pc + pd_) or "county-centroid",
-                            "components": {}, "source": "centroid",
-                            "approx": "county_table",
-                        }, "county_table"
-
-                base = dict(rec)
-                if geo is not None:
-                    base.update(
-                        lat=geo.get("lat"), lng=geo.get("lng"),
-                        confidence=geo.get("confidence"), formatted=geo.get("formatted"),
-                        components=geo.get("components") or {},
-                        source=geo.get("source"), approx=geo.get("approx"),
-                        usedQuery=used, note=None, __cache_q=cache_q,
-                    )
-                else:
-                    base.update(
-                        lat=None, lng=None, confidence=None, formatted=None,
-                        components=None, source=None, approx=None,
-                        usedQuery=queries[0] if queries else "", note="No result",
-                        __cache_q=None,
-                    )
-                out_rows.append(base)
-            yield pd.DataFrame(out_rows, columns=[f.name for f in waterfall_fields])
-
-    resolved = misses.coalesce(1).mapInPandas(run_waterfall, waterfall_schema)
-    resolved.cache()  # two consumers below; recompute would re-call resolvers
-
-    new_entries = resolved.filter(F.col("__cache_q").isNotNull()).select(
-        F.col("__cache_q").alias("query"),
-        *[F.col(c) for c in _geo_struct_cols()],
-    )
-    resolved_rows = resolved.select(
-        *rows.columns, *[F.col(c) for c in GEO_COLS]
-    )
-    enriched = cache_hit.unionByName(resolved_rows)
-    return EnrichResult(enriched=enriched, new_cache_entries=new_entries)
+    geo_table = pa.Table.from_pylist(geo_rows, schema=to_arrow_schema(_GEO_STRUCT))
+    for f in geo_table.schema:
+        table = table.append_column(f, geo_table.column(f.name))
+    enriched = _jvm_frame(spark, table, StructType(rows.schema.fields + _GEO_STRUCT.fields))
+    entries = pa.Table.from_pylist(new_entries, schema=to_arrow_schema(_CACHE_STRUCT))
+    return EnrichResult(enriched=enriched, new_cache_entries=_jvm_frame(spark, entries, _CACHE_STRUCT))
 
 
 def ensure_cache_schema(cache: DataFrame) -> DataFrame:

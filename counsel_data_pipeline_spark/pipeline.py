@@ -17,11 +17,15 @@ collector (browser/HTTP scraping stays outside the engine — SURVEY §2.1):
 
 Where the reference crossed an OS-process boundary with temp files between
 diff and geocode (spawnSync, src/geocode-diff-merge.js:113-129), here the
-whole incremental flow is ONE Spark lineage: Catalyst pipelines
-clean→split→enrich→recombine, and only the delta (typically tiny — the
-observed steady-state delta is 3 rows of 618) reaches the rate-limited
-enrichment stage. The expensive path scales with CHANGE, not data size —
-that is what makes the same DAG viable at 100 TB.
+incremental flow runs in one session: the snapshot split is one join,
+persisted once per batch, and the carried rows and the delta are filters
+over it. Only the delta (typically tiny — the observed steady-state delta
+is 3 rows of 618) reaches enrichment, which collects it, probes the cache
+with one Spark join and runs the rate-limited waterfall for the misses in
+the driver; its result comes back as an Arrow-backed frame that recombine
+joins in clean order. The expensive path scales with CHANGE, not data
+size. The driver-side enrichment adds no new scale limit: the publish
+step collects every final row anyway, and the delta is a subset of them.
 
 The crawl side follows the same rule: all counties' landing files feed one
 read, one dedup, one clean and one merge, keyed by county rank, so the
@@ -40,7 +44,7 @@ from pyspark.sql import functions as F
 from .io.sources import read_clinic_json
 from .ops.clean import CLEAN_COLUMNS, clean_rows
 from .ops.dedup import first_wins, raw_grid_key
-from .ops.diff import GEO_COLS, recombine, snapshot_split
+from .ops.diff import GEO_COLS, match_snapshot, recombine, split_matched
 from .ops.enrich import EnrichResult, Resolver, empty_cache, enrich, upsert_cache
 from .ops.merge import merge_sides
 from .ops.validate import ValidationSplit, split_geocoded, split_valid
@@ -125,9 +129,10 @@ def diff_enrich_publish(
     spark = clean.sparkSession
     cache = cache if cache is not None else empty_cache(spark)
 
-    carried, need_geo = snapshot_split(clean, prev)
-    carried = carried.cache()
-    need_geo = need_geo.cache()
+    # The batch's one persisted frame: carried and need_geo are filters
+    # over it, so the split join runs once for the count, the enrichment
+    # collect, the publish collect and the gates.
+    carried, need_geo = split_matched(match_snapshot(clean, prev).cache())
     change_count = need_geo.count()  # A4; also materializes the split once
 
     if change_count == 0:

@@ -309,7 +309,7 @@ def _enrich_fixture_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ops_enrich_waterfall",
     oracle="""
         -- Independent restatement of the waterfall's routing function:
-        -- custkey % 5 = 0 rows are seeded into the cache (J3 broadcast
+        -- custkey % 5 = 0 rows are seeded into the cache (J3 cache
         -- probe wins, E6); of the rest, even house numbers pass the
         -- primary stub (E1), odd fall through to the secondary (E2).
         -- Counts + exact custkey sums per (county, provenance) attest
@@ -335,8 +335,9 @@ def _enrich_fixture_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM tagged GROUP BY county, source
     """,
     description="E1–E6 + J3 end-to-end: the REAL enrich() waterfall "
-    "(broadcast cache probe with county validation, then the rate-limited "
-    "sequential resolver waterfall in one mapInPandas partition) run over "
+    "(cache probe join against the broadcast candidates with county "
+    "validation, then the rate-limited sequential resolver waterfall in "
+    "the driver, results as an Arrow-backed frame) run over "
     "a deterministic customer-derived TW-address fixture with stub "
     "resolvers whose accept predicates partition the rows — provenance "
     "counts and exact custkey sums per (county, source) prove every row "

@@ -200,7 +200,8 @@ def test_upsert_cache_last_write_wins(spark):
 
 
 def test_enrichment_stage_is_single_partition(spark):
-    # the rate-limited waterfall must not fan out (E4 design constraint)
+    # the rate-limited waterfall must not fan out (E4 design constraint):
+    # however many partitions feed it, it runs in the driver, one row at a time
     rows = spark.createDataFrame(
         [{"county": "臺北市", "org_name": f"o{i}",
           "address": f"臺北市中山區南京東路2段{i}號"} for i in range(1, 9)]
@@ -334,31 +335,38 @@ def test_waterfall_with_mocked_real_adapters(spark):
          "address": {"city": "臺北市"}}
     ]
     nm = _MockTransport({"nominatim": (200, nomi_payload)})
+    seen = []
+
+    def tap(name, transport):
+        def send(*args):
+            seen.append(name)
+            return transport(*args)
+        return send
+
     rows = spark.createDataFrame(
         [{"county": "臺北市", "org_name": "測試診所", "address": "臺北市信義區市府路45號"}]
     )
     res = E.enrich(
         rows, None,
-        E.OpenCageResolver(api_key="k", transport=oc),
-        nominatim=E.NominatimResolver(transport=nm),
+        E.OpenCageResolver(api_key="k", transport=tap("opencage", oc)),
+        nominatim=E.NominatimResolver(transport=tap("nominatim", nm)),
     )
     [r] = res.enriched.collect()
-    # source == nominatim proves the primary was consulted and came up dry
-    # (the waterfall only reaches the fallback after the OpenCage stages);
-    # oc.requests can't be asserted here — the resolver executes in a
-    # cloudpickled executor copy, not this driver-side object.
     assert r["lat"] == 25.04 and r["source"] == "nominatim"
+    # the primary was consulted and came up dry before the fallback ran
+    assert oc.requests and nm.requests
+    assert seen == ["opencage"] * len(oc.requests) + ["nominatim"] * len(nm.requests)
 
 
 def test_waterfall_reexecution_is_idempotent(spark):
-    """SURVEY §7 hard-parts promise (task-retry safety): a Spark task
-    retry re-executes the mapInPandas waterfall partition on the SAME
-    batch. The partition function must be a pure function of its input
-    (StubResolver is deterministic; the reference's pacing jitter lives
-    in the rate limiter, which shapes timing, never results), so a
-    re-executed partition yields byte-identical rows and write-back
-    entries — and re-applying that write-back through upsert_cache's
-    last-write-wins merge leaves the cache state unchanged."""
+    """SURVEY §7 hard-parts promise (retry safety): a failed batch is
+    re-run, re-running the waterfall on the SAME rows. The waterfall must
+    be a pure function of its input (StubResolver is deterministic; the
+    reference's pacing jitter lives in the rate limiter, which shapes
+    timing, never results), so a re-run yields byte-identical rows and
+    write-back entries — and re-applying that write-back through
+    upsert_cache's last-write-wins merge leaves the cache state
+    unchanged."""
     rows = spark.createDataFrame(
         [
             # resolver path (cache miss, address resolvable)
@@ -408,3 +416,91 @@ def test_waterfall_reexecution_is_idempotent(spark):
     assert {e["query"] for e in snapshot(once)} == {
         e["query"] for e in entries_1
     }
+
+
+# ---------------------------------------------------------------------------
+# The driver-side contract: every resolver call happens inside enrich()
+# ---------------------------------------------------------------------------
+
+
+_ADDR = "臺北市中山區南京東路2段125號"
+
+
+def test_miss_calls_resolver_in_candidate_order_once(spark):
+    from counsel_data_pipeline_spark.ops.text import build_query_candidates
+
+    queries = build_query_candidates(_ADDR, "測試診所")
+    target = queries[2]
+    stub = E.StubResolver(accepts=lambda q: q == target)
+    rows = spark.createDataFrame([{"county": "臺北市", "org_name": "測試診所", "address": _ADDR}])
+    res = E.enrich(rows, None, stub)
+    assert stub.calls == queries[:3]
+    for _ in range(2):
+        [r] = res.enriched.collect()
+        assert r.usedQuery == target and r.source == "opencage"
+        assert [e.query for e in res.new_cache_entries.collect()] == [target]
+    assert stub.calls == queries[:3]
+
+
+def test_probe_keeps_the_highest_priority_county_valid_hit(spark):
+    from counsel_data_pipeline_spark.ops.text import build_query_candidates
+
+    queries = build_query_candidates(_ADDR, "測試診所")
+
+    def entry(q, lat, county):
+        return (q, lat, 121.5, 9, county, {"county": county}, "opencage", None)
+
+    cache = spark.createDataFrame(
+        [entry(queries[5], 25.5, "臺北市"), entry(queries[1], 22.0, "高雄市"),
+         entry(queries[3], 25.3, "臺北市")],
+        E.CACHE_SCHEMA,
+    )
+    rows = spark.createDataFrame([{"county": "臺北市", "org_name": "測試診所", "address": _ADDR}])
+    stub = E.StubResolver()
+    [r] = E.enrich(rows, cache, stub).enriched.collect()
+    assert (r.usedQuery, r.lat, r.note) == (queries[3], 25.3, None)
+    assert stub.calls == []
+
+
+def test_enrich_plans_have_no_python_operator_and_persist_nothing(spark):
+    from counsel_data_pipeline_spark.ops.text import build_query_candidates
+
+    hit_addr = "臺北市信義區市府路45號"
+    top = build_query_candidates(hit_addr, "a所")[0]
+    cache = spark.range(1).select(  # a JVM-backed cache: no Python RDD to scan
+        F.lit(top).alias("query"), F.lit(25.0).alias("lat"), F.lit(121.5).alias("lng"),
+        F.lit(9).cast("long").alias("confidence"), F.lit("臺北市").alias("formatted"),
+        F.create_map(F.lit("county"), F.lit("臺北市")).alias("components"),
+        F.lit("opencage").alias("source"), F.lit(None).cast("string").alias("approx"),
+    )
+    rows = spark.createDataFrame(
+        [("臺北市", "a所", hit_addr), ("臺北市", "b所", _ADDR)],
+        "county string, org_name string, address string",
+    )
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    res = E.enrich(rows, cache, E.StubResolver())
+    for df in (res.enriched, res.new_cache_entries):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        for op in ("ArrowEvalPython", "MapInPandas", "BatchEvalPython"):
+            assert op not in plan, plan
+    got = {r.org_name: r for r in res.enriched.collect()}
+    assert (got["a所"].lat, got["a所"].usedQuery) == (25.0, top)  # served by the probe
+    assert got["b所"].source == "opencage"
+    assert res.new_cache_entries.count() == 1
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_empty_rows_give_empty_frames_and_no_resolver_call(spark):
+    from counsel_data_pipeline_spark.ops.diff import GEO_COLS
+
+    rows = spark.createDataFrame([], "county string, org_name string, address string, n long")
+    cache = spark.createDataFrame(
+        [("q", 1.0, 1.0, 1, "f", {}, "opencage", None)], E.CACHE_SCHEMA
+    )
+    stub = E.StubResolver()
+    res = E.enrich(rows, cache, stub)
+    assert res.enriched.columns == [*rows.columns, *GEO_COLS]
+    assert res.enriched.count() == 0
+    assert res.new_cache_entries.schema == E.empty_cache(spark).schema
+    assert res.new_cache_entries.count() == 0
+    assert stub.calls == []

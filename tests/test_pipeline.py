@@ -5,10 +5,14 @@ committed artifacts.
 of the committed per-county golden outputs.
 §3.2: today's clean (618) vs published snapshot (614) → 3-row delta,
 publish=True, carried coordinates intact, delta enriched via cache+stub.
+
+One generated batch (``perfbench/clinic_gen``) runs crawl → diff/enrich →
+publish with the batch's resource footprint pinned.
 """
 
 import json
 import os
+import sys
 
 from pyspark.sql import functions as F
 
@@ -17,6 +21,9 @@ from counsel_data_pipeline_spark.io.sources import extract_rows, read_clinic_jso
 from counsel_data_pipeline_spark.ops.clean import CLEAN_COLUMNS
 from counsel_data_pipeline_spark.ops.enrich import StubResolver
 from test_enrich import _cache_df
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench"))
+import clinic_gen  # noqa: E402
 
 REF_OUT = "/root/reference/src/out"
 CLEAN = "/root/reference/out/taiwan_merged_clean.json"
@@ -148,3 +155,39 @@ def test_crawl_clean_merge_whole_taiwan_golden(spark):
     assert len(got) == expected["total"] == len(exp_rows)
     for i, (g, e) in enumerate(zip(got, exp_rows)):
         assert g == e, f"row {i} mismatch:\n got={g}\n exp={e}"
+
+
+def test_generated_batch_persists_one_frame_and_publishes_every_clinic(spark, tmp_path):
+    from counsel_data_pipeline_spark.io.object_store import LocalFSStore
+    from counsel_data_pipeline_spark.io.sinks import collect_rows, wrapper_json
+    from counsel_data_pipeline_spark.ops.enrich import CACHE_SCHEMA
+
+    inp = clinic_gen.generate(str(tmp_path / "landing"), 7, n_counties=2, clinics_per_county=30)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+
+    merged = P.crawl_clean_merge(spark, inp.county_files)
+    rows = collect_rows(merged.taiwan.select(*CLEAN_COLUMNS, "taiwan_order"), order_col="taiwan_order")
+    clean_path = tmp_path / "taiwan_merged_clean.json"
+    clean_path.write_text(wrapper_json(rows), encoding="utf-8")
+    clean = read_clinic_json(spark, str(clean_path))
+    prev = read_clinic_json(spark, inp.prev_path, default_empty=True).withColumnRenamed(
+        "ingest_order", "prev_order"
+    )
+    with open(inp.cache_path, encoding="utf-8") as f:
+        cache_rows = [{"query": k, **v} for k, v in json.load(f).items()]
+    cache = spark.createDataFrame(cache_rows, CACHE_SCHEMA)
+    store = LocalFSStore(str(tmp_path / "store"))
+    res = P.diff_enrich_publish(clean, prev, cache, StubResolver())
+    receipt = P.publish_to_store(
+        res, store, current_key="public/clinics.json", snapshot_prefix="snapshots", ts="20261016T070000Z"
+    )
+    # the gates and the upserted cache read the batch after its publish
+    assert res.schema_gate.quarantined.count() == 0
+    assert res.geocode_gate.valid.count() + res.geocode_gate.quarantined.count() == inp.n_clinics
+    assert res.cache.count() >= len(cache_rows)  # the upsert loses no entry
+
+    assert persistent().size() - before == 1
+    assert res.change_count == inp.change_count
+    doc = json.loads(store.get(receipt.current_key))
+    assert doc["total"] == len(doc["rows"]) == inp.n_clinics
