@@ -10,10 +10,6 @@ Reference behavior reproduced (``src/gcs-io.js:10-30`` +
 - ``upload``: publish a local file to the store (the reference sets
   content-type/no-cache metadata; backends may ignore hints they don't
   support).
-- dated snapshots: the publish step writes both a stable "latest" key
-  and a dated copy (``<prefix>/<YYYY-MM-DD>/<name>``, T5 retention);
-  ``latest_dated`` resolves the newest dated copy by key order — dates
-  are zero-padded ISO so lexicographic max IS the newest.
 
 The backend protocol is three methods over bytes; :class:`LocalFSStore`
 is the in-tree implementation (this container has no cloud SDK or
@@ -25,7 +21,6 @@ exactly like the geocoder transports and the collector transport.
 from __future__ import annotations
 
 import os
-import re
 from dataclasses import dataclass
 from typing import Protocol
 
@@ -101,36 +96,3 @@ def upload(store: ObjectStore, local_path: str, key: str) -> None:
     with open(local_path, "rb") as f:
         store.put(key, f.read())
 
-
-_DATED_RE = re.compile(r"^\d{4}-\d{2}-\d{2}$")
-
-
-def publish_snapshot(
-    store: ObjectStore, local_path: str, prefix: str, name: str, date: str
-) -> tuple[str, str]:
-    """K3+T5: publish ``local_path`` as BOTH the stable latest key
-    (``<prefix>/<name>``) and a dated retention copy
-    (``<prefix>/<date>/<name>``). ``date`` must be ISO (zero-padded) so
-    the dated keyspace sorts chronologically."""
-    if not _DATED_RE.match(date):
-        raise ValueError(f"date must be YYYY-MM-DD, got {date!r}")
-    with open(local_path, "rb") as f:
-        data = f.read()
-    latest_key = f"{prefix}/{name}"
-    dated_key = f"{prefix}/{date}/{name}"
-    store.put(dated_key, data)   # retention copy first:
-    store.put(latest_key, data)  # latest never points at missing history
-    return latest_key, dated_key
-
-
-def latest_dated(store: ObjectStore, prefix: str, name: str) -> str | None:
-    """Newest dated snapshot key under ``prefix``, or None. ISO dates
-    make lexicographic max the newest; non-dated keys are ignored."""
-    best = None
-    for key in store.list(prefix + "/"):
-        rest = key[len(prefix) + 1 :]
-        parts = rest.split("/")
-        if len(parts) == 2 and parts[1] == name and _DATED_RE.match(parts[0]):
-            if best is None or key > best:
-                best = key
-    return best

@@ -24,11 +24,13 @@ Reference semantics (src/geocode-diff-merge.js:66-95,141-156):
   T6 quirk (kept deliberately): a matched row inherits OLD coordinates
   even if its address changed — carry-forward wins.
 
-Spark shape: two broadcast-or-shuffled left joins against per-key
-"first-good-row" aggregates of the snapshot; the anti/semi split falls out
-of one join + a null filter instead of two passes over prev. At 100 TB the
-snapshot aggregates shrink to one row per key before the join, so the join
-build side is bounded by key cardinality, not snapshot size.
+Spark shape: the split is two broadcast-or-shuffled left joins against
+per-key "first-good-row" aggregates of the snapshot; the anti/semi split
+falls out of one join + a null filter instead of two passes over prev. At
+100 TB the snapshot aggregates shrink to one row per key before the join,
+so the join build side is bounded by key cardinality, not snapshot size.
+The split computes ``__k3`` once and both halves keep it, so recombine is
+one aggregate per key3 over carried ∪ newly, joined back onto that union.
 """
 
 from __future__ import annotations
@@ -36,10 +38,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-GEO_COLS = [
-    "lat", "lng", "confidence", "formatted", "components", "source", "approx",
-    "usedQuery", "note",
-]
+from ..schemas import GEO_COLUMNS
+
+GEO_COLS = GEO_COLUMNS.fieldNames()
 
 
 def normalize_phone(c: Column) -> Column:
@@ -61,13 +62,6 @@ def domain_of(c: Column) -> Column:
     return F.regexp_replace(F.coalesce(host, F.lit("")), r"^www\.", "")
 
 
-_GEO_TYPES = {  # type names as DataFrame.dtypes spells them
-    "lat": "double", "lng": "double", "confidence": "bigint", "formatted": "string",
-    "components": "map<string,string>", "source": "string", "approx": "string",
-    "usedQuery": "string", "note": "string",
-}
-
-
 def ensure_geo_cols(df: DataFrame) -> DataFrame:
     """Normalize the geo enrichment columns: add any that are missing as
     typed nulls and coerce ``components`` (struct when schema-inferred from
@@ -75,12 +69,13 @@ def ensure_geo_cols(df: DataFrame) -> DataFrame:
     different sources union/compare cleanly."""
     dtypes = dict(df.dtypes)
     geo = {}
-    for name, typ in _GEO_TYPES.items():
+    for f in GEO_COLUMNS:
+        name, typ = f.name, f.dataType
         if name not in dtypes:
             geo[name] = F.lit(None).cast(typ)
         elif name == "components" and not dtypes[name].startswith("map"):
-            geo[name] = F.from_json(F.to_json(F.col(name)), "map<string,string>")
-        elif dtypes[name] != typ:
+            geo[name] = F.from_json(F.to_json(F.col(name)), typ)
+        elif dtypes[name] != typ.simpleString():
             geo[name] = F.col(name).cast(typ)
     return df.withColumns(geo) if geo else df
 
@@ -128,9 +123,10 @@ def _bucket_stats(prev: DataFrame, tag: str, order_col: str) -> DataFrame:
 def match_snapshot(
     clean: DataFrame, prev: DataFrame, prev_order: str = "prev_order"
 ) -> DataFrame:
-    """J1/J5/J6: ``clean``'s columns plus ``__match``, the GEO_COLS struct
-    a clean row inherits from the snapshot (null when it must be enriched).
-    :func:`split_matched` turns it into (carried, need_geo)."""
+    """J1/J5/J6: ``clean``'s columns plus the recombine key ``__k3`` and
+    ``__match``, the GEO_COLS struct a clean row inherits from the snapshot
+    (null when it must be enriched). :func:`split_matched` turns it into
+    (carried, need_geo)."""
     clean_k = with_diff_keys(clean)
     prev_k = with_diff_keys(ensure_geo_cols(prev))
 
@@ -151,13 +147,13 @@ def match_snapshot(
     match = F.when(phone_claims, F.col("__phone_good")).when(
         domain_claims, F.col("__domain_good")
     )
-    return j.select(*clean.columns, match.alias("__match"))
+    return j.select(*clean.columns, "__k3", match.alias("__match"))
 
 
 def split_matched(matched: DataFrame) -> tuple[DataFrame, DataFrame]:
     """T1: (carried, need_geo) as two filters over one
-    :func:`match_snapshot` frame. ``carried`` = clean columns + inherited
-    GEO_COLS; ``need_geo`` = clean columns only."""
+    :func:`match_snapshot` frame. ``carried`` = clean columns + ``__k3`` +
+    inherited GEO_COLS; ``need_geo`` = clean columns + ``__k3``."""
     clean_cols = [c for c in matched.columns if c != "__match"]
     carried = matched.filter(F.col("__match").isNotNull()).select(*clean_cols, "__match.*")
     need_geo = matched.filter(F.col("__match").isNull()).select(*clean_cols)
@@ -169,53 +165,52 @@ def snapshot_split(
 ) -> tuple[DataFrame, DataFrame]:
     """J1/J5/J6 + T1: returns (carried, need_geo).
 
-    ``carried`` = clean columns + inherited GEO_COLS; ``need_geo`` = clean
-    columns only. Both retain ``clean``'s ingest_order column if present.
+    ``carried`` = clean columns + ``__k3`` + inherited GEO_COLS;
+    ``need_geo`` = clean columns + ``__k3``. Both retain ``clean``'s
+    ingest_order column if present.
     """
     return split_matched(match_snapshot(clean, prev, prev_order))
 
 
-def recombine(
-    clean: DataFrame,
-    carried: DataFrame,
-    newly: DataFrame,
-    clean_order: str = "ingest_order",
-    newly_order: str = "ingest_order",
-) -> DataFrame:
-    """J2/U3: final assembly in clean order.
+def recombine(carried: DataFrame, newly: DataFrame) -> DataFrame:
+    """J2/U3: final assembly of ``carried`` ∪ ``newly`` (``newly`` = the
+    enriched ``need_geo``). Both carry the ``__k3`` the split computed.
 
-    carried lookup keeps the FIRST row per key3 (clean-order: carried rows
-    preserve it); newly lookup keeps the LAST per key3 (JS Map ctor).
-
+    Per key3, the carried lookup keeps the FIRST carried row and the newly
+    lookup keeps the LAST newly-geocoded row (JS Map ctor), both by
+    ``ingest_order``, the clean order.
     On a carried hit the reference pushes the ENTIRE carried row —
     including its descriptive fields, not the current clean row's
     (geocode-diff-merge.js:148-149 ``finalRows.push(carried)``), so a
     clean row whose key3 matches a carried row is replaced wholesale. On
     a newly hit only the geo columns come from the lookup
-    (``{...r, ...pickGeo(n)}``, :152).
+    (``{...r, ...pickGeo(n)}``, :152); with neither, the geo is null.
+
+    Both lookups are one ``groupBy("__k3")`` over the union, broadcast
+    back onto it. The union stands in for the clean batch because:
+
+    * it holds every clean row exactly once: the split partitions the
+      clean rows, and ``enrich`` returns one row per input row;
+    * rows with equal ``__k3`` share one carried/need status: ``__k3`` is
+      phone_key + '|' + domain_key and phone keys are digits only, so the
+      key determines both keys and with them the snapshot match. A key3
+      group is all carried or all newly.
     """
-    clean_k = with_diff_keys(clean)
-    carried_k = with_diff_keys(ensure_geo_cols(carried))
-    newly_k = with_diff_keys(ensure_geo_cols(newly))
-
-    clean_cols = clean.columns
-    full_struct = F.struct(*clean_cols, *GEO_COLS)
-    geo_struct = F.struct(*GEO_COLS)
-    first_carried = (
-        carried_k.groupBy("__k3")
-        .agg(F.min_by(full_struct, F.col(clean_order)).alias("__cg"))
-        .select("__k3", F.lit(True).alias("__carried_hit"), "__cg")
+    cols = [c for c in carried.columns if c != "__k3" and c not in GEO_COLS]
+    rows = carried.withColumn("__carried", F.lit(True)).unionByName(
+        ensure_geo_cols(newly).withColumn("__carried", F.lit(False))
     )
-    last_newly = newly_k.groupBy("__k3").agg(
-        F.max_by(geo_struct, F.col(newly_order)).alias("__ng")
+    is_carried, order = F.col("__carried"), F.col("ingest_order")
+    by_key = rows.groupBy("__k3").agg(
+        # min_by/max_by skip null orderings: each sees only its own side
+        F.min_by(F.struct(*cols, *GEO_COLS), F.when(is_carried, order)).alias("__cg"),
+        F.max_by(F.struct(*GEO_COLS), F.when(~is_carried, order)).alias("__ng"),
     )
-
-    out = clean_k.join(F.broadcast(first_carried), "__k3", "left").join(
-        F.broadcast(last_newly), "__k3", "left"
+    row = F.when(F.col("__cg").isNotNull(), F.col("__cg")).otherwise(
+        F.struct(*cols, *[f"__ng.{c}" for c in GEO_COLS])
     )
-    # A carried hit is the whole row; otherwise the clean row takes the newly
-    # geocoded columns, null when there is no newly hit either.
-    row = F.when(F.col("__carried_hit").isNotNull(), F.col("__cg")).otherwise(
-        F.struct(*clean_cols, *[f"__ng.{c}" for c in GEO_COLS])
+    return (
+        rows.join(F.broadcast(by_key), "__k3", "left")
+        .select(row.alias("__row"))
+        .select("__row.*")
     )
-    return out.select(row.alias("__row")).select("__row.*")

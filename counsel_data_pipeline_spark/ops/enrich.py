@@ -62,11 +62,10 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import (
-    DoubleType, LongType, MapType, StringType, StructField, StructType,
-)
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..io.sources import _jvm_frame
+from ..schemas import GEO_COLUMNS
 from .diff import ensure_geo_cols
 from .text import (
     build_query_candidates,
@@ -405,10 +404,10 @@ def county_matches_col(
 # The operator
 # ---------------------------------------------------------------------------
 
-CACHE_SCHEMA = (
-    "query string, lat double, lng double, confidence long, formatted string, "
-    "components map<string,string>, source string, approx string"
-)
+# The cache holds every geo column but the per-row ``usedQuery`` and ``note``.
+_CACHED_GEO = [f for f in GEO_COLUMNS if f.name not in ("usedQuery", "note")]
+_CACHED_COLS = [f.name for f in _CACHED_GEO]
+CACHE_SCHEMA = StructType([StructField("query", StringType()), *_CACHED_GEO])
 
 
 def empty_cache(spark) -> DataFrame:
@@ -419,24 +418,6 @@ def empty_cache(spark) -> DataFrame:
 class EnrichResult:
     enriched: DataFrame        # input columns + GEO_COLS, one row per input row
     new_cache_entries: DataFrame  # CACHE_SCHEMA rows discovered by the resolvers
-
-
-def _geo_struct_cols() -> list[str]:
-    return ["lat", "lng", "confidence", "formatted", "components", "source", "approx"]
-
-
-_GEO_STRUCT = StructType([
-    StructField("lat", DoubleType()),
-    StructField("lng", DoubleType()),
-    StructField("confidence", LongType()),
-    StructField("formatted", StringType()),
-    StructField("components", MapType(StringType(), StringType())),
-    StructField("source", StringType()),
-    StructField("approx", StringType()),
-    StructField("usedQuery", StringType()),
-    StructField("note", StringType()),
-])
-_CACHE_STRUCT = StructType([StructField("query", StringType()), *_GEO_STRUCT.fields[:7]])  # CACHE_SCHEMA
 
 
 def _probe_cache(
@@ -459,13 +440,13 @@ def _probe_cache(
     hits = (
         cache.join(F.broadcast(cand), cache["query"] == cand["q"])
         .filter(county_matches_col(F.col("components"), F.col("formatted"), F.col("exp")))
-        .select("rid", "rank", *_geo_struct_cols(), F.col("query").alias("usedQuery"))
+        .select("rid", "rank", *_CACHED_COLS, F.col("query").alias("usedQuery"))
     )
     best = {}
     for h in hits.collect():
         if h.rid not in best or h.rank < best[h.rid].rank:
             best[h.rid] = h
-    return {rid: {c: h[c] for c in (*_geo_struct_cols(), "usedQuery")} for rid, h in best.items()}
+    return {rid: {c: h[c] for c in (*_CACHED_COLS, "usedQuery")} for rid, h in best.items()}
 
 
 def _waterfall(
@@ -555,28 +536,25 @@ def enrich(
         if geo is None:
             geo_rows.append({"usedQuery": queries[0] if queries else "", "note": "No result"})
             continue
-        geo = {c: geo.get(c) for c in _geo_struct_cols()}
+        geo = {c: geo.get(c) for c in _CACHED_COLS}
         geo["components"] = geo["components"] or {}
         geo_rows.append({**geo, "usedQuery": used, "note": None})
         if cache_q is not None:
             new_entries.append({"query": cache_q, **geo})
 
-    geo_table = pa.Table.from_pylist(geo_rows, schema=to_arrow_schema(_GEO_STRUCT))
+    geo_table = pa.Table.from_pylist(geo_rows, schema=to_arrow_schema(GEO_COLUMNS))
     for f in geo_table.schema:
         table = table.append_column(f, geo_table.column(f.name))
-    enriched = _jvm_frame(spark, table, StructType(rows.schema.fields + _GEO_STRUCT.fields))
-    entries = pa.Table.from_pylist(new_entries, schema=to_arrow_schema(_CACHE_STRUCT))
-    return EnrichResult(enriched=enriched, new_cache_entries=_jvm_frame(spark, entries, _CACHE_STRUCT))
+    enriched = _jvm_frame(spark, table, StructType(rows.schema.fields + GEO_COLUMNS.fields))
+    entries = pa.Table.from_pylist(new_entries, schema=to_arrow_schema(CACHE_SCHEMA))
+    return EnrichResult(enriched=enriched, new_cache_entries=_jvm_frame(spark, entries, CACHE_SCHEMA))
 
 
 def ensure_cache_schema(cache: DataFrame) -> DataFrame:
     """Coerce a cache frame (e.g. schema-inferred from the reference's
     JSON file) to CACHE_SCHEMA column set and types."""
     df = ensure_geo_cols(cache)
-    return df.select(
-        F.col("query").cast("string"),
-        *_geo_struct_cols(),
-    )
+    return df.select(F.col("query").cast("string"), *_CACHED_COLS)
 
 
 def upsert_cache(cache: DataFrame, new_entries: DataFrame) -> DataFrame:

@@ -7,11 +7,11 @@ functions: deterministic, order-preserving (candidate priority = JS Set
 insertion order — the waterfall tries candidates in this order, so order
 is part of the contract), dependency-free, testable without Spark.
 
-Spark integration: the F18/F19 fan-out is a row→many-strings generator →
-one Arrow-batched pandas UDF returning array<string>, exploded with
-posexplode to keep priority (SURVEY §2.12). The simple scalar functions
-(normalize, region parse) also exist as Column expressions where plans
-need them JVM-side.
+Spark integration: the F18/F19 fan-out runs in the driver. ``ops.enrich``
+collects the delta and builds each row's candidate list here, in priority
+order, and the cache probe joins the candidates as a broadcast frame with
+their rank (SURVEY §2.12). The simple scalar functions (normalize, region
+parse) also exist as Column expressions where plans need them JVM-side.
 
 Golden validation: tests assert the generated candidate lists contain the
 ``usedQuery`` recorded per row in the reference's committed geocoded

@@ -14,7 +14,8 @@ The reference enforces correctness with three gates:
 Spark shape: V1/V3 become the **quarantine pattern** — one boolean-array
 column of named violations, a single pass, then a partition-local split
 into (valid, quarantined). No driver-side loops; at 100 TB the check is a
-narrow projection and the split two filters over one cached lineage.
+narrow projection and the split two filters over the same tagged frame
+(each read re-runs its input's plan; nothing is cached).
 V2 is recomputed at sink time by construction (``wrapper_obj`` counts the
 rows it wraps) and also exposed as a standalone checker for arbitrary
 wrapper documents, mirroring the CLI tool.

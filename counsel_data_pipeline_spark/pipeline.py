@@ -19,13 +19,15 @@ Where the reference crossed an OS-process boundary with temp files between
 diff and geocode (spawnSync, src/geocode-diff-merge.js:113-129), here the
 incremental flow runs in one session: the snapshot split is one join,
 persisted once per batch, and the carried rows and the delta are filters
-over it. Only the delta (typically tiny — the observed steady-state delta
-is 3 rows of 618) reaches enrichment, which collects it, probes the cache
-with one Spark join and runs the rate-limited waterfall for the misses in
-the driver; its result comes back as an Arrow-backed frame that recombine
-joins in clean order. The expensive path scales with CHANGE, not data
-size. The driver-side enrichment adds no new scale limit: the publish
-step collects every final row anyway, and the delta is a subset of them.
+over it that keep the split's recombine key. Only the delta (typically
+tiny — the observed steady-state delta is 3 rows of 618) reaches
+enrichment, which collects it, probes the cache with one Spark join and
+runs the rate-limited waterfall for the misses in the driver; its result
+comes back as an Arrow-backed frame. Recombine unions it with the carried
+rows and resolves each key with one aggregate and one broadcast join.
+The expensive path scales with CHANGE, not data size. The driver-side
+enrichment adds no new scale limit: the publish step collects every final
+row anyway, and the delta is a subset of them.
 
 The crawl side follows the same rule: all counties' landing files feed one
 read, one dedup, one clean and one merge, keyed by county rank, so the
@@ -42,9 +44,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .io.sources import read_clinic_json
-from .ops.clean import CLEAN_COLUMNS, clean_rows
+from .ops.clean import clean_rows
 from .ops.dedup import first_wins, raw_grid_key
-from .ops.diff import GEO_COLS, match_snapshot, recombine, split_matched
+from .ops.diff import match_snapshot, recombine, split_matched
 from .ops.enrich import EnrichResult, Resolver, empty_cache, enrich, upsert_cache
 from .ops.merge import merge_sides
 from .ops.validate import ValidationSplit, split_geocoded, split_valid
@@ -145,14 +147,14 @@ def diff_enrich_publish(
             nominatim=nominatim, min_interval_s=min_interval_s,
         )
 
-    final = recombine(clean, carried, enrich_res.enriched)
+    final = recombine(carried, enrich_res.enriched)
     schema_gate = split_valid(final)
     geocode_gate = split_geocoded(final)
     new_cache = upsert_cache(cache, enrich_res.new_cache_entries)
 
     return IncrementalResult(
         final=final,
-        delta=need_geo,
+        delta=need_geo.drop("__k3"),
         change_count=change_count,
         publish=change_count > 0,
         cache=new_cache,

@@ -28,9 +28,7 @@ from counsel_data_pipeline_spark.plans._parity import (
     davg,
     dsum,
     sql_davg,
-    sql_dec,
     sql_dsum,
-    sql_to_double,
     to_double,
 )
 

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from counsel_data_pipeline_spark.catalog import register
 from counsel_data_pipeline_spark.io.sources import load_table
 from counsel_data_pipeline_spark.ops.materialize import pin
-from counsel_data_pipeline_spark.plans._parity import dec, dsum, to_double
+from counsel_data_pipeline_spark.plans._parity import dec, to_double
 
 
 @register(

@@ -67,11 +67,14 @@ CLINIC = StructType(
 )
 
 # Geocode enrichment columns (FIXTURES §1.3; appended at src/geocode.js:528).
+# The one declaration of the geo contract: the snapshot diff, enrichment,
+# the geocode cache and the published rows all derive their geo names and
+# types from it.
 GEO_COLUMNS = StructType(
     [
         StructField("lat", DoubleType()),
         StructField("lng", DoubleType()),
-        StructField("confidence", IntegerType()),
+        StructField("confidence", LongType()),
         StructField("formatted", StringType()),
         StructField("components", MapType(StringType(), StringType())),
         StructField("source", StringType()),

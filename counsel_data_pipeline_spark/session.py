@@ -10,9 +10,11 @@ Scale design notes (local[32] here, 1000-executor cluster in production):
   - shuffle.partitions defaults to cores locally; on a real cluster this is
     a starting hint only — AQE re-coalesces by size (64 MB target).
   - Arrow enabled: all pandas_udf / mapInPandas exchange is vectorized.
-  - Broadcast threshold left at default 10 MB; dimension tables (region,
-    nation, county centroids, geocode cache) are explicitly broadcast() at
-    the call sites so plans do not depend on stats being fresh.
+  - Broadcast threshold raised to 32 MB; small sides (TPC-H region and
+    nation, the snapshot-diff key aggregates, the enrichment candidate
+    frame) are explicitly broadcast() at the call sites so plans do not
+    depend on stats being fresh. The geocode cache is never broadcast: it
+    streams against the broadcast candidates.
 """
 
 from __future__ import annotations

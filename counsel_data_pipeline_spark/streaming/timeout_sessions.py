@@ -33,7 +33,6 @@ from typing import Any, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 STATE_SCHEMA = "start_ts string, last_ts string, n_events bigint"

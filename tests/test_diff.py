@@ -12,6 +12,7 @@ matches don't carry; brand-new rows land in need_geo.
 """
 
 import json
+import re
 
 import pytest
 
@@ -61,13 +62,13 @@ def test_recombine_reassembles_all_rows(spark, split):
     # (The reference's committed need-geocoded.json is from a DIFFERENT run
     # than need-geocode.json, so synthesize the enrichment of the real
     # 3-row delta instead: stub coordinates keyed by position.)
-    clean, _, carried, need_geo = split
+    _, _, carried, need_geo = split
     from pyspark.sql import functions as F
 
     newly = need_geo.withColumn("lat", F.lit(10.0) + F.col("ingest_order")).withColumn(
         "lng", F.lit(100.0) + F.col("ingest_order")
     )
-    final = recombine(clean, carried, newly)
+    final = recombine(carried, newly)
     rows = [r.asDict() for r in final.orderBy("ingest_order").collect()]
     assert len(rows) == 618
     delta_names = {r["org_name"] for r in extract_rows(json.load(open(DELTA)))}
@@ -166,7 +167,7 @@ def test_recombine_duplicate_key3_takes_first_carried_row_wholesale(spark):
     ])
     carried, need = snapshot_split(clean, prev)
     newly = need.withColumn("lat", F.lit(99.0)).withColumn("lng", F.lit(98.0))
-    final = recombine(clean, carried, newly)
+    final = recombine(carried, newly)
     rows = [r.asDict() for r in final.orderBy("ingest_order").collect()]
     assert len(rows) == 3
     # both dup-key rows collapse to the FIRST carried row's full contents
@@ -175,3 +176,31 @@ def test_recombine_duplicate_key3_takes_first_carried_row_wholesale(spark):
     assert rows[0]["lat"] == 1.5 and rows[1]["lat"] == 1.5
     # the unmatched row keeps its own fields + newly geo
     assert rows[2]["org_name"] == "other" and rows[2]["lat"] == 99.0
+
+
+def _plan_nodes(df):
+    """Operator names of the optimized logical plan, one per tree line."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return [re.sub(r"^[\s:+|-]*", "", line).split(" ")[0] for line in plan.splitlines()], plan
+
+
+def test_recombine_plan_is_one_aggregate_and_one_join(spark):
+    """The split's ``__k3`` is reused: recombine adds one aggregate and one
+    join and derives no key (no URL parsing, no phone normalization)."""
+    from counsel_data_pipeline_spark.schemas import GEO_COLUMNS
+
+    geo = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in GEO_COLUMNS)
+    schema = f"org_name string, phone string, org_url string, ingest_order long, __k3 string, {geo}"
+    nulls = (None,) * len(GEO_COLS)
+    carried = spark.createDataFrame(
+        [("a", "02-1", "https://a.com/", 0, "021|a.com", 1.0, 2.0, *nulls[2:])], schema
+    )
+    newly = spark.createDataFrame(
+        [("b", "03-2", None, 1, "032|", *nulls), ("c", "03-2", None, 2, "032|", *nulls)], schema
+    )
+    final = recombine(carried, newly)
+    assert not [c for c in final.columns if c.startswith("__")]
+    names, plan = _plan_nodes(final)
+    assert names.count("Aggregate") == 1, plan
+    assert names.count("Join") == 1, plan
+    assert "parse_url" not in plan and "regexp_replace" not in plan, plan

@@ -32,25 +32,6 @@ def test_upload_then_download_round_trip(tmp_path):
     assert dst.read_bytes() == src.read_bytes()
 
 
-def test_publish_snapshot_writes_latest_and_dated(tmp_path):
-    store = obj.LocalFSStore(str(tmp_path / "bucket"))
-    src = tmp_path / "snap.json"
-    for i, date in enumerate(["2026-08-12", "2026-08-14", "2026-08-13"]):
-        src.write_text(json.dumps({"v": i}))
-        latest, dated = obj.publish_snapshot(
-            store, str(src), "pub", "clinics.json", date
-        )
-    assert json.loads(store.get("pub/clinics.json")) == {"v": 2}  # last publish
-    # newest DATED copy is by date order, not publish order
-    assert (
-        obj.latest_dated(store, "pub", "clinics.json")
-        == "pub/2026-08-14/clinics.json"
-    )
-    assert json.loads(store.get("pub/2026-08-14/clinics.json")) == {"v": 1}
-    with pytest.raises(ValueError):
-        obj.publish_snapshot(store, str(src), "pub", "x.json", "8/14/2026")
-
-
 def test_store_key_escape_guard(tmp_path):
     store = obj.LocalFSStore(str(tmp_path / "bucket"))
     with pytest.raises(ValueError):

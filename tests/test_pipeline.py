@@ -189,5 +189,7 @@ def test_generated_batch_persists_one_frame_and_publishes_every_clinic(spark, tm
 
     assert persistent().size() - before == 1
     assert res.change_count == inp.change_count
+    # the recombine key stays inside the batch
+    assert not [c for c in res.delta.columns + res.final.columns if c.startswith("__")]
     doc = json.loads(store.get(receipt.current_key))
     assert doc["total"] == len(doc["rows"]) == inp.n_clinics

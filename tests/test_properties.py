@@ -6,6 +6,9 @@ Each example generates a whole dataset (one Spark job per example, small
 max_examples) rather than one row per example.
 """
 
+import re
+from urllib.parse import urlsplit
+
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -372,3 +375,111 @@ def test_containment_prefix_pairs_match_bruteforce(spark, docs):
         ).collect()
     }
     assert got == py_containment_pairs(docs)
+
+
+# ---------------------------------------------------------------------------
+# J2/U3 recombine (reference src/geocode-diff-merge.js:16-21,141-156)
+# ---------------------------------------------------------------------------
+
+
+def py_key3(r):
+    """phone digits + '|' + host(org_url) || host(map_url), minus 'www.'."""
+
+    def host(url):
+        try:
+            h = urlsplit(url or "").hostname or ""
+        except ValueError:  # JS: new URL() throws → ''
+            h = ""
+        return h[4:] if h.startswith("www.") else h
+
+    phone = re.sub(r"[^0-9]", "", r["phone"] or "")
+    return phone + "|" + (host(r["org_url"]) or host(r["map_url"]))
+
+
+def py_recombine(clean, carried, newly, geo_cols):
+    """The reference's two-map loop: the FIRST carried row per key3 is
+    pushed whole; else the clean row takes the geo of the LAST newly row
+    with its key3 (the JS ``Map`` constructor keeps the last duplicate);
+    else its geo is null."""
+    carried_by_key = {}
+    for r in carried:
+        carried_by_key.setdefault(py_key3(r), r)
+    newly_by_key = {py_key3(r): r for r in newly}
+    out = []
+    for r in clean:
+        k = py_key3(r)
+        if k in carried_by_key:
+            out.append(dict(carried_by_key[k]))
+        else:
+            n = newly_by_key.get(k, {})
+            out.append({**r, **{c: n.get(c) for c in geo_cols}})
+    return out
+
+
+phone_text = st.sampled_from([None, "", "02-111", "(02)111", "02 222", "03-333", "x"])
+url_text = st.sampled_from([
+    None, "", "https://a.com/", "https://www.a.com/x", "https://b.org/", "not a url",
+])
+diff_row = st.fixed_dictionaries(
+    {"phone": phone_text, "org_url": url_text, "map_url": url_text}
+)
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    st.lists(diff_row, min_size=1, max_size=8),
+    st.lists(st.tuples(diff_row, st.booleans()), max_size=6),
+    st.sampled_from(["mixed", "all_carried", "all_delta"]),
+)
+def test_recombine_matches_reference_loop(spark, clean_rows, prev_rows, mode):
+    from counsel_data_pipeline_spark.ops.diff import GEO_COLS, recombine, snapshot_split
+
+    if mode == "all_carried":  # every clean row keyed and in prev with coordinates
+        clean_rows = [r if py_key3(r) != "|" else {**r, "phone": "09"} for r in clean_rows]
+        prev_rows = [(r, True) for r in clean_rows]
+    elif mode == "all_delta":
+        prev_rows = []
+    clean_data = [
+        {**r, "org_name": f"c{i}", "county": "A", "address": f"addr-{i}", "ingest_order": i}
+        for i, r in enumerate(clean_rows)
+    ]
+    prev_data = [
+        {**r, "org_name": f"p{i}", "county": "A", "address": "x", "prev_order": i,
+         "lat": 1.0 + i if good else None, "lng": 2.0 + i if good else None,
+         "source": "opencage"}
+        for i, (r, good) in enumerate(prev_rows)
+    ]
+    cols = "county string, org_name string, phone string, org_url string, map_url string, address string"
+    clean = spark.createDataFrame(clean_data, f"{cols}, ingest_order long")
+    prev = spark.createDataFrame(
+        prev_data, f"{cols}, lat double, lng double, source string, prev_order long"
+    )
+    carried, need = snapshot_split(clean, prev)
+    newly = need.withColumns({
+        "lat": F.col("ingest_order") + 0.5,
+        "lng": -F.col("ingest_order").cast("double"),
+        "source": F.lit("stub"),
+    })
+    final = recombine(carried, newly)
+    assert final.columns == [*clean.columns, *GEO_COLS]
+
+    # one collect for the three frames: each row tagged with its frame
+    sides = {"carried": carried, "newly": newly, "final": final}
+    tagged = None
+    for side, df in sides.items():
+        df = df.withColumn("__side", F.lit(side))
+        tagged = df if tagged is None else tagged.unionByName(df, allowMissingColumns=True)
+    got = {side: [] for side in sides}
+    for r in tagged.orderBy("ingest_order").collect():
+        d = r.asDict()
+        got[d["__side"]].append({k: v for k, v in d.items() if not k.startswith("__")})
+    if mode == "all_carried":
+        assert not got["newly"]
+    elif mode == "all_delta":
+        assert not got["carried"]
+    exp = py_recombine(clean_data, got["carried"], got["newly"], GEO_COLS)
+
+    def key(r):
+        return tuple(sorted((k, repr(v)) for k, v in r.items()))
+
+    assert sorted(map(key, got["final"])) == sorted(map(key, exp))
