@@ -12,11 +12,11 @@ from __future__ import annotations
 
 import os
 
-# Known-good physical variants for time-carrying columns; the batch load
-# boundary (io/sources.load_table) and the streaming footer sniffer
-# (streaming/windows.stream_events) normalize exactly this set.
+# Known-good physical variants for time-carrying columns; the one load
+# boundary (io/sources.load_table) normalizes exactly this set, and streams
+# read its normalized rows.
 TS_VARIANTS = {
-    "int64",              # TIMESTAMP(NANOS) read via nanosAsLong
+    "int64",              # TIMESTAMP(NANOS) read as a long by load_table
     "timestamp[ns]",      # raw nanos footer type
     "timestamp[us]",      # micros, no tz -> Spark TIMESTAMP_NTZ (r4 drift)
     "timestamp[us, tz=UTC]",
@@ -115,8 +115,7 @@ def check_dir(sf_dir: str) -> list[str]:
                 allow = f"one of {sorted(TS_VARIANTS)}" if want == "TS" else repr(want)
                 problems.append(
                     f"{table}.{col} is physically '{got}', engine expects {allow} "
-                    f"— fix at io/sources.load_table (batch) / "
-                    f"streaming/windows.stream_events (stream), then update "
+                    f"— fix at io/sources.load_table, then update "
                     f"counsel_data_pipeline_spark/io/schema_canary.py"
                 )
     return problems

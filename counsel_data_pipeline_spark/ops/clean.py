@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..schemas import CLINIC
+
 # Anchor pattern mirroring /<a[^>]*href=['"]([^'"]+)['"][^>]*>(.*?)<\/a>/i
 _ANCHOR = r"(?i)<a[^>]*href=['\"]([^'\"]+)['\"][^>]*>(.*?)</a>"
 _TAGS = r"<[^>]*>"
@@ -81,15 +83,13 @@ def null_if_none_sentinel(c: Column) -> Column:
     return F.when(c == "無", F.lit(None).cast("string")).otherwise(c)
 
 
-CLEAN_COLUMNS = [
-    "county", "org_name", "org_url", "phone", "address", "map_url", "pay_detail",
-    "this_week", "next_week", "next_2_week", "next_3_week", "in_4_weeks",
-    "edit_date", "teleconsultation", "has_quota",
-]
+# The clean-row contract is declared once, as schemas.CLINIC.
+CLEAN_COLUMNS = CLINIC.fieldNames()
 
 
 def clean_rows(raw: DataFrame) -> DataFrame:
-    """The full cleanRows projection: raw grid rows → 15-column clinic rows.
+    """The full cleanRows projection: raw grid rows → clinic rows with
+    exactly :data:`schemas.CLINIC`'s names and types, in order.
 
     Preserves the reader's ``ingest_order`` and ``file_index`` columns if
     present (required downstream by the order-sensitive dedup/merge

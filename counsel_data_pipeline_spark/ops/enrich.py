@@ -67,6 +67,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 from ..io.sources import _jvm_frame
 from ..schemas import GEO_COLUMNS
 from .diff import ensure_geo_cols
+from .merge import keyed_merge
 from .text import (
     build_query_candidates,
     build_street_centroid_candidates,
@@ -560,15 +561,15 @@ def ensure_cache_schema(cache: DataFrame) -> DataFrame:
 def upsert_cache(cache: DataFrame, new_entries: DataFrame) -> DataFrame:
     """K4 reimagined: keyed last-write-wins merge (new entries beat old)
     instead of the reference's whole-file rewrite per row. Idempotent under
-    re-execution — the natural Delta MERGE shape on a real deployment."""
-    old = ensure_cache_schema(cache).withColumn("__pri", F.lit(0))
-    new = ensure_cache_schema(new_entries).withColumn("__pri", F.lit(1))
-    from pyspark.sql import Window
+    re-execution — the natural Delta MERGE shape on a real deployment.
 
-    w = Window.partitionBy("query").orderBy(F.col("__pri").desc())
-    return (
-        old.unionByName(new)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__pri", "__rn")
-    )
+    The keep-first-per-key operator of the clinic merge
+    (ops/merge.keyed_merge) with the new entries as the primary source and
+    ``query`` as the key. The order column is the key itself, so only the
+    source orders a query's entries: entries of one source that share a
+    query tie, and the engine keeps one of them whole. A null ``query`` can
+    never be probed, so keyed_merge drops such entries."""
+    return keyed_merge(
+        ensure_cache_schema(new_entries), ensure_cache_schema(cache),
+        F.col("query"), max_cols=[], or_cols=[], order_col="query",
+    ).drop("__src")

@@ -321,67 +321,6 @@ def near_dup_pairs_topn(
     return _rank_bounded(top, ["cosine", "id_a", "id_b"])
 
 
-def kmeans_centroids(
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    n_iters: int = 4,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Spherical k-means (Lloyd's) centroid training for IVF — the
-    'drop-in upgrade' over lowest-id seeding.
-
-    Each iteration: assign every vector to its max-cosine centroid (one
-    broadcast of the tiny centroid table — the corpus never shuffles),
-    then recompute each cell's mean vector (one hash aggregate with dim
-    partial-avg columns, map-side combined). pin(loop=True) truncates
-    the per-iteration lineage, same discipline as ops/clusters.py. Cells
-    that lose all members drop out (n_centroids is an upper bound).
-
-    Deterministic: seed = lowest-id vectors, assignment ties broken by
-    struct comparison — reruns converge identically.
-
-    Returns (__cid, __cv, __cn) ready for ``ivf_topk(centroids_df=...)``.
-    """
-    emb = corpus.select(
-        F.col(id_col).alias("__id"), as_double_array(F.col(vec_col)).alias("__v")
-    ).withColumn("__norm", l2_norm(F.col("__v")))
-
-    cents = pin(
-        emb.orderBy("__id")
-        .limit(n_centroids)
-        .select(
-            F.col("__id").alias("__cid"),
-            F.col("__v").alias("__cv"),
-            F.col("__norm").alias("__cn"),
-        ),
-        loop=True,
-    )
-    for _ in range(n_iters):
-        sim = emb.crossJoin(F.broadcast(cents)).select(
-            "__id",
-            F.struct(
-                (
-                    dot(F.col("__v"), F.col("__cv"))
-                    / (F.col("__norm") * F.col("__cn"))
-                ).alias("csim"),
-                F.col("__cid").alias("cid"),
-                F.col("__v").alias("v"),
-            ).alias("s"),
-        )
-        best = sim.groupBy("__id").agg(F.max("s").alias("s"))
-        assigned = best.select(F.col("s.cid").alias("__cid"), F.col("s.v").alias("__v"))
-        new_cv = F.array(*[F.avg(F.col("__v")[d]) for d in range(dim)])
-        cents = pin(
-            assigned.groupBy("__cid")
-            .agg(new_cv.alias("__cv"))
-            .withColumn("__cn", l2_norm(F.col("__cv"))),
-            loop=True,
-        )
-    return cents
-
-
 def kmeans_centroids_exact(
     corpus: DataFrame,
     n_centroids: int = 16,
@@ -404,10 +343,11 @@ def kmeans_centroids_exact(
     division ``div(sum, count)`` — every step integer, so reruns and
     engines agree exactly. Seeds are the ``n_centroids`` lowest-id grids.
 
-    Plan shape per iteration (same as the float trainer): one broadcast of
-    the tiny centroid table against the persisted integer corpus, one
+    Plan shape per iteration: one broadcast of the tiny centroid table
+    against the persisted integer corpus (the corpus never shuffles), one
     map-side-combined hash aggregate over cells; ``localCheckpoint``
-    truncates lineage. Cells that lose all members drop out.
+    truncates lineage. Cells that lose all members drop out
+    (``n_centroids`` is an upper bound).
 
     Returns (__cid, __cv, __cn) ready for ``ivf_topk(centroids_df=...)``
     — ``__cv`` is the integer centroid divided back to double (exact IEEE
@@ -528,7 +468,7 @@ def semantic_blocked_pairs(
     join shipping both vectors per candidate measured 3× slower), and the
     numpy fold inside each group is chunked so task memory is bounded by
     chunk × |cell|. A hot cell bounds a task: raise ``n_centroids`` (or
-    pre-train balanced cells with :func:`kmeans_centroids` and pass
+    pre-train balanced cells with :func:`kmeans_centroids_exact` and pass
     ``centroids_df``) when one cell dominates.
 
     Returns (id_a, id_b, cosine) with id_a < id_b — a deterministic SET

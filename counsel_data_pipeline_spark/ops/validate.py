@@ -29,13 +29,14 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..io.sources import extract_rows
 from .enrich import county_matches_col, expected_county_col
+from .merge import COUNT_COLS
 
 # ---------------------------------------------------------------------------
 # V1 — clinic-schema constraints → quarantine split
 # ---------------------------------------------------------------------------
 
-_COUNT_COLS = ["this_week", "next_week", "next_2_week", "next_3_week", "in_4_weeks"]
 _REQUIRED = ["county", "org_name", "address", "in_4_weeks", "has_quota"]
 
 
@@ -46,7 +47,7 @@ def clinic_violations(df: DataFrame) -> dict[str, Column]:
     for c in _REQUIRED:
         if c in df.columns:
             out[f"required_{c}"] = F.col(c).isNull()
-    for c in _COUNT_COLS:
+    for c in COUNT_COLS:
         if c in df.columns:
             out[f"negative_{c}"] = F.col(c) < 0
     if "has_quota" in df.columns and "in_4_weeks" in df.columns:
@@ -87,18 +88,6 @@ def split_valid(df: DataFrame, checks: dict[str, Column] | None = None) -> Valid
 # ---------------------------------------------------------------------------
 
 
-def find_rows(doc: Any) -> list | None:
-    """Accept top-level array or rows/data/clinics keys
-    (reference scripts/check-total.js:30-36)."""
-    if isinstance(doc, list):
-        return doc
-    if isinstance(doc, dict):
-        for k in ("rows", "data", "clinics"):
-            if isinstance(doc.get(k), list):
-                return doc[k]
-    return None
-
-
 @dataclass
 class TotalCheck:
     ok: bool
@@ -109,11 +98,10 @@ class TotalCheck:
 
 def check_total(doc: Any, fix: bool = False) -> TotalCheck:
     """V2: total == rows.length, with the CLI tool's shape polymorphism
-    (top-level total or meta.total); ``fix`` returns a repaired copy."""
-    rows = find_rows(doc)
-    if rows is None:
-        raise ValueError("no rows array: expected rows/data/clinics key or top-level array")
-    actual = len(rows)
+    (rows via io/sources.extract_rows, which raises ValueError on a document
+    without a row list; top-level total or meta.total); ``fix`` returns a
+    repaired copy."""
+    actual = len(extract_rows(doc))
 
     expected: int | None = None
     loc: tuple[str, ...] | None = None

@@ -403,9 +403,9 @@ def _ivf_kmeans_oracle(
 def ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained-centroid ANN with nothing left to trust: per iteration one
     broadcast of the tiny centroid table against the persisted integer
-    corpus + one map-side-combined aggregate (the float trainer's plan
-    shape, integer arithmetic). At 100 TB the corpus never reshuffles
-    during training; search is the standard IVF cell-probe plan."""
+    corpus + one map-side-combined aggregate, all in integer arithmetic
+    (ops/similarity.kmeans_centroids_exact). At 100 TB the corpus never
+    reshuffles during training; search is the standard IVF cell-probe plan."""
     emb = load_table(spark, sf_dir, "embeddings")
     cents = sim.kmeans_centroids_exact(emb, n_centroids=16, n_iters=3)
     return sim.ivf_topk(

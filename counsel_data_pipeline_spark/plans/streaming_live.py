@@ -54,6 +54,28 @@ def _ntile(df: DataFrame, n: int, *order: str) -> DataFrame:
     return df.withColumn("b", F.ntile(n).over(Window.orderBy(*order)) - 1)
 
 
+_EW_N_BATCHES = 4
+
+
+def event_ranges(spark: SparkSession, sf_dir: str) -> str:
+    """The events table's one stream source: load_table's normalized rows
+    (``ts`` always session-TZ TIMESTAMP) staged as ascending
+    (ts, event_id)-range micro-batches for :func:`read_batches`. Files
+    replay in event-time order, the arrival-order contract the stateful
+    twins' determinism (and so their batch oracles) requires. Each
+    consumer projects its own columns of event_id, user_id, ts,
+    event_type and value through its read schema."""
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "ts", "event_type", "value"
+    )
+    return stage_batches(
+        _ntile(ev, _EW_N_BATCHES, "ts", "event_id"),
+        # v2: carries event_type so the SCD2 stream shares the staging
+        derived_cache_dir("counsel_stream_stage_evranges_v2", sf_dir, "events"),
+        _EW_N_BATCHES,
+    )
+
+
 @register(
     "streaming_weighted_reservoir",
     # Identical oracle to curation_weighted_sample: the A-ES key is a pure
@@ -360,24 +382,6 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Stateful streaming EWMA: applyInPandasWithState vs the batch window
 # ---------------------------------------------------------------------------
 
-_EW_N_BATCHES = 4
-
-
-def _event_ranges(spark: SparkSession, sf_dir: str) -> str:
-    """events staged as ascending (ts, event_id)-range micro-batches:
-    files replay in event-time order, the arrival-order contract the
-    stateful twins' determinism (and so their batch oracles) requires.
-    Each consumer projects its own columns through its read schema."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "ts", "event_type", "value"
-    )
-    return stage_batches(
-        _ntile(ev, _EW_N_BATCHES, "ts", "event_id"),
-        # v2: carries event_type so the SCD2 stream shares the staging
-        derived_cache_dir("counsel_stream_stage_evranges_v2", sf_dir, "events"),
-        _EW_N_BATCHES,
-    )
-
 
 def _ewma_stream_oracle() -> str:
     from counsel_data_pipeline_spark.plans.window import _ewma_oracle
@@ -406,7 +410,7 @@ def streaming_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_batches(
         spark,
         "event_id BIGINT, user_id BIGINT, ts TIMESTAMP, value DOUBLE",
-        _event_ranges(spark, sf_dir),
+        event_ranges(spark, sf_dir),
     )
     return run_available_now(ewma_stateful(stream, _EWMA_W), "append")
 
@@ -446,7 +450,7 @@ def streaming_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_batches(
         spark,
         "event_id BIGINT, user_id BIGINT, ts TIMESTAMP, event_type STRING",
-        _event_ranges(spark, sf_dir),
+        event_ranges(spark, sf_dir),
     )
     return compact_changelog(run_available_now(scd2_stateful(stream), "append"))
 
@@ -589,7 +593,7 @@ def streaming_sessionize_user_stats(spark: SparkSession, sf_dir: str) -> DataFra
     stream = read_batches(
         spark,
         "event_id BIGINT, user_id BIGINT, ts TIMESTAMP",
-        _event_ranges(spark, sf_dir),
+        event_ranges(spark, sf_dir),
     )
     return compact_summaries(
         run_available_now(sessionize_stateful(stream), "append")
@@ -760,7 +764,7 @@ def streaming_static_join_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded-key discipline."""
     stream = read_batches(
         spark, "user_id BIGINT, ts TIMESTAMP, value DOUBLE",
-        _event_ranges(spark, sf_dir),
+        event_ranges(spark, sf_dir),
     )
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
@@ -809,7 +813,7 @@ def _click_purchase_streams(
     src_df = read_batches(
         spark,
         "event_id BIGINT, user_id BIGINT, ts TIMESTAMP, event_type STRING",
-        _event_ranges(spark, sf_dir),
+        event_ranges(spark, sf_dir),
     )
     clicks = (
         src_df.filter(F.col("event_type") == "click")
@@ -1215,7 +1219,7 @@ def streaming_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     state) or an offset loss fails loudly rather than flipping the
     hash."""
     files = sorted(
-        glob.glob(os.path.join(_event_ranges(spark, sf_dir), "*.parquet"))
+        glob.glob(os.path.join(event_ranges(spark, sf_dir), "*.parquet"))
     )
     live = tempfile.mkdtemp(prefix="ckpt_restart_live_")
     ckpt = tempfile.mkdtemp(prefix="ckpt_restart_ckpt_")
@@ -1334,7 +1338,7 @@ def streaming_closed_sessions_timeout(spark: SparkSession, sf_dir: str) -> DataF
     )
 
     stream = read_batches(
-        spark, "user_id BIGINT, ts TIMESTAMP", _event_ranges(spark, sf_dir)
+        spark, "user_id BIGINT, ts TIMESTAMP", event_ranges(spark, sf_dir)
     )
     return run_available_now(
         closed_sessions_stateful(stream, gap_s=_TS_GAP_S), "append"

@@ -6,7 +6,10 @@ top of that, this module provides
 the event-time operators Spark adds for free: watermarked tumbling/sliding
 window aggregation and gap-based session windows — each the streaming twin
 of a batch plan in plans/events.py (tests assert batch ≡ stream on the
-same input).
+same input). The operators take any event stream with a TIMESTAMP ``ts``;
+the events table reaches them through microbatch.read_batches over
+plans/streaming_live.event_ranges, which stages io/sources.load_table's
+normalized rows.
 
 Scale notes: watermark bounds state; tumbling/sliding aggs keep one state
 row per (window, key); session_window merges per-key intervals. State
@@ -15,67 +18,10 @@ store partitioning follows spark.sql.shuffle.partitions.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from counsel_data_pipeline_spark.plans._parity import dec, to_double
-
-_EVENTS_SCHEMA_FMT = "event_id bigint, ts {ts}, user_id bigint, event_type string, value double, props string"
-
-
-def _events_ts_physical(path: str) -> str:
-    """Sniff the physical type of ``ts`` from the parquet footer.
-
-    The driver regenerates events.parquet between rounds with varying
-    physical timestamp encodings (nanos / micros-NTZ so far); a streaming
-    source must declare its schema up front, so hardcoding one variant
-    silently corrupts timestamps when the file changes underneath
-    (nanos→micros DIV-1000 applied to micros data yields 1970-era values).
-    Returns the declared-schema type string plus which shim to apply.
-    """
-    import pyarrow.parquet as pq
-
-    arrow_type = str(pq.read_schema(path).field("ts").type)
-    if arrow_type.startswith("timestamp[ns"):
-        return "nanos_as_long"
-    if "tz=" in arrow_type:
-        return "timestamp"
-    if arrow_type.startswith("timestamp["):
-        return "timestamp_ntz"
-    if arrow_type == "int64":
-        return "nanos_as_long"
-    raise ValueError(f"unrecognized events.ts physical type: {arrow_type}")
-
-
-def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events parquet (file-source micro-batches).
-
-    Same normalization contract as the batch reader (io/sources.load_table):
-    downstream streaming plans always see ``ts`` as session-TZ TIMESTAMP,
-    regardless of the file's physical encoding — the footer is sniffed to
-    pick the declared schema, since a stream cannot infer it per-batch.
-    """
-    variant = _events_ts_physical(os.path.join(sf_dir, "events.parquet"))
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    declared = {
-        "nanos_as_long": "bigint",
-        "timestamp": "timestamp",
-        "timestamp_ntz": "timestamp_ntz",
-    }[variant]
-    # File sources take a directory; scope to the events file via glob so
-    # the other tables' parquet in the same dir is never listed.
-    raw = (
-        spark.readStream.schema(_EVENTS_SCHEMA_FMT.format(ts=declared))
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    if variant == "nanos_as_long":
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    if variant == "timestamp_ntz":
-        return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
 
 
 def tumbling_hourly(events: DataFrame, watermark: str = "2 hours") -> DataFrame:

@@ -24,7 +24,7 @@ from counsel_data_pipeline_spark.io.sources import read_clinic_json
 from counsel_data_pipeline_spark.ops.clean import CLEAN_COLUMNS, clean_rows
 from counsel_data_pipeline_spark.ops.dedup import uniq_by_key
 from counsel_data_pipeline_spark.ops.merge import keyed_merge, merge_sides
-from counsel_data_pipeline_spark.schemas import RAW_GRID_ROW
+from counsel_data_pipeline_spark.schemas import CLINIC, RAW_GRID_ROW
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench"))
 import clinic_gen  # noqa: E402
@@ -116,6 +116,23 @@ def test_crawl_with_count_number_in_one_file_and_string_in_another(spark, tmp_pa
     assert _assert_same_as_per_county(spark, files) == 4
     got = json.loads(_wrapper(P.crawl_clean_merge(spark, files).taiwan))["rows"]
     assert [(r["org_name"], r["in_4_weeks"]) for r in got] == [("a", 3), ("b", 5), ("c", 7), ("d", 0)]
+
+
+def test_clean_rows_emit_the_declared_clinic_contract(spark, tmp_path):
+    """clean_rows' output, minus the reader's ingest_order/file_index, has
+    exactly schemas.CLINIC's names and types in order, whether the grid's
+    counts arrive as numbers or as strings."""
+    as_str = lambda r: {k: str(v) if k.endswith("Count") and v is not None else v  # noqa: E731
+                        for k, v in r.items()}
+    want = [(f.name, f.dataType) for f in CLINIC]
+    for sub, conv in (("num", lambda r: r), ("str", as_str)):
+        (tmp_path / sub).mkdir()
+        files = _landing(tmp_path / sub, {"臺北市": ([conv(_grid_row("臺北市", "a", 3))], [])})
+        raw = read_clinic_json(spark, [p for _, y, n in files for p in (y, n)])
+        out = clean_rows(raw)
+        got = [(f.name, f.dataType) for f in out.schema if f.name not in ("ingest_order", "file_index")]
+        assert got == want, sub
+        assert out.count() == 1
 
 
 def test_read_clinic_json_tags_files_in_one_inference_job(spark, tmp_path):

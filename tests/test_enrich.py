@@ -358,6 +358,20 @@ def test_waterfall_with_mocked_real_adapters(spark):
     assert seen == ["opencage"] * len(oc.requests) + ["nominatim"] * len(nm.requests)
 
 
+def test_upsert_cache_drops_null_queries_and_keeps_columns(spark):
+    """A null query can never be probed, so the merge drops it from both
+    sides; the merged cache keeps CACHE_SCHEMA's column order."""
+    def entry(q, formatted):
+        return {"query": q, "lat": 1.0, "lng": 1.0, "confidence": 1, "formatted": formatted,
+                "components": {}, "source": "opencage", "approx": None}
+
+    old = spark.createDataFrame([entry("q1", "old"), entry(None, "old-null")], E.CACHE_SCHEMA)
+    new = spark.createDataFrame([entry(None, "new-null")], E.CACHE_SCHEMA)
+    merged = E.upsert_cache(old, new)
+    assert merged.columns == E.CACHE_SCHEMA.fieldNames()
+    assert [(r.query, r.formatted) for r in merged.collect()] == [("q1", "old")]
+
+
 def test_waterfall_reexecution_is_idempotent(spark):
     """SURVEY §7 hard-parts promise (retry safety): a failed batch is
     re-run, re-running the waterfall on the SAME rows. The waterfall must

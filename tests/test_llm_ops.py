@@ -203,7 +203,7 @@ def test_kmeans_ivf_recall_floor_and_balance(spark):
     emb = load_table(spark, SF, "embeddings")
     queries = list(range(8))
     exact = sim.cosine_topk(emb, queries, k=10).collect()
-    cents = sim.kmeans_centroids(emb, n_centroids=16, n_iters=3)
+    cents = sim.kmeans_centroids_exact(emb, n_centroids=16, n_iters=3)
     approx = sim.ivf_topk(emb, queries, k=10, n_probe=4, centroids_df=cents).collect()
     exn, apn = defaultdict(set), defaultdict(set)
     for r in exact:
@@ -215,8 +215,9 @@ def test_kmeans_ivf_recall_floor_and_balance(spark):
 
 
 def test_kmeans_improves_objective(spark):
-    """Lloyd's iterations must not worsen the spherical k-means objective
-    (mean max-cosine of vectors to their centroid)."""
+    """Lloyd's iterations (squared distance on the integer grid) must not
+    worsen the objective IVF search ranks cells by: the mean max-cosine of
+    vectors to their centroid."""
     from pyspark.sql import functions as F
 
     emb = load_table(spark, SF, "embeddings")
@@ -234,15 +235,15 @@ def test_kmeans_improves_objective(spark):
             s.groupBy("rid").agg(F.max("c").alias("mc")).agg(F.avg("mc")).first()[0]
         )
 
-    seed = sim.kmeans_centroids(emb, n_centroids=16, n_iters=0)
-    trained = sim.kmeans_centroids(emb, n_centroids=16, n_iters=3)
+    seed = sim.kmeans_centroids_exact(emb, n_centroids=16, n_iters=0)
+    trained = sim.kmeans_centroids_exact(emb, n_centroids=16, n_iters=3)
     assert objective(trained) >= objective(seed) - 1e-9
 
 
 def test_kmeans_deterministic(spark):
     emb = load_table(spark, SF, "embeddings")
-    a = sim.kmeans_centroids(emb, n_centroids=8, n_iters=2).collect()
-    b = sim.kmeans_centroids(emb, n_centroids=8, n_iters=2).collect()
+    a = sim.kmeans_centroids_exact(emb, n_centroids=8, n_iters=2).collect()
+    b = sim.kmeans_centroids_exact(emb, n_centroids=8, n_iters=2).collect()
     ka = sorted((r["__cid"], tuple(r["__cv"])) for r in a)
     kb = sorted((r["__cid"], tuple(r["__cv"])) for r in b)
     assert ka == kb

@@ -8,22 +8,20 @@ no data scan) and asserts the physical types the engine is written
 against, failing with a pointed message when the environment drifts.
 
 A failure here means: the driver regenerated testdata with new physical
-types. Fix at the normalization boundaries, not per-plan:
-  - batch:  counsel_data_pipeline_spark/io/sources.load_table
-  - stream: counsel_data_pipeline_spark/streaming/windows.stream_events
-then update EXPECTED below to pin the new reality.
+types. Fix at the one normalization boundary, not per-plan:
+counsel_data_pipeline_spark/io/sources.load_table (streams read its
+normalized rows, staged by plans/streaming_live.event_ranges), then update
+EXPECTED in io/schema_canary.py to pin the new reality.
 """
 
 from __future__ import annotations
 
 import os
 
-import pyarrow.parquet as pq
 import pytest
 
-from counsel_data_pipeline_spark.io.schema_canary import EXPECTED, TS_VARIANTS, check_dir
+from counsel_data_pipeline_spark.io.schema_canary import EXPECTED, check_dir
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
 # The driver regenerates every scale factor together; pin them all so a
 # partial regeneration (or a per-sf encoding difference) is caught too.
 ALL_SF_DIRS = ("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
@@ -39,18 +37,6 @@ def test_testdata_physical_schema(table: str, sf_dir: str) -> None:
         pytest.skip(f"testdata missing: {path}")
     mine = [p for p in check_dir(sf_dir) if p.startswith(f"{table}.")]
     assert mine == [], "TESTDATA DRIFT:\n" + "\n".join(mine)
-
-
-def test_stream_events_sniffer_recognizes_current_footer() -> None:
-    """The streaming source declares its schema from the footer sniffer;
-    this asserts the sniffer classifies TODAY's events.parquet (a new
-    unclassifiable variant should fail here, not mid-stream)."""
-    from counsel_data_pipeline_spark.streaming.windows import _events_ts_physical
-
-    path = os.path.join(SF_DIR, "events.parquet")
-    if not os.path.exists(path):
-        pytest.skip(f"testdata missing: {path}")
-    assert _events_ts_physical(path) in {"nanos_as_long", "timestamp", "timestamp_ntz"}
 
 
 @pytest.mark.parametrize("sf_dir", ALL_SF_DIRS)

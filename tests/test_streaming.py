@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from counsel_data_pipeline_spark.catalog import all_queries
 from counsel_data_pipeline_spark.io.sources import load_table
+from counsel_data_pipeline_spark.plans.streaming_live import event_ranges
 from counsel_data_pipeline_spark.streaming import windows as sw
 from counsel_data_pipeline_spark.streaming.microbatch import (
     read_batches,
@@ -20,14 +21,21 @@ from counsel_data_pipeline_spark.streaming.microbatch import (
 )
 
 SF = "/root/testdata/sf0.001"
+EVENTS = "event_id bigint, user_id bigint, ts timestamp, event_type string, value double"
 
 
 def _rows(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
+def _events(spark):
+    """sf0.001 events as a stream: load_table's rows staged as ascending
+    (ts, event_id)-range micro-batch files, one file per trigger."""
+    return read_batches(spark, EVENTS, event_ranges(spark, SF))
+
+
 def test_stream_tumbling_equals_batch(spark):
-    stream = sw.stream_events(spark, SF)
+    stream = _events(spark)
     assert stream.isStreaming
     result = run_available_now(sw.tumbling_hourly(stream))
 
@@ -37,7 +45,7 @@ def test_stream_tumbling_equals_batch(spark):
 
 
 def test_stream_session_windows(spark):
-    stream = sw.stream_events(spark, SF)
+    stream = _events(spark)
     result = run_available_now(sw.session_windows_30m(stream))
     rows = result.collect()
     assert len(rows) > 0
@@ -54,18 +62,17 @@ def test_stream_session_windows(spark):
 
 def test_stateful_first_seen_dedup_matches_batch(spark):
     from counsel_data_pipeline_spark.ops.dedup import first_wins
-    from counsel_data_pipeline_spark.streaming import stateful, windows
+    from counsel_data_pipeline_spark.streaming import stateful
 
-    sf = "/root/testdata/sf0.001"
     stream = stateful.first_seen_filter(
-        windows.stream_events(spark, sf), key_cols=["user_id", "event_type"]
+        _events(spark), key_cols=["user_id", "event_type"]
     )
     got = run_available_now(stream, "append")
     got_rows = {
         (r.user_id, r.event_type): r.event_id for r in got.collect()
     }
 
-    batch = load_table(spark, sf, "events")
+    batch = load_table(spark, SF, "events")
     exp = first_wins(batch, ["user_id", "event_type"], ["ts", "event_id"])
     exp_rows = {(r.user_id, r.event_type): r.event_id for r in exp.collect()}
 
@@ -75,7 +82,7 @@ def test_stateful_first_seen_dedup_matches_batch(spark):
 
 def test_stream_sliding_equals_batch(spark):
     batch = all_queries()["events_sliding_6h_daily"].fn(spark, SF)
-    stream = sw.sliding_6h_daily(sw.stream_events(spark, SF))
+    stream = sw.sliding_6h_daily(_events(spark))
     got = _rows(run_available_now(stream), ["win_start", "n_events", "sum_value"])
     exp = _rows(batch, ["win_start", "n_events", "sum_value"])
     assert got == exp and len(got) > 50
@@ -90,7 +97,7 @@ def test_stream_static_join_matches_batch(spark):
         .distinct()
         .withColumn("tier", F.when(F.col("user_id") % 3 == 0, "gold").otherwise("std"))
     )
-    stream = sw.stream_events(spark, SF)
+    stream = _events(spark)
     cols = ["hour_start", "tier", "n_events"]
     got = _rows(
         run_available_now(sw.stream_static_enriched_hourly(stream, user_dim)), cols
@@ -109,7 +116,7 @@ def test_stream_dedup_within_watermark_removes_replays(spark, tmp_path):
     events.write.mode("append").parquet(dup_dir)  # replay: every row twice
 
     schema = "event_id bigint, ts timestamp, user_id bigint, event_type string, value double, props string"
-    stream = spark.readStream.schema(schema).parquet(dup_dir)
+    stream = read_batches(spark, schema, dup_dir)
     deduped = run_available_now(sw.stream_dedup_within_watermark(stream), "append")
     assert deduped.count() == events.count()
     assert deduped.select("event_id").distinct().count() == events.count()
@@ -125,7 +132,7 @@ def test_stream_stream_join_matches_batch(spark):
             df.filter(F.col("event_type") == "purchase"),
         )
 
-    s = sw.stream_events(spark, SF)
+    s = _events(spark)
     got_df = run_available_now(
         sw.stream_stream_click_purchase_join(*split(s)), "append"
     )

@@ -14,8 +14,8 @@ SF = "/root/testdata/sf0.001"
 # NOT the driver parquet's physical schema: the stream below reads the
 # split files this test writes ITSELF from load_table's normalized output
 # (session-TZ TIMESTAMP), so the declared type is stable regardless of
-# driver testdata regenerations — no footer sniffing needed here. Streams
-# over the raw driver files must go through streaming.windows.stream_events.
+# driver testdata regenerations. No stream reads the raw driver files:
+# load_table is the only reader that knows events.ts's physical variants.
 EVENTS_SCHEMA = "event_id bigint, ts timestamp, user_id bigint, event_type string, value double, props string"
 
 

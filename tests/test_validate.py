@@ -6,6 +6,7 @@ Golden anchor: the reference's published dataset passes all three gates
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from counsel_data_pipeline_spark.ops import validate as V
@@ -84,6 +85,18 @@ def test_check_total_variants():
 
     no_total = V.check_total({"rows": [{}]}, fix=True)
     assert no_total.ok and no_total.fixed["total"] == 1
+
+
+def test_check_total_shapes_follow_extract_rows():
+    """check_total reads rows with the one wrapper-shape parser: the first
+    of rows/data/clinics holding a list wins, and a document without a row
+    list raises ValueError."""
+    doc = {"total": 2, "rows": "not a list", "data": [{}, {}], "clinics": [{}]}
+    assert V.check_total(doc).actual == 2
+    assert V.check_total({"total": 1, "rows": [{}], "data": [{}, {}]}).actual == 1
+    for bad in ({"total": 0}, {"rows": None}, "rows", None, 3):
+        with pytest.raises(ValueError):
+            V.check_total(bad)
 
 
 def test_check_total_matches_reference_artifact():
