@@ -6,7 +6,9 @@ One pass, no options: warm up the session, time each catalog query tagged
 ``bench=True`` best-of-2 (plan + execute through the noop sink, with
 ``spark.catalog.clearCache()`` between runs), time the ``bench-write``
 section, write the full record to bench_last_detail.json and print one
-compact JSON line on stdout.
+compact JSON line on stdout. The record also carries, per query and run,
+the codegen classes compiled and the milliseconds spent compiling them,
+read between runs.
 
 This script keeps its one-line stdout contract; it does not decide
 whether a change is faster. That is perfbench/run.py's job: it runs
@@ -97,6 +99,18 @@ def time_noop(spark, fn, sf_dir: str) -> float:
         return round(time.time() - t0, 3)
     finally:
         spark.catalog.clearCache()
+
+
+def codegen_totals(spark) -> tuple[int, float]:
+    """Classes compiled by whole-stage/expression codegen in this JVM so
+    far, and the milliseconds spent compiling them. Two py4j reads:
+    callers take them around a timed run, never inside it."""
+    jvm = spark._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen \
+        .CodeGenerator.compileTime()
+    return compiles, nanos / 1e6
 
 
 def headline_line(
@@ -209,6 +223,10 @@ def main(argv: list[str] | None = None) -> None:
 
     per_query: dict[str, float] = {}
     first_run: dict[str, float] = {}
+    # per query, per run: classes compiled and compile milliseconds (a
+    # warm run that still compiles pays Janino on every execution)
+    compiles: dict[str, list[int]] = {}
+    compile_ms: dict[str, list[float]] = {}
     errors: dict[str, str] = {}
     t_all = time.time()
     for name, q in queries.items():
@@ -224,12 +242,17 @@ def main(argv: list[str] | None = None) -> None:
             # the r4 bench produced NOTHING because a single query threw
             # at plan time. A query whose first run succeeded and whose
             # second run raised stays in per_query AND errors.
+            n0, ms0 = codegen_totals(spark)
             try:
                 times.append(time_noop(spark, q.fn, sf_dir))
             except Exception as exc:  # noqa: BLE001 — record and keep benching
                 errors[name] = f"{type(exc).__name__}: {exc}"[:500]
                 print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
                 break
+            finally:
+                n1, ms1 = codegen_totals(spark)
+                compiles.setdefault(name, []).append(n1 - n0)
+                compile_ms.setdefault(name, []).append(round(ms1 - ms0, 1))
         if times:
             per_query[name] = min(times)
             first_run[name] = times[0]
@@ -277,6 +300,8 @@ def main(argv: list[str] | None = None) -> None:
         # (~2x the total since every query runs twice)
         "first_run": first_run,
         "wall_sec": wall,
+        "codegen_compiles": compiles,
+        "codegen_compile_ms": compile_ms,
         "write_queries": write_queries,
         "floor_ratio": {
             n: round(t / floors[n], 3)

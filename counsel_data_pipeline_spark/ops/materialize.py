@@ -173,3 +173,17 @@ def pin(df: DataFrame, *, eager: bool = True, loop: bool = False) -> DataFrame:
         _ensure_checkpoint_dir(df)
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def release(df: DataFrame) -> None:
+    """Drop the stored blocks behind a frame :func:`pin` returned, once
+    nothing reads it any more (a loop state superseded by the next eager
+    pin). A checkpointed pin is a scan of its checkpoint RDD, which
+    ``DataFrame.unpersist`` does not see; left alone its blocks stay in
+    the block manager until the JVM happens to collect the frame. A
+    reliable checkpoint's files are not touched."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+    else:
+        df.unpersist()

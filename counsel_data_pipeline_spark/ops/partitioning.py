@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import math
 import os
 from urllib.parse import unquote, urlparse
 
@@ -29,40 +28,69 @@ def _byte_string(s: str) -> int:
     return int(s)
 
 
+# Logical operators that keep their child's partitioning: above only
+# these, the scan's input splits ARE the frame's partitions.
+_NARROW = frozenset(
+    {"Project", "Filter", "SubqueryAlias", "Generate", "Sample", "ResolvedHint"}
+)
+
+
+def _scan_on_top(df: DataFrame) -> bool:
+    """True when only narrow operators sit between ``df`` and its leaf.
+    An aggregate, join, window, sort, limit, union or repartition
+    (``coalesce`` included) above the scan decides the partition count
+    itself, whatever the scan's files say."""
+    node = df._jdf.queryExecution().analyzed()
+    while node.children().size():
+        if node.nodeName() not in _NARROW:
+            return False
+        node = node.children().head()
+    return True
+
+
 def _estimated_scan_partitions(df: DataFrame) -> int | None:
     """Estimate how many input partitions ``df``'s file scan yields,
     from the scan's file sizes and the session's split-packing confs —
-    mirroring FilePartition.maxSplitBytes: splits are
-    ``min(maxPartitionBytes, max(openCostInBytes, bytesPerCore))`` and
-    each file is charged ``openCostInBytes`` when packed.
+    mirroring FilePartition: splits are ``maxSplitBytes =
+    min(maxPartitionBytes, max(openCostInBytes, bytesPerCore))`` long,
+    and the splits, largest first, are packed into partitions that close
+    before ``maxSplitBytes`` would be exceeded, each split charged
+    ``openCostInBytes`` once packed.
 
-    Returns None when the estimate is unavailable: no file sources in
-    the plan (in-memory test frames), or files whose size cannot be
-    stat'ed locally (remote object-store URIs). Capped at the file count
-    when any input is non-splittable (one 1 GB ``.json.gz`` is one task,
-    not eight). Driver-side cost is one py4j listing call over the
-    scan's already-cached FileIndex — unlike
+    Returns None when the estimate is unavailable: an operator that is
+    not narrow above the scan (``_scan_on_top``), no file sources in
+    the plan (in-memory test frames), files whose size cannot be stat'ed
+    locally (remote object-store URIs), or a ``maxPartitionNum`` cap
+    (Spark repacks past it). A non-splittable input (one 1 GB
+    ``.json.gz`` is one task, not eight) is a single split. Driver-side
+    cost is a walk of the analyzed plan and one py4j listing call over
+    the scan's already-cached FileIndex — unlike
     ``df.rdd.getNumPartitions()`` it never converts the plan to a
     Python RDD (which forced a full physical planning pass per call and
     spoiled the executed-plan cache)."""
+    if not _scan_on_top(df):
+        return None
     try:
         files = df.inputFiles()
     except Exception:
         return None
     if not files:
         return None
-    sizes, unsplittable = [], False
+    sizes = []
     for uri in files:
         parsed = urlparse(uri)
         if parsed.scheme not in ("", "file"):
             return None
         path = unquote(parsed.path)
-        unsplittable |= path.lower().endswith(_UNSPLITTABLE_EXT)
         try:
-            sizes.append(os.path.getsize(path))
+            size = os.path.getsize(path)
         except OSError:
             return None
-    conf = df.sparkSession.conf
+        sizes.append((size, path.lower().endswith(_UNSPLITTABLE_EXT)))
+    spark = df.sparkSession
+    conf = spark.conf
+    if conf.get("spark.sql.files.maxPartitionNum", None) is not None:
+        return None
     try:
         max_pb = _byte_string(
             conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20))
@@ -72,12 +100,27 @@ def _estimated_scan_partitions(df: DataFrame) -> int | None:
         )
     except ValueError:
         return None
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    total = sum(sizes) + len(sizes) * open_cost
-    bytes_per_core = total / max(cores, 1)
-    max_split = min(max_pb, max(open_cost, int(bytes_per_core)))
-    est = max(1, math.ceil(total / max(max_split, 1)))
-    return min(est, len(files)) if unsplittable else est
+    min_parts = int(
+        conf.get("spark.sql.files.minPartitionNum", None)
+        or conf.get("spark.sql.leafNodeDefaultParallelism", None)
+        or spark.sparkContext.defaultParallelism
+    )
+    total = sum(size for size, _ in sizes) + len(sizes) * open_cost
+    max_split = min(max_pb, max(open_cost, total // max(min_parts, 1)))
+    splits = []
+    for size, unsplittable in sizes:
+        if unsplittable or size <= max_split:
+            splits.append(size)
+        else:
+            splits.extend(
+                min(max_split, size - off) for off in range(0, size, max_split)
+            )
+    parts, current = 1, 0
+    for split in sorted(splits, reverse=True):
+        if current and current + split > max_split:
+            parts, current = parts + 1, 0
+        current += split + open_cost
+    return parts
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -96,7 +139,9 @@ def spread(df: DataFrame) -> DataFrame:
     physical planning pass on the driver per invocation (~10 ms each at
     plan-build time, a needless driver round-trip at scale). Inputs the
     estimator cannot size (in-memory test frames, non-local URIs it
-    cannot stat) keep the r16 RDD-partition check unchanged — the
+    cannot stat, and frames whose partitions an operator above the scan
+    decides — a ``groupBy(...).coalesce(1)`` still lists the scan's
+    files but has one partition) keep the r16 RDD-partition check — the
     decision there must stay exact (a blanket repartition would insert
     a corpus-wide shuffle of the text at real scale; a blanket no-op
     would serialize the local test shapes the helper exists for).

@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from counsel_data_pipeline_spark.ops.materialize import pin
+from counsel_data_pipeline_spark.ops.materialize import pin, release
 
 
 def as_double_array(c: Column) -> Column:
@@ -346,8 +346,10 @@ def kmeans_centroids_exact(
     Plan shape per iteration: one broadcast of the tiny centroid table
     against the persisted integer corpus (the corpus never shuffles), one
     map-side-combined hash aggregate over cells; ``localCheckpoint``
-    truncates lineage. Cells that lose all members drop out
-    (``n_centroids`` is an upper bound).
+    truncates lineage, so each superseded iterate and, at the end, the
+    persisted corpus are released: a call leaves one pinned frame, the
+    result. Cells that lose all members drop out (``n_centroids`` is an
+    upper bound).
 
     Returns (__cid, __cv, __cn) ready for ``ivf_topk(centroids_df=...)``
     — ``__cv`` is the integer centroid divided back to double (exact IEEE
@@ -389,9 +391,13 @@ def kmeans_centroids_exact(
         new_c6 = F.array(
             *[F.expr(f"div(sum(__v6[{d_}]), count(*))") for d_ in range(dim)]
         )
-        cents = pin(
+        prev, cents = cents, pin(
             assigned.groupBy("__cid").agg(new_c6.alias("__c6")), loop=True
         )
+        release(prev)
+    # the last pin is eager and truncates lineage: nothing downstream
+    # reads the integer corpus any more
+    emb6.unpersist()
     if return_grid:
         return cents
     return cents.select(

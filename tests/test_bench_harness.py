@@ -15,7 +15,9 @@ def test_bench_records_error_and_keeps_going(spark, monkeypatch, tmp_path):
     import bench
 
     def good(sp, sf_dir):
-        return sp.range(5).selectExpr("id", "id * 2 AS v")
+        # literals are inlined into the generated class: this one is new
+        # to the session, so its first run compiles
+        return sp.range(5).selectExpr("id", "id * 7919 + 104729 AS v")
 
     def broken(sp, sf_dir):
         raise RuntimeError("forced failure for the harness test")
@@ -63,6 +65,22 @@ def test_bench_records_error_and_keeps_going(spark, monkeypatch, tmp_path):
     # first run timed, second run raised: reported in queries AND errors,
     # so a best-of-1 number is never mistaken for a clean best-of-2
     assert "forced second-run failure" in d["errors"]["d_second_run_fails"]
+    assert "codegen_compiles" not in d  # the stdout line is unchanged
+
+    # codegen work per query and run lands in the detail record only:
+    # every attempted run gets an entry, failed ones included
+    detail = json.loads((tmp_path / "bench_last_detail.json").read_text())
+    runs = {"a_good_query": 2, "b_broken_query": 1, "c_good_query": 2,
+            "d_second_run_fails": 2}
+    for field in ("codegen_compiles", "codegen_compile_ms"):
+        assert {n: len(v) for n, v in detail[field].items()} == runs, field
+        assert all(x >= 0 for v in detail[field].values() for x in v), field
+    # the cold run compiles the new class, the warm run reuses it, and so
+    # does every later query with the same plan
+    assert detail["codegen_compiles"]["a_good_query"][0] > 0
+    assert detail["codegen_compile_ms"]["a_good_query"][0] > 0
+    assert detail["codegen_compiles"]["a_good_query"][1] == 0
+    assert detail["codegen_compiles"]["c_good_query"] == [0, 0]
 
 
 def test_headline_stdout_line_fits_driver_capture_tail():

@@ -249,6 +249,21 @@ def test_kmeans_deterministic(spark):
     assert ka == kb
 
 
+def test_kmeans_leaves_only_its_result_pinned(spark):
+    """The trainer persists its integer corpus and pins every iterate;
+    once the last iterate is pinned only that result may stay stored.
+    Each call used to leave the corpus and the superseded iterates
+    behind for the JVM garbage collector, if it ever ran."""
+    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    stored = spark.sparkContext._jsc.getPersistentRDDs
+
+    before = set(stored().keySet())
+    for _ in range(3):
+        sim.kmeans_centroids_exact(emb, n_centroids=8, n_iters=2).collect()
+    added = set(stored().keySet()) - before
+    assert len(added) <= 3, sorted(added)
+
+
 def test_near_dup_lsh_scale_path_recall_and_no_broadcast(spark):
     """Above the size gate the near-dup candidate generator must be the
     banded-LSH bucket self-join: no BroadcastExchange of the corpus

@@ -100,6 +100,42 @@ def test_codegen_everywhere(spark):
         assert _has_codegen(_plan(spark, name, execute=True)), name
 
 
+# perfbench's tpch_olap workload
+TPCH_OLAP = (
+    "tpch_q1_pricing_summary", "tpch_q3_shipping_priority",
+    "tpch_q5_local_supplier_volume", "tpch_q6_forecast_revenue",
+    "tpch_q7_volume_shipping", "tpch_q9_product_type_profit",
+    "tpch_q10_returned_customers", "tpch_q18_large_volume",
+    "tpch_q21_blocking_supplier", "tpch_q22_sales_opportunity",
+)
+
+
+def test_warm_tpch_pass_compiles_no_class(spark):
+    """A warm pass reuses every generated class. One tpch_olap pass
+    generates ~140 distinct classes; with Spark's default 100-entry
+    codegen cache the LRU evicts each before its next use, so every
+    pass recompiled all of them through Janino (141 compiles a pass at
+    sf0.001). The session factory sizes the cache to hold them."""
+    sf = "/root/testdata/sf0.001"
+    qs = all_queries()
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+
+    def compiled(*frames) -> int:
+        before = compiles.getCount()
+        for df in frames:
+            df.write.format("noop").mode("overwrite").save()
+        return compiles.getCount() - before
+
+    def one_pass() -> int:
+        return compiled(*(qs[name].fn(spark, sf) for name in TPCH_OLAP))
+
+    one_pass()  # cold, unless an earlier test already ran these plans
+    assert one_pass() == 0
+    # the counter is live: a literal new to the session is a new class
+    assert compiled(spark.range(3).selectExpr("id * 15485863 + 32452843")) > 0
+
+
 def test_sketch_builds_bound_shuffle_by_sketch_size(spark):
     """CMS/Bloom shuffles move counters, not keys: the aggregate output is
     depth×width (or m/32) rows regardless of input size, and the explode

@@ -21,7 +21,8 @@ refactor silently reintroduces the removed shape:
    never from ``df.rdd`` (a full physical-planning round-trip per
    call). The pins drive both decision branches through the estimator
    by moving the split-packing confs, and pin the estimator's direct
-   outputs.
+   outputs: it equals the scan's partition count on plain scans and
+   abstains when an operator above the scan decides the count.
 """
 
 import gzip
@@ -177,3 +178,34 @@ def test_spread_estimator_branches(spark, tmp_path):
     want_repartition = local.rdd.getNumPartitions() < target
     got = "RoundRobinPartitioning" in _physical(spread(local))
     assert got == want_repartition
+
+
+def test_spread_estimator_abstains_above_a_shuffle(spark):
+    """``inputFiles()`` still lists the scan's files above an aggregate,
+    so the estimator used to size a ``groupBy(...).coalesce(1)`` frame
+    from lineitem's file (4 partitions on 4 cores at sf0.1) while the
+    frame has ONE partition: spread() then left the per-row work on a
+    single task. It abstains, and spread() takes the exact count."""
+    from counsel_data_pipeline_spark.io.sources import load_table
+
+    li = load_table(spark, "/root/testdata/sf0.1", "lineitem")
+    one = li.groupBy("l_orderkey").agg(F.count("*").alias("n")).coalesce(1)
+    assert _estimated_scan_partitions(one) is None
+    assert one.rdd.getNumPartitions() == 1
+    assert "RoundRobinPartitioning" in _physical(spread(one))
+    # narrow operators above the scan keep the estimate
+    narrow = li.select("l_orderkey", "l_quantity").filter(F.col("l_quantity") > 1)
+    assert _estimated_scan_partitions(narrow) == li.rdd.getNumPartitions()
+
+
+def test_spread_estimator_matches_plain_scans(spark):
+    """On plain scans the estimate is the scan's partition count: every
+    testdata table is one partition at sf0.001 and sf0.01 (the estimator
+    used to say 2), and sf0.1 lineitem is 3 on 4 cores (it said 4)."""
+    from counsel_data_pipeline_spark.io.sources import load_table
+
+    for sf in ("sf0.001", "sf0.01", "sf0.1"):
+        for table in ("lineitem", "orders", "documents", "embeddings", "events"):
+            df = load_table(spark, f"/root/testdata/{sf}", table)
+            got = (sf, table, _estimated_scan_partitions(df))
+            assert got == (sf, table, df.rdd.getNumPartitions())
